@@ -6,28 +6,32 @@ the contract here is *global sorted rank* — deterministic and
 order-insensitive (SURVEY.md §7.4 hard part 5).
 
 The naive Spark spelling, ``row_number().over(Window.orderBy(keys))``, is a
-single-partition exchange: every distinct key funnels through ONE task. Fine
-for a dozen databases; a scale-killer for millions of query fingerprints.
+single-partition exchange: every key funnels through ONE task. Fine for a
+dozen databases; a scale-killer for millions of query fingerprints or a
+log window's lines.
 
-``dense_index`` instead computes the same sorted rank as a two-level rank:
+One kernel, ``ranked_rows``, computes the same sorted rank as a two-level
+rank over rows whose key is unique:
 
-  1. range-partition the distinct keys (equal keys co-locate; partition i's
-     keys all sort before partition i+1's);
+  1. range-partition the rows (partition i's keys all sort before
+     partition i+1's);
   2. local ``row_number`` *within* each range partition — parallel;
   3. per-partition counts -> per-partition starting offsets via a tiny
      self-join over at most ``num_parts`` rows (no single-partition window,
-     no driver collect, fully lazy);
-  4. idx = offset + local rank - 1.
+     no driver collect);
+  4. idx = offset + local rank - 1, guarded to int32.
 
 The result is identical to the global window for any partition boundaries —
 PROVIDED the rank and count branches observe the *same* boundaries. Exchange
 reuse usually guarantees that, but it is not a correctness primitive: with a
 cached relation upstream (core/pinned.py) plus AQE, the two branches were
 observed to re-sample different range boundaries, silently producing
-duplicate/missing idx values. The range-partitioned keys are therefore
-materialized once via ``localCheckpoint`` (JVM-side, small — dim keys only)
-so both branches read one physical partitioning; consistency no longer
-depends on plan-identity heuristics. The plan contains no
+duplicate/missing idx values. The range-partitioned rows are therefore
+materialized once via an eager ``localCheckpoint`` so both branches read one
+physical partitioning. That checkpoint runs at DataFrame-construction time.
+
+``dense_index`` is the dimension form: the distinct keys of a relation
+passed through ``ranked_rows``. The plan contains no
 ``Exchange SinglePartition`` (pinned by tests/test_dense_dim.py).
 """
 
@@ -65,31 +69,19 @@ def ranked_rows(
     num_parts: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Append ``idx_name`` = each row's 0-based global sorted rank over
-    ``key_cols`` to EVERY row of ``df`` — the full-relation twin of
-    ``dense_index`` for relations whose key_cols are UNIQUE per row (a
-    global line number over log lines, not a dimension domain).
-
-    Because every key occurs exactly once, ``dense_index``'s
-    distinct-keys pass computes the identity and the rank join-back
-    reattaches each row to itself — both pure overhead (r12 optimization
-    find: the distinct ran TWICE per call, once for the range
-    partitioner's sample pass and once for the checkpoint, plus a full
-    join-back exchange in the consuming fact). Here the ROWS themselves
-    are range-partitioned once (same two-level rank: local row_number +
-    per-partition offsets, so no single-partition funnel), materialized
-    via ``localCheckpoint`` so the rank and count branches observe one
-    physical partitioning (the same consistency argument as
-    dense_index's docstring).
+    ``key_cols`` to EVERY row of ``df``; key_cols must be UNIQUE per row
+    (a global line number over log lines, or a distinct dimension domain).
 
     Returns ``(ranged, ranked)``: ``ranged`` is the materialized
     range-partitioned relation WITHOUT the rank column — consumers that
-    only need the rows (classification joins, association windows,
-    dimension builds) read it instead of re-deriving the staged subtree —
-    and ``ranked`` adds ``idx_name``. Value-identical to
-    ``df.join(dense_index(df, key_cols, idx_name), key_cols)`` under the
-    caller-owned uniqueness contract."""
+    only need the rows (association windows, dimension builds) read it
+    instead of re-deriving the staged subtree — and ``ranked`` adds
+    ``idx_name``."""
     if num_parts is None:
         num_parts = df.sparkSession.sparkContext.defaultParallelism
+    # NULLS LAST explicitly: Spark's default ascending order is nulls-first
+    # while DuckDB's row_number ORDER BY (every oracle) is nulls-last; a
+    # nullable key would silently rank differently without the pin.
     order = [F.col(c).asc_nulls_last() for c in key_cols]
     ranged = (
         df.repartitionByRange(num_parts, *order)
@@ -104,10 +96,8 @@ def ranked_rows(
     )
     counts = ranged.groupBy("_pid").agg(F.count("*").alias("_cnt"))
     rank = F.col("_off") + F.col("_lrn") - 1
-    # int32 guard (r13 ADVICE fix): unlike dense_index — whose int32 spans
-    # only DISTINCT dim keys — this ranks every input row, so past 2^31
-    # rows the cast would silently wrap into negative/duplicate refs. The
-    # guard is one row-local comparison; out-of-range raises instead.
+    # past 2^31 rows the int cast would silently wrap into negative or
+    # duplicate refs; the guard is one row-local comparison
     guarded = F.when(rank <= F.lit(2147483647), rank).otherwise(
         F.raise_error(F.lit("ranked_rows: rank exceeds int32 range"))
     )
@@ -128,28 +118,5 @@ def dense_index(
     """Distinct ``key_cols`` of ``df`` with a dense int32 ``idx_name`` column
     equal to each key's 0-based global sorted rank."""
     keys = df.select(*key_cols).distinct()
-    # NULLS LAST explicitly: Spark's default ascending order is nulls-first
-    # while DuckDB's row_number ORDER BY (every oracle) is nulls-last; a
-    # nullable dim key would silently rank differently without the pin.
-    order = [F.col(c).asc_nulls_last() for c in key_cols]
-    # materialized once: both consumers below MUST see the same (_pid, key)
-    # assignment; see module docstring. Dim key sets are O(distinct keys),
-    # orders of magnitude smaller than facts, so the checkpoint is cheap and
-    # its storage is reclaimed when the RDD is garbage-collected.
-    ranged = (
-        keys.repartitionByRange(num_parts, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    local = ranged.withColumn(
-        "_lrn",
-        F.row_number()
-        .over(Window.partitionBy("_pid").orderBy(*order))
-        .cast("long"),
-    )
-    counts = ranged.groupBy("_pid").agg(F.count("*").alias("_cnt"))
-    return (
-        local.join(F.broadcast(_offsets_of(counts)), "_pid")
-        .withColumn(idx_name, (F.col("_off") + F.col("_lrn") - 1).cast("int"))
-        .select(*key_cols, idx_name)
-    )
+    _, ranked = ranked_rows(keys, key_cols, idx_name, num_parts)
+    return ranked.select(*key_cols, idx_name)

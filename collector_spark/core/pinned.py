@@ -27,19 +27,7 @@ def pinned(
 ) -> DataFrame:
     """Return the pinned relation `name`, building + persisting on first
     use for the currently-prepared input dir."""
-    from collector_spark import registry
-
-    input_key = registry.active_dir(spark)
-    key = (id(spark), name)
-    cached = _CACHE.get(key)
-    if cached is not None:
-        if cached[0] == input_key:
-            return cached[1]
-        cached[1].unpersist()
-        del _CACHE[key]
-    df = build().persist()
-    _CACHE[key] = (input_key, df)
-    return df
+    return _pin(spark, name, lambda: build().persist())
 
 
 def pinned_interpreted(
@@ -49,13 +37,38 @@ def pinned_interpreted(
     exceeds the JVM's 64 KB method limit (the ~115-branch rule-sample CASE
     in log_raw, the query-sample render + fingerprint fusion): build with
     whole-stage codegen DISABLED and materialize eagerly inside that
-    window, so the render never attempts the doomed compile. Previously
-    Spark logged ``ERROR CodeGenerator: Failed to compile`` and fell back
-    to interpreted execution anyway — results were identical, but the
-    error lines masked real codegen regressions in every sweep log (r11
-    verdict item 4). Consumers read the persisted relation with codegen on
-    as usual; only the one-time render runs interpreted, and it skips the
-    failed-compile attempt the fallback used to pay."""
+    window, so the render never attempts the doomed compile. Otherwise
+    Spark logs ``ERROR CodeGenerator: Failed to compile`` and falls back
+    to interpreted execution anyway — results are identical, but the
+    error lines mask real codegen regressions in every sweep log.
+    Consumers read the persisted relation with codegen on as usual; only
+    the one-time render runs interpreted."""
+
+    def render() -> DataFrame:
+        # whole-stage off alone is not enough: Spark then compiles the giant
+        # projection via GenerateUnsafeProjection, which hits the same 64 KB
+        # janino wall before falling back — NO_CODEGEN skips straight to the
+        # interpreted projection for this one render.
+        prev_ws = spark.conf.get("spark.sql.codegen.wholeStage", "true")
+        prev_fm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        try:
+            df = build().persist()
+            df.count()  # fill the cache while codegen is off
+        finally:
+            spark.conf.set("spark.sql.codegen.wholeStage", prev_ws)
+            spark.conf.set("spark.sql.codegen.factoryMode", prev_fm)
+        return df
+
+    return _pin(spark, name, render)
+
+
+def _pin(
+    spark: SparkSession, name: str, render: Callable[[], DataFrame]
+) -> DataFrame:
+    """The one cache path: reuse the entry for the active input dir, else
+    unpersist the stale copy and store ``render()``'s persisted relation."""
     from collector_spark import registry
 
     input_key = registry.active_dir(spark)
@@ -66,19 +79,6 @@ def pinned_interpreted(
             return cached[1]
         cached[1].unpersist()
         del _CACHE[key]
-    # whole-stage off alone is not enough: Spark then compiles the giant
-    # projection via GenerateUnsafeProjection, which hits the same 64 KB
-    # janino wall before falling back — NO_CODEGEN skips straight to the
-    # interpreted projection for this one render.
-    prev_ws = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    prev_fm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try:
-        df = build().persist()
-        df.count()  # fill the cache while codegen is off
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_ws)
-        spark.conf.set("spark.sql.codegen.factoryMode", prev_fm)
+    df = render()
     _CACHE[key] = (input_key, df)
     return df

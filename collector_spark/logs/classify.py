@@ -66,7 +66,10 @@ _CHUNK = 16
 # interpreted fallback on tr_syslog_classify during this round's
 # verification), while these bounded layers each stay well under it. The
 # control-char separators never occur in postgres log text (the parse.py
-# assumption, same corpus).
+# assumption, same corpus). A line that does carry one (a stitched
+# continuation line can) splits into extra parts; such a line is
+# rewritten again with its tail dropped, and if a SEP still sits inside
+# a capture it raises instead of shifting the split (classify_wide).
 _RSEP = "\x01"
 # marks "the matched rule HAS a text group": an absent group must yield
 # NULL detail_text while a present-but-unmatched alternate yields '' —
@@ -106,11 +109,17 @@ def _rule_id_expr() -> Column:
     return F.coalesce(*chunks)
 
 
+def _repl(r: Rule) -> str:
+    num = f"${r.num_group}" if r.num_group else ""
+    txt = f"{_RTXT}${r.text_group}" if r.text_group else ""
+    return f"{num}{_RSEP}{txt}{_RSEP}"
+
+
 def _rewrite_expr(rid: Column) -> Column:
     """Pass 2: ONE regexp_replace of the matched rule (selected by cheap
-    int equality on the pass-1 index) emitting `num<SEP><TXT>text<SEP>` —
-    only rules that declare a detail group appear; all other (and
-    unmatched) lines yield NULL."""
+    int equality on the pass-1 index) emitting `num<SEP><TXT>text<SEP>`
+    followed by the unmatched tail of the line — only rules that declare
+    a detail group appear; all other (and unmatched) lines yield NULL."""
     detailed = [
         (i, r) for i, r in enumerate(RULES) if r.num_group or r.text_group
     ]
@@ -118,11 +127,8 @@ def _rewrite_expr(rid: Column) -> Column:
     for start in range(0, len(detailed), _CHUNK):
         sub: Column = F.lit(None).cast("string")
         for i, r in reversed(detailed[start : start + _CHUNK]):
-            num = f"${r.num_group}" if r.num_group else ""
-            txt = f"{_RTXT}${r.text_group}" if r.text_group else ""
-            repl = f"{num}{_RSEP}{txt}{_RSEP}"
             sub = F.when(
-                rid == i, F.regexp_replace(F.col("content"), r.regex, repl)
+                rid == i, F.regexp_replace(F.col("content"), r.regex, _repl(r))
             ).otherwise(sub)
         chunks.append(sub)
     return F.coalesce(*chunks)
@@ -167,46 +173,61 @@ def _classified_cols(rid: Column, parts: Column) -> tuple[Column, Column, Column
     return cls, num, txt
 
 
-def classify_df(stitched: DataFrame) -> DataFrame:
-    """Classify a stitched-lines frame — batch OR streaming (stateless
-    projection, so the same plan runs on the sessionizer's stream output).
+def _tailless_rewrite(rid: Column) -> Column:
+    """Pass 2's rewrite with the unmatched tail dropped: the `(?s:.*)`
+    suffix consumes it without changing which match the rule's pattern
+    picks, so only a SEP inside a capture can add split parts. The rule's
+    pattern is looked up per row (one regexp_replace, compiled whenever
+    the pattern changes), which suits the rare lines it runs on."""
+    pats = F.array(*[F.lit(f"(?:{r.regex})(?s:.*)") for r in RULES])
+    repls = F.array(*[F.lit(_repl(r)) for r in RULES])
+    return F.regexp_replace(F.col("content"), F.get(pats, rid), F.get(repls, rid))
 
-    Three-layer projection on purpose (see the pass notes above): `_rid`
-    and `_parts` are each referenced several times downstream, so
-    CollapseProject keeps the layers separate — each pass evaluates ONCE
-    per line in its own codegen method."""
-    lines = stitched.filter(F.col("log_level").isin(*PRIMARY_LEVELS))
-    ridded = lines.select(
-        "pid", "seq", "log_level", "content", _rule_id_expr().alias("_rid")
-    )
-    staged = ridded.select(
-        "pid",
-        "seq",
-        "log_level",
-        F.col("_rid"),
-        F.split(_rewrite_expr(F.col("_rid")), _RSEP).alias("_parts"),
-    )
-    cls, num, txt = _classified_cols(F.col("_rid"), F.col("_parts"))
-    return staged.select(
-        "pid",
-        "seq",
-        "log_level",
-        cls.alias("classification"),
-        num.alias("detail_num"),
-        txt.alias("detail_text"),
+
+def classify_df(stitched: DataFrame) -> DataFrame:
+    """Classify a stitched-lines frame — batch OR streaming: the primary
+    lines of ``classify_wide`` projected to (pid, seq, log_level,
+    classification, detail_num, detail_text)."""
+    primaries = stitched.filter(F.col("log_level").isin(*PRIMARY_LEVELS))
+    return classify_wide(primaries).select(
+        "pid", "seq", "log_level", "classification", "detail_num", "detail_text"
     )
 
 
 def classify_wide(lines: DataFrame) -> DataFrame:
-    """``classify_df``'s rule chain as ADDED columns over a stitched-shaped
-    frame, keeping every input column: primaries get the classification +
-    detail columns, secondaries carry NULLs (the fact's left-join
-    semantics, computed inline). Stateless, so the full log lifecycle can
-    compose into ONE projection on the sessionizer's stream output."""
+    """The rule chain as ADDED columns over a stitched-shaped frame,
+    keeping every input column: primaries get the classification + detail
+    columns, secondaries carry NULLs. Stateless, so the same projection
+    runs on batch lines and on the sessionizer's stream output.
+
+    Separate projection layers on purpose (see the pass notes above):
+    `_rid` and `_parts` are each referenced several times downstream, so
+    CollapseProject keeps the layers separate — each pass evaluates ONCE
+    per line in its own codegen method, and the tail-dropping re-split
+    runs only on the rare line whose first split has extra parts."""
     is_primary = F.col("log_level").isin(*PRIMARY_LEVELS)
     ridded = lines.withColumn("_rid", F.when(is_primary, _rule_id_expr()))
     staged = ridded.withColumn(
         "_parts", F.split(_rewrite_expr(F.col("_rid")), _RSEP)
+    )
+    # extra parts mean a SEP somewhere in the line (rare): split it again
+    # without its tail; parts still extra then mean a SEP inside a capture,
+    # which would shift the details, so raise instead (a <TXT> byte inside
+    # a capture is harmless, only the first one is read)
+    extra = F.size("_parts") > 3
+    staged = staged.withColumn(
+        "_parts",
+        F.when(extra, F.split(_tailless_rewrite(F.col("_rid")), _RSEP)).otherwise(
+            F.col("_parts")
+        ),
+    ).withColumn(
+        "_parts",
+        F.when(
+            extra,
+            F.raise_error(
+                F.lit("classify: a detail capture contains the reserved separator byte")
+            ),
+        ).otherwise(F.col("_parts")),
     )
     cls, num, txt = _classified_cols(F.col("_rid"), F.col("_parts"))
     return (

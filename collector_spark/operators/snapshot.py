@@ -26,13 +26,6 @@ from collector_spark.operators.statements import (
 )
 
 
-def _dense_dim(df: DataFrame, key_cols: list[str], idx_name: str) -> DataFrame:
-    """J10 dense-idx builder: sorted distinct keys -> 0-based int32 idx,
-    assigned by the scalable two-level rank (core/dims.py) — no
-    single-partition window even for the fingerprint dim."""
-    return dense_index(df, key_cols, idx_name)
-
-
 # The rollup feeds three dimension builds plus the fact join (~7 lineage
 # evaluations of the full statement pipeline otherwise); it is tiny (one
 # row per fingerprint group), so pin it via the shared input-keyed cache
@@ -45,9 +38,9 @@ def assemble_statement_fact(spark: SparkSession) -> DataFrame:
     """The star-schema statement fact: rollup rows with dense dimension
     idx for database, role, and query."""
     rollup = _persisted_rollup(spark)
-    db_dim = _dense_dim(rollup, ["database_oid"], "database_idx")
-    role_dim = _dense_dim(rollup, ["user_oid"], "role_idx")
-    query_dim = _dense_dim(rollup, ["fingerprint"], "query_idx")
+    db_dim = dense_index(rollup, ["database_oid"], "database_idx")
+    role_dim = dense_index(rollup, ["user_oid"], "role_idx")
+    query_dim = dense_index(rollup, ["fingerprint"], "query_idx")
     return (
         rollup.join(F.broadcast(db_dim), on="database_oid")
         .join(F.broadcast(role_dim), on="user_oid")
@@ -163,7 +156,7 @@ def snapshot_plan_fact(spark: SparkSession) -> DataFrame:
     from collector_spark.operators.plans import PLAN_TYPES
 
     rollup = _persisted_rollup(spark)
-    query_dim = _dense_dim(rollup, ["fingerprint"], "query_idx")
+    query_dim = dense_index(rollup, ["fingerprint"], "query_idx")
 
     # key -> fingerprint map straight off the PINNED rollup's contributing
     # query_ids (A2 collects them per group): no re-render of the text
@@ -221,7 +214,7 @@ def snapshot_plan_fact(spark: SparkSession) -> DataFrame:
         .filter(F.col("rn") == 1)
     )
 
-    plan_dim = _dense_dim(winners, ["query_idx", "plan_id"], "plan_idx")
+    plan_dim = dense_index(winners, ["query_idx", "plan_id"], "plan_idx")
     enum_expr = F.when(F.col("plan_type") == "estimate", F.lit(1)).when(
         F.col("plan_type") == "actual", F.lit(2)
     ).otherwise(F.lit(0))

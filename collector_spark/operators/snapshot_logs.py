@@ -9,12 +9,16 @@ plus QuerySample rows (transformPostgresQuerySamples: dense query ref from
 the fingerprint upsert, role/database refs, runtime, explain presence).
 output/compact.go:63-74 wraps both in the compact-snapshot envelope.
 
-Spark shape: ONE parse+stitch subtree feeds every stage (classification,
-association, detail serialization) through the frame-parametric operators;
-dense indices come from core/dims.dense_index — the global-sorted-rank
-contract every fact here uses (the reference's per-snapshot insertion order
-is meaningless under distribution; a compact snapshot is seconds of log
-lines, so the two-level rank is bounded work per snapshot window).
+Spark shape: ONE fact assembly, ``log_pipeline_fact``, serves every log
+fact. It takes line-staged rows (parse -> stitch -> collected_at join,
+then ``classify_wide``'s added columns) and builds the dense
+log_line_ref, the secondary->primary association, the role/database refs
+and the details JSON. ``snapshot_log_fact`` feeds it the unredacted
+lines, ``log_pipeline_full`` the redacted ones, and the streaming
+lifecycle (st_log_pipeline_full) the stream's output. Dense indices follow
+the core/dims global-sorted-rank contract (the reference's per-snapshot
+insertion order is meaningless under distribution; a compact snapshot is
+seconds of log lines, so the two-level rank is bounded work per window).
 """
 
 from __future__ import annotations
@@ -25,106 +29,25 @@ from pyspark.sql import functions as F
 from collector_spark.core.dims import dense_index, ranked_rows
 from collector_spark.functions.fingerprint import fingerprint, oracle_fingerprint
 from collector_spark.logs.associate import associate_df, oracle_associate
-from collector_spark.logs.classify import classify_df, oracle_classify
+from collector_spark.logs.classify import classify_wide, oracle_classify
 from collector_spark.logs.parse import oracle_parse_lines, parse_lines
 from collector_spark.logs.stitch import oracle_stitch_lines, stitch_df
 
 
 def snapshot_log_fact(spark: SparkSession) -> DataFrame:
     """One LogLineInformation-shaped row per stitched log line (primaries
-    AND associated secondaries), flattened with dense references:
+    AND associated secondaries) with unredacted content — see
+    ``log_pipeline_fact`` for the columns."""
+    return log_pipeline_fact(classify_wide(_staged_lines(spark)))
 
-      log_line_ref         0-based rank over (occurred_at, pid, seq) —
-                           the compact frame's dense line index
-      parent_log_line_ref  the associated primary's ref for secondary
-                           lines (-1 + has_parent otherwise), the
-                           ParentUuid link of transform/logs.go:155-157
-      role_idx/database_idx  dense refs over the prefix-parsed user/db
-                           (upsertRoleReference/upsertDatabaseReference)
-      classification + details_json  the U7 rule outcome for primaries
-                           (transformSystemLogLine at logs.go:139-163;
-                           secondaries carry no classification)
-    """
+
+def _staged_lines(spark: SparkSession) -> DataFrame:
+    """parse -> stitch, with each stitched line's collected_at joined back
+    (the (pid, seq) join is 1:1)."""
     parsed = parse_lines(spark)
-    stitched = stitch_df(parsed)
-    ts = parsed.select("pid", "seq", "collected_at")
-    # `ranged` is the shared materialization (r13, ADVICE fix): the staged
-    # join's ONLY consumer is ranked_rows, which range-partitions and
-    # eagerly localCheckpoints the full relation — every downstream branch
-    # (the ref ranking, classification, association, role/database dims)
-    # reads that one checkpointed copy, so a second lazy checkpoint here
-    # would just store every staged log line twice. classify/associate read
-    # the joined frame rather than `stitched` because the (pid, seq) ts
-    # join is 1:1 (value-identical frames for both).
-    #
-    # log_line_ref via ranked_rows, not dense_index (r12 optimization):
-    # (collected_at, pid, seq) is unique per stitched line, so the dim
-    # machinery's distinct pass (executed twice — range-sample + checkpoint)
-    # and the rank join-back exchange were pure overhead.
-    staged = stitched.join(ts, ["pid", "seq"])
-    ranged, lines = ranked_rows(
-        staged, ["collected_at", "pid", "seq"], "log_line_ref"
+    return stitch_df(parsed).join(
+        parsed.select("pid", "seq", "collected_at"), ["pid", "seq"]
     )
-
-    cls = classify_df(ranged)
-    payload = F.struct(
-        F.col("detail_num").cast("decimal(18,3)").cast("string").alias("detail_num"),
-        F.col("detail_text"),
-    )
-    cls = cls.select(
-        "pid",
-        "seq",
-        "classification",
-        F.when(
-            F.col("detail_num").isNotNull() | F.col("detail_text").isNotNull(),
-            F.to_json(payload, {"ignoreNullFields": "false"}),
-        ).alias("details_json"),
-    )
-
-    assoc = associate_df(ranged).select(
-        "pid", F.col("secondary_seq").alias("seq"), F.col("primary_seq").alias("_pseq")
-    )
-    prim_ref = lines.select(
-        F.col("pid").alias("_ppid"),
-        F.col("seq").alias("_pseq2"),
-        F.col("log_line_ref").alias("parent_log_line_ref"),
-    )
-    roles = dense_index(
-        ranged.filter(F.col("username").isNotNull()), ["username"], "role_idx"
-    )
-    dbs = dense_index(
-        ranged.filter(F.col("database").isNotNull()), ["database"], "database_idx"
-    )
-
-    fact = (
-        lines.join(cls, ["pid", "seq"], "left")
-        .join(assoc, ["pid", "seq"], "left")
-        .join(
-            prim_ref,
-            (F.col("pid") == F.col("_ppid")) & (F.col("_pseq") == F.col("_pseq2")),
-            "left",
-        )
-        .join(F.broadcast(roles), ["username"], "left")
-        .join(F.broadcast(dbs), ["database"], "left")
-    )
-    return fact.select(
-        "log_line_ref",
-        F.col("collected_at").alias("occurred_at"),
-        F.col("pid").alias("backend_pid"),
-        "log_level",
-        "classification",
-        "content",
-        F.col("line_count").cast("long").alias("line_count"),
-        F.col("parent_log_line_ref").isNotNull().alias("has_parent"),
-        F.coalesce("parent_log_line_ref", F.lit(-1)).cast("int").alias(
-            "parent_log_line_ref"
-        ),
-        F.col("role_idx").isNotNull().alias("has_role_idx"),
-        F.coalesce("role_idx", F.lit(-1)).cast("int").alias("role_idx"),
-        F.col("database_idx").isNotNull().alias("has_database_idx"),
-        F.coalesce("database_idx", F.lit(-1)).cast("int").alias("database_idx"),
-        "details_json",
-    ).orderBy("log_line_ref")
 
 
 # the codegen-path redaction the full pipeline applies to secondary
@@ -144,18 +67,24 @@ def redact_content_expr() -> F.Column:
 def log_pipeline_fact(wide: DataFrame) -> DataFrame:
     """The per-snapshot transform stage over fully line-staged rows
     (pid, seq, collected_at, log_level, username, database, application,
-    content[already redacted], line_count, classification, detail_num,
-    detail_text): dense log_line_ref, secondary->primary association,
-    role/database refs, details JSON — output/transform/logs.go:17-163
-    run over a closed window. Shared verbatim by the batch composition
-    (log_pipeline_full) and the streaming lifecycle's run-to-completion
-    output (st_log_pipeline_full).
+    content, line_count, classification, detail_num, detail_text) —
+    output/transform/logs.go:17-163 run over a closed window:
 
-    log_line_ref via ranked_rows (r12 optimization, same reasoning as
-    snapshot_log_fact): the line key is unique, so the dim machinery's
-    double distinct pass and rank join-back are elided; the association
-    window and the role/database dims read the one materialized
-    range-partitioned relation."""
+      log_line_ref         0-based rank over (collected_at, pid, seq) —
+                           the compact frame's dense line index
+      parent_log_line_ref  the associated primary's ref for secondary
+                           lines (-1 + has_parent otherwise), the
+                           ParentUuid link of transform/logs.go:155-157
+      role_idx/database_idx  dense refs over the prefix-parsed user/db
+                           (upsertRoleReference/upsertDatabaseReference)
+      classification + details_json  the U7 rule outcome for primaries
+                           (transformSystemLogLine at logs.go:139-163;
+                           secondaries carry no classification)
+
+    log_line_ref via ranked_rows: the line key is unique, so no distinct
+    pass or rank join-back is needed. Its eager localCheckpoint is the one
+    materialization of the staged subtree; the association window and the
+    role/database dims read that range-partitioned copy."""
     ranged, lines = ranked_rows(
         wide, ["collected_at", "pid", "seq"], "log_line_ref"
     )
@@ -219,19 +148,8 @@ def log_pipeline_full(spark: SparkSession) -> DataFrame:
     content, then the redaction splice — the reference's ordering:
     analyze marks, replace splices) is the same stateless projection the
     streaming twin runs inside its query."""
-    from collector_spark.logs.classify import classify_wide
-
-    parsed = parse_lines(spark)
-    stitched = stitch_df(parsed)
-    lines = stitched.join(parsed.select("pid", "seq", "collected_at"), ["pid", "seq"])
-    wide = classify_wide(lines).withColumn("content", redact_content_expr())
-    # the parse -> stitch -> classify -> redact subtree materializes ONCE —
-    # inside log_pipeline_fact's ranked_rows, whose eager localCheckpoint
-    # of the range-partitioned rows is the copy all five assembly branches
-    # read (r12: 13.6 -> 9.3 s vs re-deriving per branch; r13 ADVICE fix:
-    # the former lazy checkpoint HERE was a redundant second copy of every
-    # line, since ranked_rows is the sole consumer).
-    return log_pipeline_fact(wide)
+    wide = classify_wide(_staged_lines(spark))
+    return log_pipeline_fact(wide.withColumn("content", redact_content_expr()))
 
 
 def oracle_log_pipeline_full() -> str:

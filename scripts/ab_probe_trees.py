@@ -62,7 +62,7 @@ def main() -> int:
         )
     sides: dict[str, dict[str, list[float]]] = {}
     for r in runs:
-        if r["rc"] == 0:
+        if r["rc"] == 0 and r.get("queries"):
             acc = sides.setdefault(r["tree"], {})
             for q, times in r["queries"].items():
                 acc.setdefault(q, []).extend(times)

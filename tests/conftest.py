@@ -43,13 +43,16 @@ def duck():
 
 
 # Tests measured >=8 s each on the reference box (r13, pytest --durations on
-# the full 678-test suite: these 55 account for ~1070 s of the ~2320 s
+# the full 678-test suite: 55 such tests account for ~1070 s of the ~2320 s
 # total). The driver's verify step runs plain `pytest tests/` under a wall
 # budget the full suite exceeds (r12: truncated at ~64%% with zero failures),
 # so pytest.ini deselects the `slow` marker by default; `pytest -m ""` runs
 # everything (done before each round close). The deselected oracle pins stay
 # guarded by the driver's own 50-query rotating window and the round-close
-# full run.
+# full run. The log_pipeline_full oracle is NOT listed although it is slow:
+# one fact assembly now serves log_pipeline_full, snapshot_log_fact and
+# st_log_pipeline_full, and the default run keeps it as their composed-fact
+# oracle.
 SLOW_TESTS = {
     "test_ann_ivfpq.py::test_ivfpq_candidates_subset_of_probed_lists",
     "test_connected_components.py::test_star_matches_union_find[0]",
@@ -72,7 +75,6 @@ SLOW_TESTS = {
     "test_r12_additions.py::test_dedup_index_roundtrip_screens_identically",
     "test_r12_additions.py::test_neardup_screen_serves_identically_from_index",
     "test_r12_additions.py::test_stream_pipeline_schema_equals_batch",
-    "test_registry_oracle.py::test_query_matches_oracle[log_pipeline_full]",
     "test_registry_oracle.py::test_query_matches_oracle[ml_ann_recall]",
     "test_registry_oracle.py::test_query_matches_oracle[ml_cluster_keep_best]",
     "test_registry_oracle.py::test_query_matches_oracle[ml_cluster_size_histogram]",

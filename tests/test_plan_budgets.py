@@ -325,6 +325,9 @@ BUDGETS = {
     # assembly runs on the stream's checkpointed output, same shape)
     "log_pipeline_full": (29, ["BroadcastHashJoin"]),
     "st_log_pipeline_full": (29, ["BroadcastHashJoin"]),
+    # the unredacted fact runs the same assembly (log_pipeline_fact over
+    # classify_wide), so it shares log_pipeline_full's ceiling
+    "snapshot_log_fact": (29, ["BroadcastHashJoin"]),
     # full-outer doc_id join of two corpus-scaled snapshot projections:
     # correctly NOT broadcast (measured 6, SortMergeJoin)
     "ml_corpus_diff": (8, ["SortMergeJoin"]),

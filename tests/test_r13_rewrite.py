@@ -87,6 +87,66 @@ def test_secondary_levels_are_filtered(spark):
     assert classify_df(df).count() == 0
 
 
+def _stitched(spark, primary: str, continuation: str):
+    """One primary line plus one continuation line, stitched exactly as
+    the log pipeline stitches them (content joined with a newline)."""
+    from collector_spark.logs.stitch import stitch_df
+
+    parsed = spark.createDataFrame(
+        [(1, 0, "ERROR", primary), (1, 1, "UNKNOWN", continuation)],
+        "pid int, seq long, log_level string, content string",
+    )
+    for c in ("username", "database", "application"):
+        parsed = parsed.withColumn(c, F.lit(None).cast("string"))
+    return stitch_df(parsed)
+
+
+def test_separator_byte_in_detail_capture_raises(spark):
+    """A \\x01 that a continuation line carries into a detail capture
+    (`[^"]+` spans the stitch newline) would shift the rewrite-then-split
+    and yield a truncated detail_text silently; it must raise instead."""
+    from collector_spark.logs.classify import classify_df
+
+    bad = _stitched(spark, 'relation "orders', '\x01archive" does not exist')
+    with pytest.raises(Exception, match="reserved separator"):
+        classify_df(bad).collect()
+
+
+def test_separator_bytes_outside_captures_classify_as_two_pass(spark):
+    """Separator bytes that cannot shift the split classify exactly as the
+    two-pass reference: \\x03 inside a capture, \\x01/\\x03 in a stitched
+    continuation past the match, and lines without detail groups."""
+    from collector_spark.logs.classify import classify_df
+
+    bodies = [
+        'temporary file: path "/tmp/a\x03b", size 5',
+        "duration: 1.5 ms  statement: select 1\n\x01 and \x03 more",
+        'relation "orders" does not exist\n\x01 at \x03',
+        "canceling statement due to statement timeout\x01",
+        "no rule matches this \x03 line",
+    ]
+    df = spark.createDataFrame(
+        [(1, i, "LOG", b) for i, b in enumerate(bodies)],
+        "pid int, seq long, log_level string, content string",
+    )
+    got = {r["seq"]: r for r in classify_df(df).collect()}
+    for i, body in enumerate(bodies):
+        row = got[i]
+        assert (
+            row["classification"],
+            row["detail_num"],
+            row["detail_text"],
+        ) == _expected(body), repr(body)
+
+    cont = _stitched(spark, "duration: 2 ms  statement: select 1", "\x01\x03")
+    row = classify_df(cont).collect()[0]
+    assert (row["classification"], row["detail_num"], row["detail_text"]) == (
+        "STATEMENT_DURATION",
+        2.0,
+        "select 1",
+    )
+
+
 def test_rewrite_groups_equals_regexp_extract(spark):
     """The generic helper vs per-group regexp_extract, same JVM regex, on
     the 53-group autovacuum vector across all six version variants."""
