@@ -3,11 +3,18 @@
 The reference classifies ~110 event types with prefix-bucketed regex
 dispatch (logs/analyze.go:33-1183, dispatch at :2078-2213): a literal
 prefix check short-circuits before the (expensive) regex runs. Here the
-rule table is DATA, and both the Spark when-chain and the DuckDB oracle
+rule table is DATA, and both the Spark rule chain and the DuckDB oracle
 CASE are generated from it — same pattern, two renderings, zero drift.
 Everything stays JVM-side (startswith + regexp_extract inside whole-stage
 codegen); Catalyst will not reorder regex cost itself (SURVEY.md §4), so
 the prefix short-circuit is encoded explicitly in each branch.
+
+The Spark chain is rendered as SQL text once, at import, and each pass
+is parsed JVM-side by one ``F.expr``: building the same ~115-rule tree
+through the Column API cost one py4j round trip per call (~19k, ~2 s per
+build, paid by every batch cycle and stream start). The text nests every
+CASE exactly as ``when(...).otherwise(...)`` does, so the analyzed plan
+is the one the Column API built.
 
 Details are extracted into typed columns (detail_num DOUBLE, detail_text)
 rather than a map so the oracle can compare them value-by-value.
@@ -25,15 +32,6 @@ from collector_spark.logs.stitch import stitch_lines
 PRIMARY_LEVELS = ("LOG", "ERROR", "FATAL", "WARNING", "PANIC", "NOTICE")
 
 
-def _match(rule: Rule) -> Column:
-    # OR over the rule's prefix list (analyze.go attaches several literal
-    # prefixes per rule) — still a cheap short-circuit before the regex
-    pre: Column = F.col("content").startswith(rule.prefixes[0])
-    for p in rule.prefixes[1:]:
-        pre = pre | F.col("content").startswith(p)
-    return pre & F.col("content").rlike(rule.regex)
-
-
 def classify(spark: SparkSession) -> DataFrame:
     return classify_df(stitch_lines(spark))
 
@@ -46,10 +44,10 @@ _CHUNK = 16
 # in each detail chain, and one regexp_extract each for detail_num /
 # detail_text. Now:
 #
-#   pass 1 (_rule_id_expr): the prefix-short-circuited rlike chain —
+#   pass 1 (_rule_id_sql): the prefix-short-circuited rlike chain —
 #     r12's proven codegen shape, additionally first-char-bucketed —
 #     yields the matched rule's global INDEX (one regex evaluation);
-#   pass 2 (_rewrite_expr): keyed on that index with cheap int equality,
+#   pass 2 (_rewrite_sql): keyed on that index with cheap int equality,
 #     ONE regexp_replace rewrites the line into `num<SEP><TXT>text<SEP>`
 #     — both details in one more evaluation (anchored regexes match at
 #     most once, so replace == rewrite-if-match and the unmatched tail
@@ -57,6 +55,9 @@ _CHUNK = 16
 #   pass 3: classification = an array-literal lookup by index; num/txt
 #     come off the split rewrite.
 #
+# Each pass is SQL text generated from RULES and parsed once per build
+# (module docstring), in the nested `ELSE CASE ... END` form the Column
+# API produced, so the plans and their codegen layout are unchanged.
 # Two regex evaluations of the matched rule per line, total, and no
 # merged-class re-checks (the index pins the rule exactly). Each pass is
 # its own projection layer and therefore its own generated doConsume
@@ -67,9 +68,10 @@ _CHUNK = 16
 # verification), while these bounded layers each stay well under it. The
 # control-char separators never occur in postgres log text (the parse.py
 # assumption, same corpus). A line that does carry one (a stitched
-# continuation line can) splits into extra parts; such a line is
-# rewritten again with its tail dropped, and if a SEP still sits inside
-# a capture it raises instead of shifting the split (classify_wide).
+# continuation line can) splits into extra parts; its details then come
+# from one capture rewrite each (_NUM_SQL, _TXT_SQL), which no SEP can
+# shift, so the line classifies correctly instead of failing the batch
+# (a stream would replay it and fail again on every restart).
 _RSEP = "\x01"
 # marks "the matched rule HAS a text group": an absent group must yield
 # NULL detail_text while a present-but-unmatched alternate yields '' —
@@ -82,31 +84,72 @@ assert all(
 )
 
 
-def _rule_id_expr() -> Column:
-    """First-match-wins rule INDEX (int, NULL when no rule matches) — the
-    r12 chain shape (COALESCE of bounded ~16-rule sub-chains; a monolithic
-    115-branch CASE exceeds the codegen method limit) with the branch
-    value a literal int instead of the classification string, plus a
-    first-character gate per sub-chain: rule prefixes are non-empty
-    literals, so a rule can only match lines starting with one of its
-    prefixes' first characters — a line evaluates only its bucket's ~6-30
-    prefix tests instead of all 115 (r12 verdict item 4). First-match-wins
-    is preserved: a line's first char selects exactly the buckets holding
-    every rule that could match it, bucket membership keeps global RULES
-    order, and coalesce takes the first non-null gated sub-chain."""
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal holding exactly ``s``. Spark unescapes
+    backslash sequences inside literals and joins adjacent literals, so
+    the ANSI '' doubling of ``_sql_quote`` would silently drop a quote:
+    escape the backslash first, then the quote."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_array(items) -> str:
+    return f"array({', '.join('NULL' if s is None else _sql_str(s) for s in items)})"
+
+
+def _nested_case(branches: list[tuple[str, str]], null_sql: str) -> str:
+    """`CASE WHEN c1 THEN v1 ELSE CASE WHEN c2 ... ELSE <null> END END`:
+    the nesting the Column API's when(...).otherwise(sub) builds, so the
+    parsed tree is the plan the chain shapes were tuned on (a flat
+    multi-WHEN CASE yields the same rows but a different plan and
+    codegen layout)."""
+    sql = null_sql
+    for cond, val in reversed(branches):
+        sql = f"CASE WHEN {cond} THEN {val} ELSE {sql} END"
+    return sql
+
+
+def _match_sql(r: Rule) -> str:
+    # OR over the rule's prefix list (analyze.go attaches several literal
+    # prefixes per rule) — still a cheap short-circuit before the regex;
+    # parenthesized pairwise so the ORs nest as a left fold (the parser
+    # would balance a bare OR chain)
+    pre = f"startswith(content, {_sql_str(r.prefixes[0])})"
+    for p in r.prefixes[1:]:
+        pre = f"({pre} OR startswith(content, {_sql_str(p)}))"
+    return f"({pre} AND content RLIKE {_sql_str(r.regex)})"
+
+
+_PRIMARY = f"log_level IN ({', '.join(_sql_str(lv) for lv in PRIMARY_LEVELS)})"
+
+
+def _rule_id_sql() -> str:
+    """Pass 1: first-match-wins rule INDEX of a primary line (int, NULL
+    when no rule matches) — the r12 chain shape (COALESCE of bounded
+    ~16-rule sub-chains; a monolithic 115-branch CASE exceeds the codegen
+    method limit) with the branch value a literal int instead of the
+    classification string, plus a first-character gate per sub-chain: rule
+    prefixes are non-empty literals, so a rule can only match lines
+    starting with one of its prefixes' first characters — a line evaluates
+    only its bucket's ~6-30 prefix tests instead of all 115 (r12 verdict
+    item 4). First-match-wins is preserved: a line's first char selects
+    exactly the buckets holding every rule that could match it, bucket
+    membership keeps global RULES order, and coalesce takes the first
+    non-null gated sub-chain."""
     buckets: dict[str, list[int]] = {}
     for i, r in enumerate(RULES):
         for c in sorted({p[0] for p in r.prefixes}):
             buckets.setdefault(c, []).append(i)
-    first = F.substring(F.col("content"), 1, 1)
-    chunks: list[Column] = []
-    for c in sorted(buckets):
-        for start in range(0, len(buckets[c]), _CHUNK):
-            sub: Column = F.lit(None).cast("int")
-            for i in reversed(buckets[c][start : start + _CHUNK]):
-                sub = F.when(_match(RULES[i]), F.lit(i)).otherwise(sub)
-            chunks.append(F.when(first == c, sub))
-    return F.coalesce(*chunks)
+    chunks = [
+        f"CASE WHEN substring(content, 1, 1) = {_sql_str(c)} THEN "
+        + _nested_case(
+            [(_match_sql(RULES[i]), str(i)) for i in ids[start : start + _CHUNK]],
+            "CAST(NULL AS INT)",
+        )
+        + " END"
+        for c, ids in sorted(buckets.items())
+        for start in range(0, len(ids), _CHUNK)
+    ]
+    return f"CASE WHEN {_PRIMARY} THEN coalesce({', '.join(chunks)}) END"
 
 
 def _repl(r: Rule) -> str:
@@ -115,29 +158,80 @@ def _repl(r: Rule) -> str:
     return f"{num}{_RSEP}{txt}{_RSEP}"
 
 
-def _rewrite_expr(rid: Column) -> Column:
+def _rewrite_sql() -> str:
     """Pass 2: ONE regexp_replace of the matched rule (selected by cheap
     int equality on the pass-1 index) emitting `num<SEP><TXT>text<SEP>`
-    followed by the unmatched tail of the line — only rules that declare
-    a detail group appear; all other (and unmatched) lines yield NULL."""
+    followed by the unmatched tail of the line, split on SEP — only rules
+    that declare a detail group appear; all other (and unmatched) lines
+    yield NULL."""
     detailed = [
         (i, r) for i, r in enumerate(RULES) if r.num_group or r.text_group
     ]
-    chunks: list[Column] = []
-    for start in range(0, len(detailed), _CHUNK):
-        sub: Column = F.lit(None).cast("string")
-        for i, r in reversed(detailed[start : start + _CHUNK]):
-            sub = F.when(
-                rid == i, F.regexp_replace(F.col("content"), r.regex, _repl(r))
-            ).otherwise(sub)
-        chunks.append(sub)
-    return F.coalesce(*chunks)
+    chunks = [
+        _nested_case(
+            [
+                (
+                    f"_rid = {i}",
+                    f"regexp_replace(content, {_sql_str(r.regex)}, "
+                    f"{_sql_str(_repl(r))})",
+                )
+                for i, r in detailed[start : start + _CHUNK]
+            ],
+            "CAST(NULL AS STRING)",
+        )
+        for start in range(0, len(detailed), _CHUNK)
+    ]
+    return f"split(coalesce({', '.join(chunks)}), {_sql_str(_RSEP)})"
 
 
-def _class_array() -> Column:
-    # built lazily: column construction needs an active SparkContext, and
-    # this module is imported by the catalog before any session exists
-    return F.array(*[F.lit(r.classification) for r in RULES])
+# the rule's pattern with the unmatched tail consumed: the `(?s:.*)` suffix
+# does not change which match the rule's pattern picks, so a rewrite with
+# it drops the tail. Looked up per row by _rid (one regexp_replace,
+# compiled whenever the pattern changes), which suits the rare lines it
+# runs on.
+_TAILLESS_PATS = _sql_array(f"(?:{r.regex})(?s:.*)" for r in RULES)
+
+
+def _capture_sql(groups: list[int]) -> str:
+    """Capture group ``groups[_rid]`` of the line's rule by itself: the
+    tailless pattern replaces the whole line with that group — exactly
+    regexp_extract's value, '' for a non-participating group — and a rule
+    without the group (0) gets a NULL replacement, hence NULL."""
+    reps = _sql_array(f"${g}" if g else None for g in groups)
+    return (
+        f"regexp_replace(content, get({_TAILLESS_PATS}, _rid), get({reps}, _rid))"
+    )
+
+
+# the passes as SQL text, rendered once from RULES (module docstring)
+_RID_SQL = _rule_id_sql()
+_PARTS_SQL = _rewrite_sql()
+# more than 3 split parts: a SEP somewhere in the line (rare)
+_CLASH = "size(_parts) > 3"
+# pass 3: classification = an array-literal lookup by index; num/txt come
+# off the split rewrite. Value-exact vs the r12 two-pass chains: an
+# unmatched line has NULL rid/parts -> UNCLASSIFIED / NULL / NULL; a rule
+# without num_group wrote '' -> nullif -> NULL (same as a present-but-
+# empty capture, exactly like regexp_extract + nullif); detail_text
+# distinguishes absent group (no flag byte -> NULL) from empty capture
+# (flag byte alone -> ''); a <TXT> byte inside a capture is harmless, only
+# the first one is read. A line with extra parts (a SEP in it, which may
+# shift the split) takes each detail from its own capture rewrite
+# instead, with the same NULL vs '' semantics.
+_CLASS_SQL = (
+    f"CASE WHEN {_PRIMARY} THEN coalesce(get("
+    f"{_sql_array(r.classification for r in RULES)}, _rid), 'UNCLASSIFIED') END"
+)
+_NUM_SQL = (
+    f"CAST(nullif(CASE WHEN {_CLASH} THEN "
+    f"{_capture_sql([r.num_group for r in RULES])} "
+    "ELSE get(_parts, 0) END, '') AS DOUBLE)"
+)
+_TXT_SQL = (
+    f"CASE WHEN {_CLASH} THEN {_capture_sql([r.text_group for r in RULES])} "
+    f"WHEN startswith(get(_parts, 1), {_sql_str(_RTXT)}) "
+    "THEN substring(get(_parts, 1), 2, 2147483647) END"
+)
 
 
 def _rewrite_groups(regex: str, n_groups: int) -> Column:
@@ -156,39 +250,11 @@ def _rewrite_groups(regex: str, n_groups: int) -> Column:
     return F.split(F.regexp_replace(F.col("content"), regex, repl), _RSEP)
 
 
-def _classified_cols(rid: Column, parts: Column) -> tuple[Column, Column, Column]:
-    """(classification, detail_num, detail_text) from the pass-1 index and
-    the split pass-2 rewrite. Value-exact vs the r12 two-pass chains: an
-    unmatched line has NULL rid/parts -> UNCLASSIFIED / NULL / NULL; a
-    rule without num_group wrote '' -> nullif -> NULL (same as a
-    present-but-empty capture, exactly like regexp_extract + nullif);
-    detail_text distinguishes absent group (no flag byte -> NULL) from
-    empty capture (flag byte alone -> '')."""
-    cls = F.coalesce(F.get(_class_array(), rid), F.lit("UNCLASSIFIED"))
-    num = F.nullif(F.get(parts, 0), F.lit("")).cast("double")
-    txtf = F.get(parts, 1)
-    txt = F.when(
-        F.startswith(txtf, F.lit(_RTXT)), F.substring(txtf, 2, 2147483647)
-    )
-    return cls, num, txt
-
-
-def _tailless_rewrite(rid: Column) -> Column:
-    """Pass 2's rewrite with the unmatched tail dropped: the `(?s:.*)`
-    suffix consumes it without changing which match the rule's pattern
-    picks, so only a SEP inside a capture can add split parts. The rule's
-    pattern is looked up per row (one regexp_replace, compiled whenever
-    the pattern changes), which suits the rare lines it runs on."""
-    pats = F.array(*[F.lit(f"(?:{r.regex})(?s:.*)") for r in RULES])
-    repls = F.array(*[F.lit(_repl(r)) for r in RULES])
-    return F.regexp_replace(F.col("content"), F.get(pats, rid), F.get(repls, rid))
-
-
 def classify_df(stitched: DataFrame) -> DataFrame:
     """Classify a stitched-lines frame — batch OR streaming: the primary
     lines of ``classify_wide`` projected to (pid, seq, log_level,
     classification, detail_num, detail_text)."""
-    primaries = stitched.filter(F.col("log_level").isin(*PRIMARY_LEVELS))
+    primaries = stitched.filter(F.expr(_PRIMARY))
     return classify_wide(primaries).select(
         "pid", "seq", "log_level", "classification", "detail_num", "detail_text"
     )
@@ -203,37 +269,14 @@ def classify_wide(lines: DataFrame) -> DataFrame:
     Separate projection layers on purpose (see the pass notes above):
     `_rid` and `_parts` are each referenced several times downstream, so
     CollapseProject keeps the layers separate — each pass evaluates ONCE
-    per line in its own codegen method, and the tail-dropping re-split
-    runs only on the rare line whose first split has extra parts."""
-    is_primary = F.col("log_level").isin(*PRIMARY_LEVELS)
-    ridded = lines.withColumn("_rid", F.when(is_primary, _rule_id_expr()))
-    staged = ridded.withColumn(
-        "_parts", F.split(_rewrite_expr(F.col("_rid")), _RSEP)
-    )
-    # extra parts mean a SEP somewhere in the line (rare): split it again
-    # without its tail; parts still extra then mean a SEP inside a capture,
-    # which would shift the details, so raise instead (a <TXT> byte inside
-    # a capture is harmless, only the first one is read)
-    extra = F.size("_parts") > 3
-    staged = staged.withColumn(
-        "_parts",
-        F.when(extra, F.split(_tailless_rewrite(F.col("_rid")), _RSEP)).otherwise(
-            F.col("_parts")
-        ),
-    ).withColumn(
-        "_parts",
-        F.when(
-            extra,
-            F.raise_error(
-                F.lit("classify: a detail capture contains the reserved separator byte")
-            ),
-        ).otherwise(F.col("_parts")),
-    )
-    cls, num, txt = _classified_cols(F.col("_rid"), F.col("_parts"))
+    per line in its own codegen method, and the capture rewrites run only
+    on the rare line whose split has extra parts."""
     return (
-        staged.withColumn("classification", F.when(is_primary, cls))
-        .withColumn("detail_num", num)
-        .withColumn("detail_text", txt)
+        lines.withColumn("_rid", F.expr(_RID_SQL))
+        .withColumn("_parts", F.expr(_PARTS_SQL))
+        .withColumn("classification", F.expr(_CLASS_SQL))
+        .withColumn("detail_num", F.expr(_NUM_SQL))
+        .withColumn("detail_text", F.expr(_TXT_SQL))
         .drop("_rid", "_parts")
     )
 

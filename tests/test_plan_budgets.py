@@ -32,7 +32,10 @@ def _live_counts(node) -> tuple[int, int]:
     build plan back into the count.) The tree walk is exact: cached build
     plans hang off ``innerChildren`` — print-only — while ``children()``
     stops at the InMemoryTableScan leaf; AQE wrappers resolve to their
-    current plan and query stages to their wrapped plan."""
+    current plan and query stages to their wrapped plan. Subquery plans
+    (scalar / IN subqueries, dynamic pruning) hang off ``subqueries()``
+    rather than ``children()`` and run per query, so they are walked too;
+    a reused subquery or exchange is a leaf and counts once."""
     cls = node.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
         return _live_counts(node.executedPlan())
@@ -46,11 +49,11 @@ def _live_counts(node) -> tuple[int, int]:
             and node.outputPartitioning().toString() == "SinglePartition"
         ):
             n_single = 1
-    children = node.children()
-    for i in range(children.size()):
-        ce, cs = _live_counts(children.apply(i))
-        n_ex += ce
-        n_single += cs
+    for plans in (node.children(), node.subqueries()):
+        for i in range(plans.size()):
+            ce, cs = _live_counts(plans.apply(i))
+            n_ex += ce
+            n_single += cs
     return n_ex, n_single
 
 

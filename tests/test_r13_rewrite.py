@@ -101,15 +101,43 @@ def _stitched(spark, primary: str, continuation: str):
     return stitch_df(parsed)
 
 
-def test_separator_byte_in_detail_capture_raises(spark):
-    """A \\x01 that a continuation line carries into a detail capture
-    (`[^"]+` spans the stitch newline) would shift the rewrite-then-split
-    and yield a truncated detail_text silently; it must raise instead."""
+def test_separator_byte_in_detail_capture_falls_back(spark):
+    """A \\x01 inside a detail capture would shift the rewrite-then-split.
+    The line takes each detail from its own capture rewrite instead, so
+    the row equals the rule's regexp_extract and the batch does not fail
+    (a stream would replay the line and fail on every restart). Covers a
+    continuation line carried into a `[^"]+` capture by the real stitch,
+    and clash lines beside ordinary ones in one frame."""
     from collector_spark.logs.classify import classify_df
 
     bad = _stitched(spark, 'relation "orders', '\x01archive" does not exist')
-    with pytest.raises(Exception, match="reserved separator"):
-        classify_df(bad).collect()
+    (row,) = classify_df(bad).collect()
+    rule = next(r for r in RULES if r.classification == row["classification"])
+    assert rule.text_group
+    want = bad.select(
+        F.regexp_extract("content", rule.regex, rule.text_group).alias("t")
+    ).first()["t"]
+    assert want == "orders\n\x01archive"
+    assert (row["detail_num"], row["detail_text"]) == (None, want)
+
+    bodies = [
+        "duration: 1.5 ms  statement: select \x01 1",
+        'temporary file: path "/tmp/a\x01b\x01c", size 5',
+        "duration: 2 ms  statement: select 2",
+        'relation "a\x01" does not exist',
+    ]
+    df = spark.createDataFrame(
+        [(1, i, "LOG", b) for i, b in enumerate(bodies)],
+        "pid int, seq long, log_level string, content string",
+    )
+    got = {r["seq"]: r for r in classify_df(df).collect()}
+    for i, body in enumerate(bodies):
+        row = got[i]
+        assert (
+            row["classification"],
+            row["detail_num"],
+            row["detail_text"],
+        ) == _expected(body), repr(body)
 
 
 def test_separator_bytes_outside_captures_classify_as_two_pass(spark):
