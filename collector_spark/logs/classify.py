@@ -234,20 +234,33 @@ _TXT_SQL = (
 )
 
 
-def _rewrite_groups(regex: str, n_groups: int) -> Column:
-    """ALL capture groups of an (anchored) regex in ONE evaluation — the
-    shared rewrite-then-split helper (r12 verdict item 9): a single
-    regexp_replace rewrites a matched line into its SEP-joined groups
-    (group i lands at array index i-1), so each former per-group
-    regexp_extract becomes a cheap array index. Non-participating groups
-    render as '' exactly like regexp_extract; the unmatched tail of the
-    line lands after the final SEP (indices >= n_groups, never read). The
+def _rewrite_groups(lines: DataFrame, regex: str, n_groups: int) -> DataFrame:
+    """``lines`` plus ``_g``: ALL capture groups of an (anchored) regex
+    over ``content`` in ONE evaluation — the shared rewrite-then-split
+    helper (r12 verdict item 9): a single regexp_replace rewrites a
+    matched line into its SEP-joined groups (group i lands at array index
+    i-1), so each former per-group regexp_extract becomes a cheap array
+    index. Non-participating groups render as '' exactly like
+    regexp_extract; the unmatched tail of the line lands after the final
+    SEP (index n_groups, never read). A split with more parts means a SEP
+    byte somewhere in the line, possibly inside a capture (a stitched
+    continuation line in a ``[^ ]+`` group), so such a line takes every
+    group from per-group regexp_extract instead. The split is its own
+    projection layer, referenced twice, so it runs once per line. The
     caller's filter must guarantee the regex matches (the extractors all
-    gate on prefix + rlike), and the result column should be materialized
-    in its own projection layer so the rewrite runs once per line."""
+    gate on prefix + rlike)."""
     assert regex.startswith("^"), "rewrite-then-split needs an anchored regex"
     repl = _RSEP.join(f"${i}" for i in range(1, n_groups + 1)) + _RSEP
-    return F.split(F.regexp_replace(F.col("content"), regex, repl), _RSEP)
+    extracts = F.expr(
+        f"transform(sequence(1, {n_groups}), "
+        f"i -> regexp_extract(content, {_sql_str(regex)}, i))"
+    )
+    split = lines.withColumn(
+        "_g", F.split(F.regexp_replace(F.col("content"), regex, repl), _RSEP)
+    )
+    return split.withColumn(
+        "_g", F.when(F.size("_g") > n_groups + 1, extracts).otherwise(F.col("_g"))
+    )
 
 
 def classify_df(stitched: DataFrame) -> DataFrame:
@@ -376,11 +389,7 @@ def autovacuum_details(spark: SparkSession) -> DataFrame:
         F.col("content").startswith("automatic ")
         & F.col("content").rlike(AUTOVACUUM_DETAIL_RE)
     )
-    staged = lines.select(
-        "pid",
-        "seq",
-        _rewrite_groups(AUTOVACUUM_DETAIL_RE, len(_AV_GROUPS)).alias("_g"),
-    )
+    staged = _rewrite_groups(lines, AUTOVACUUM_DETAIL_RE, len(_AV_GROUPS))
     cols: list[Column] = [F.col("pid"), F.col("seq")]
     for gi, name, typ, optional in _AV_GROUPS:
         e = F.get(F.col("_g"), gi - 1)
@@ -527,11 +536,7 @@ def _checkpoint_details_from(stitched: DataFrame) -> DataFrame:
         & F.col("content").rlike(CHECKPOINT_DETAIL_RE)
     )
     # one rewrite evaluation yields all 17 groups (r13; was 17 extracts)
-    staged = lines.select(
-        "pid",
-        "seq",
-        _rewrite_groups(CHECKPOINT_DETAIL_RE, len(_CKPT_GROUPS)).alias("_g"),
-    )
+    staged = _rewrite_groups(lines, CHECKPOINT_DETAIL_RE, len(_CKPT_GROUPS))
     cols: list[Column] = [F.col("pid"), F.col("seq")]
     for gi, name, typ, optional in _CKPT_GROUPS:
         e = F.get(F.col("_g"), gi - 1)
@@ -605,9 +610,7 @@ def _session_details_from(stitched: DataFrame) -> DataFrame:
         & F.col("content").rlike(DISCONNECT_RE)
     )
     # one rewrite evaluation yields all 6 groups (r13; was 6 extracts)
-    staged = lines.select(
-        "pid", "seq", _rewrite_groups(DISCONNECT_RE, 6).alias("_g")
-    )
+    staged = _rewrite_groups(lines, DISCONNECT_RE, 6)
     g = lambda i: F.get(F.col("_g"), i - 1)  # noqa: E731
     secs = (
         g(1).cast("double") * 3600 + g(2).cast("double") * 60 + g(3).cast("double")
@@ -662,7 +665,7 @@ def _lock_details_from(stitched: DataFrame) -> DataFrame:
         F.col("content").startswith("process ") & F.col("content").rlike(LOCK_RE)
     )
     # one rewrite evaluation yields all 5 groups (r13; was ~7 extracts)
-    staged = lines.select("pid", "seq", _rewrite_groups(LOCK_RE, 5).alias("_g"))
+    staged = _rewrite_groups(lines, LOCK_RE, 5)
     g = lambda i: F.get(F.col("_g"), i - 1)  # noqa: E731
     raw_type = g(4)
     mapped = raw_type
@@ -1198,9 +1201,7 @@ def autoanalyze_details(spark: SparkSession) -> DataFrame:
         & F.col("content").rlike(AUTOANALYZE_RE)
     )
     # one rewrite evaluation yields all 14 groups (r13; was ~17 extracts)
-    staged = lines.select(
-        "pid", "seq", _rewrite_groups(AUTOANALYZE_RE, 14).alias("_g")
-    )
+    staged = _rewrite_groups(lines, AUTOANALYZE_RE, 14)
     g = lambda i: F.get(F.col("_g"), i - 1)  # noqa: E731
     opt_d = lambda i: F.nullif(g(i), F.lit("")).cast("double")  # noqa: E731
     opt_l = lambda i: F.nullif(g(i), F.lit("")).cast("long")  # noqa: E731
@@ -1357,11 +1358,7 @@ def _autovacuum_full_from(stitched: DataFrame) -> DataFrame:
     # ONE rewrite evaluation of the 53-group regex per matched line (r13;
     # the former per-reference regexp_extract ran it ~60x per line — every
     # column plus every version-gate re-evaluated the full pattern)
-    staged = lines.select(
-        "pid",
-        "seq",
-        _rewrite_groups(AUTOVACUUM_FULL_RE, len(_AV_FULL_NAMES)).alias("_g"),
-    )
+    staged = _rewrite_groups(lines, AUTOVACUUM_FULL_RE, len(_AV_FULL_NAMES))
 
     def g(name: str) -> Column:
         return F.get(F.col("_g"), _AV_IDX[name] - 1)

@@ -28,6 +28,7 @@ of work is one HTTP POST body (kilobytes), so no partition-skew risk.
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark.fixtures.defs import oracle_query
+from collector_spark.streaming.replay import run_to_completion
 
 # ---------------------------------------------------------------------------
 # RFC5424 syslog (selfhosted/syslog_handler.go)
@@ -778,6 +780,15 @@ ORDER BY line_id
     return oracle_query(body, ["docker_lines"])
 
 
+def _replayed(table: DataFrame, transform) -> DataFrame:
+    """Run ``transform`` to completion over ``table`` delivered through a
+    file source (the stand-in for a receiver's socket or polling loop)."""
+    with tempfile.TemporaryDirectory(prefix="collector_spark_transport_") as src:
+        table.write.mode("overwrite").parquet(src)
+        raw = table.sparkSession.readStream.schema(table.schema).parquet(src)
+        return run_to_completion(transform(raw))
+
+
 def stream_syslog_classified(spark: SparkSession) -> DataFrame:
     """The syslog receiver as a LIVE stream: frames arrive through a file
     source (the test stand-in for the TCP/TLS listener), the RFC5424
@@ -788,44 +799,20 @@ def stream_syslog_classified(spark: SparkSession) -> DataFrame:
 
     Verification runs trigger(availableNow) to completion and must equal
     the batch oracle exactly (same projection, same rows)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from collector_spark.logs.classify import classify_df
 
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_syslog", run_id)
-    src_dir = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    frames = spark.table("syslog_frames")
-    frames.write.mode("overwrite").parquet(src_dir)
+    def classified(raw: DataFrame) -> DataFrame:
+        items = syslog_items_df(raw).filter(F.col("framed"))
+        return classify_df(
+            items.select(
+                F.col("backend_pid").alias("pid"),
+                F.col("frame_id").alias("seq"),
+                F.lit("LOG").alias("log_level"),
+                "content",
+            )
+        )
 
-    raw = spark.readStream.schema(frames.schema).parquet(src_dir)
-    items = syslog_items_df(raw).filter(F.col("framed"))
-    shaped = items.select(
-        F.col("backend_pid").alias("pid"),
-        F.col("frame_id").alias("seq"),
-        F.lit("LOG").alias("log_level"),
-        "content",
-    )
-    qname = f"syslog_stream_{run_id}"
-    q = (
-        classify_df(shaped)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.table(qname).orderBy("pid", "seq")
+    return _replayed(spark.table("syslog_frames"), classified).orderBy("pid", "seq")
 
 
 # ---------------------------------------------------------------------------
@@ -899,35 +886,9 @@ def stream_planetscale_items(spark: SparkSession) -> DataFrame:
     projection runs per micro-batch. availableNow run-to-completion must
     equal the batch operator/oracle exactly — proving the envelope logic
     is streaming-safe (no batch-only constructs)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_ps", run_id)
-    src_dir = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    entries = spark.table("planetscale_entries")
-    entries.write.mode("overwrite").parquet(src_dir)
-
-    raw = spark.readStream.schema(entries.schema).parquet(src_dir)
-    qname = f"ps_stream_{run_id}"
-    q = (
-        _planetscale_items_df(raw)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.table(qname).orderBy("entry_id")
+    return _replayed(
+        spark.table("planetscale_entries"), _planetscale_items_df
+    ).orderBy("entry_id")
 
 
 _SQL_PS_PARSED = """
@@ -1173,35 +1134,9 @@ def stream_tembo_items(spark: SparkSession) -> DataFrame:
     in for the socket and the identical stateless envelope walk runs per
     micro-batch. availableNow run-to-completion must equal the batch
     operator/oracle exactly, proving the frame walk is streaming-safe."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_tembo", run_id)
-    src_dir = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    msgs = spark.table("tembo_ws_messages")
-    msgs.write.mode("overwrite").parquet(src_dir)
-
-    raw = spark.readStream.schema(msgs.schema).parquet(src_dir)
-    qname = f"tembo_stream_{run_id}"
-    q = (
-        _tembo_items_df(raw)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _replayed(spark.table("tembo_ws_messages"), _tembo_items_df).orderBy(
+        "msg_id", "value_idx", "line_idx"
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.table(qname).orderBy("msg_id", "value_idx", "line_idx")
 
 
 def oracle_tembo_items() -> str:

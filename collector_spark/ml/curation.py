@@ -2153,41 +2153,33 @@ ORDER BY merge_rank
 # which keys on the word string (vocab side is the post-aggregation small
 # side — AQE broadcasts it at any realistic vocab size; never forced, a
 # 100 TB crawl's raw vocab can exceed driver memory before length/utf
-# pruning). Production replaces the per-round lineage nesting with a
-# checkpoint of the segmentation per merge round — the same
-# materialization discipline as incremental dedup's canonical union.
+# pruning). The segmentation is checkpointed per merge round
+# (_bpe_tokens_per_word) — the same materialization discipline as
+# incremental dedup's canonical shingles.
 # ---------------------------------------------------------------------------
 
 BPE_ENCODE_ROUNDS = 4
 
 
-def bpe_encode(
-    spark: SparkSession,
-    rounds: int = BPE_ENCODE_ROUNDS,
-    materialize: bool | None = None,
-) -> DataFrame:
-    if materialize is None:
-        # default ON (the cluster shape, same policy as incremental_dedup):
-        # each round's argmax AND the next segmentation both read round
-        # r-1's segmentation, so the unmaterialized lineage doubles per
-        # round — 2^rounds re-derivations of the corpus word count.
-        # Checkpointing the bounded vocab relation per round makes the
-        # plan linear: the corpus is scanned once for the vocab fold and
-        # once for the final doc join, regardless of rounds.
-        materialize = (
-            spark.conf.get("collector_spark.bpe.materialize", "true") == "true"
-        )
-    seg = _bpe_vocab_seg(spark, keep_word=True)
-    if materialize:
-        seg = seg.localCheckpoint(eager=False)
+def _bpe_tokens_per_word(spark: SparkSession, rounds: int) -> DataFrame:
+    """(w, w_tokens): each distinct trainable word's token count after
+    ``rounds`` merges. Each round's argmax AND the next segmentation both
+    read round r-1's segmentation, so an unmaterialized lineage doubles
+    per round — 2^rounds re-derivations of the corpus word count.
+    Checkpointing the bounded vocab relation per round keeps the plan
+    linear: the corpus is scanned once for the vocab fold and once for
+    the caller's final join, regardless of rounds."""
+    seg = _bpe_vocab_seg(spark, keep_word=True).localCheckpoint(eager=False)
     for _ in range(rounds):
         best = _bpe_best(_bpe_pair_counts(seg))
-        seg = _bpe_apply(seg, best)
-        if materialize:
-            seg = seg.localCheckpoint(eager=False)
-    tok_per_word = seg.select(
+        seg = _bpe_apply(seg, best).localCheckpoint(eager=False)
+    return seg.select(
         "w", F.size(F.split(F.trim("seg"), " ")).cast("long").alias("w_tokens")
     )
+
+
+def bpe_encode(spark: SparkSession, rounds: int = BPE_ENCODE_ROUNDS) -> DataFrame:
+    tok_per_word = _bpe_tokens_per_word(spark, rounds)
     words = spark.table("documents").select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
@@ -3831,25 +3823,9 @@ ORDER BY doc_id
 
 
 def tokenizer_fertility(
-    spark: SparkSession,
-    rounds: int = BPE_ENCODE_ROUNDS,
-    materialize: bool | None = None,
+    spark: SparkSession, rounds: int = BPE_ENCODE_ROUNDS
 ) -> DataFrame:
-    if materialize is None:
-        materialize = (
-            spark.conf.get("collector_spark.bpe.materialize", "true") == "true"
-        )
-    seg = _bpe_vocab_seg(spark, keep_word=True)
-    if materialize:
-        seg = seg.localCheckpoint(eager=False)
-    for _ in range(rounds):
-        best = _bpe_best(_bpe_pair_counts(seg))
-        seg = _bpe_apply(seg, best)
-        if materialize:
-            seg = seg.localCheckpoint(eager=False)
-    tok_per_word = seg.select(
-        "w", F.size(F.split(F.trim("seg"), " ")).cast("long").alias("w_tokens")
-    )
+    tok_per_word = _bpe_tokens_per_word(spark, rounds)
     words = spark.table("documents").select(
         "doc_id",
         "source",

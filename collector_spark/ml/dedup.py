@@ -1501,23 +1501,10 @@ def _inc_is_incoming() -> Column:
 def incremental_dedup(
     spark: SparkSession,
     docs: DataFrame | None = None,
-    materialize: bool | None = None,
 ) -> DataFrame:
     docs = spark.table("documents") if docs is None else docs
     existing = docs.filter(~_inc_is_incoming())
     incoming = docs.filter(_inc_is_incoming())
-    if materialize is None:
-        # default ON: the scale-correct shape (one corpus read + one
-        # canonical-batch checkpoint) must be what an unconfigured
-        # production call gets — a wrong-at-scale default is a footgun
-        # (r9 verdict item 5). Since r10 the registered bench/oracle
-        # form is the default too: repeated idle runs put the
-        # checkpointed shape consistently ahead even at fixture scale
-        # (4.8-5.2 s vs 5.9-9.6 s at sf0.1).
-        materialize = (
-            spark.conf.get("collector_spark.incremental.materialize", "true")
-            == "true"
-        )
 
     # exact screen: existing corpus collapses to one row per content hash
     ex_hash = (
@@ -1531,15 +1518,14 @@ def incremental_dedup(
     inc_canon_ids = inc_hashed.groupBy("h").agg(F.min("doc_id").alias("canon_id"))
 
     # near screen: canonical-first signatures per side, cross-side pairs only
-    # `materialize` pins the canonical union once for its three consumers
-    # (band buckets via signatures, both sides of the intersection join,
-    # per-doc sizes), which otherwise each re-derive the exact-canonical
-    # window from the source scan — the unmaterialized plan reads the
-    # corpus 46 times with zero exchange reuse (tests/test_curation_plans
-    # pins both shapes). The DEFAULT is materialize=True (the cluster
-    # shape), and the registered bench/oracle form takes it too — the
-    # checkpointed shape measured consistently faster than recompute
-    # even at fixture scale once re-run idle (r10).
+    # One checkpoint pins the canonical union's shingles for their three
+    # consumers (band buckets via signatures, both sides of the
+    # intersection join, per-doc sizes), which otherwise each re-derive the
+    # exact-canonical window from the source scan — the recompute plan read
+    # the corpus 46 times with zero exchange reuse (tests/test_curation_plans
+    # pins the scan ceiling). The checkpointed shape also measured faster
+    # than recompute at fixture scale once re-run idle (r10: 4.8-5.2 s vs
+    # 5.9-9.6 s at sf0.1).
     # The checkpoint sits AFTER the shingle explode+hash (r12 optimization;
     # it previously sat before): `sh` has ~n_words rows per doc but each is
     # two longs (16 bytes) — FEWER bytes than the doc rows with their full
@@ -1554,9 +1540,7 @@ def incremental_dedup(
         .select("doc_id", "text")
         .unionByName(_exact_canonicals(incoming).select("doc_id", "text"))
     )
-    sh = _shingle_hashes(union_canon)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    sh = _shingle_hashes(union_canon).localCheckpoint(eager=False)
     buckets = _band_buckets(_signatures_from(sh)).withColumn(
         "inc", _inc_is_incoming()
     )

@@ -14,9 +14,13 @@ Scale notes: state is O(distinct hashes) in the state store, keyed and
 shuffled once per microbatch on the 16-byte hash; at 100 TB the same query
 runs with RocksDB state store + watermark-based state TTL if the dedup
 horizon is bounded (dropDuplicatesWithinWatermark is the bounded-horizon
-variant). The verification harness runs trigger(availableNow) to
-completion; production uses trigger(processingTime=...) with an update-mode
-sink feeding the keep/drop decision table.
+variant). Every stream here runs through the streaming harness
+(streaming/replay.py): the input is staged with ``stage_replay`` as an
+arrival log in doc_id order, read one arrival batch per micro-batch, and
+run with ``run_to_completion``; the kill/resume starters scope their state
+width with ``state_partitions``. Production uses
+trigger(processingTime=...) with an update-mode sink feeding the
+keep/drop decision table.
 """
 
 from __future__ import annotations
@@ -24,52 +28,54 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from collector_spark.streaming.replay import (
+    run_to_completion,
+    stage_replay,
+    state_partitions,
+)
+
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-def stream_exact_dedup(spark: SparkSession, n_arrival_batches: int = 8) -> DataFrame:
-    """Run the streaming dedup aggregation to completion over the documents
-    table delivered as ``n_arrival_batches`` arrival-ordered files, and
-    return the final per-hash state (content_hash, canonical_doc_id,
-    group_size) — batch-equal by construction."""
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_docstream")
-    src_dir = os.path.join(base, run_id, "src")
-    ckpt_dir = os.path.join(base, run_id, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-
-    # arrival order = doc_id order (a crawler's append log): range-partition
-    # by doc_id and stagger file mtimes so the file source replays the
-    # batches oldest-first
-    (
-        spark.table("documents")
-        .repartitionByRange(n_arrival_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(src_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base_mtime = os.path.getmtime(src_dir)
-    for i, name in enumerate(parts):
-        p = os.path.join(src_dir, name)
-        os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
-
-    raw = (
+def _doc_reader(spark: SparkSession, src_dir: str) -> DataFrame:
+    """A staged arrival log as a stream, one arrival batch per micro-batch."""
+    return (
         spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)  # one arrival batch per microbatch
+        .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    dedup_state = (
-        raw.select(F.col("doc_id"), F.md5(norm).alias("content_hash"))
+
+
+def _doc_fold(
+    spark: SparkSession,
+    n_arrival_batches: int,
+    fold,
+    output_mode: str = "complete",
+    docs: DataFrame | None = None,
+) -> DataFrame:
+    """Run ``fold(raw)`` to completion over the documents table (or a
+    caller-filtered subset) replayed as ``n_arrival_batches`` arrival
+    batches in doc_id order (a crawler's append log); returns the sink
+    table."""
+    with tempfile.TemporaryDirectory(prefix="collector_spark_docs_") as src:
+        stage_replay(
+            spark.table("documents") if docs is None else docs,
+            "doc_id",
+            n_arrival_batches,
+            src,
+        )
+        return run_to_completion(fold(_doc_reader(spark, src)), output_mode)
+
+
+def _exact_fold(raw: DataFrame) -> DataFrame:
+    """The exact-dedup state: content hash -> canonical (min) doc_id and
+    group size."""
+    return (
+        raw.select("doc_id", _content_hash_col())
         .groupBy("content_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -77,27 +83,31 @@ def stream_exact_dedup(spark: SparkSession, n_arrival_batches: int = 8) -> DataF
         )
     )
 
-    qname = f"docdedup_{run_id}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            dedup_state.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
 
-    return spark.table(qname).orderBy("canonical_doc_id")
+def _lsh_fold(raw: DataFrame) -> DataFrame:
+    """The LSH bucket state: (band bucket, content hash) -> min doc_id."""
+    buckets = raw.select(
+        "doc_id",
+        _content_hash_col(),
+        F.explode(_row_signature_cols()).alias("bucket"),
+    )
+    return buckets.groupBy("bucket", "content_hash").agg(
+        F.min("doc_id").alias("min_doc")
+    )
+
+
+# the two state legs of the curation manifest (ST13 below)
+_STATE_FOLDS = {"exact": _exact_fold, "lsh": _lsh_fold}
+
+
+def stream_exact_dedup(spark: SparkSession, n_arrival_batches: int = 8) -> DataFrame:
+    """Run the streaming dedup aggregation to completion over the documents
+    table delivered as ``n_arrival_batches`` arrival-ordered files, and
+    return the final per-hash state (content_hash, canonical_doc_id,
+    group_size) — batch-equal by construction."""
+    return _doc_fold(spark, n_arrival_batches, _exact_fold).orderBy(
+        "canonical_doc_id"
+    )
 
 
 def oracle_stream_exact_dedup() -> str:
@@ -168,52 +178,7 @@ def stream_minhash_candidates(
     path. Production bounds state age with a watermark TTL on the bucket
     key when the dedup horizon is bounded.
     """
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_lshstream")
-    src_dir = os.path.join(base, run_id, "src")
-    ckpt_dir = os.path.join(base, run_id, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    (
-        spark.table("documents")
-        .repartitionByRange(n_arrival_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    buckets = raw.select(
-        "doc_id",
-        _content_hash_col(),
-        F.explode(_row_signature_cols()).alias("bucket"),
-    )
-    state = buckets.groupBy("bucket", "content_hash").agg(
-        F.min("doc_id").alias("min_doc")
-    )
-    qname = f"lshstream_{run_id}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            state.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
-
-    final = spark.table(qname)
+    final = _doc_fold(spark, n_arrival_batches, _lsh_fold)
     return _expand_bucket_pairs(final).orderBy("doc_a", "doc_b")
 
 
@@ -240,75 +205,30 @@ def stream_dsir_weights(spark: SparkSession, n_arrival_batches: int = 8) -> Data
         _dsir_ratio_table,
     )
 
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_docstream")
-    src_dir = os.path.join(base, run_id, "src")
-    ckpt_dir = os.path.join(base, run_id, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    (
-        spark.table("documents")
-        .repartitionByRange(n_arrival_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(src_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base_mtime = os.path.getmtime(src_dir)
-    for i, name in enumerate(parts):
-        p = os.path.join(src_dir, name)
-        os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
-
     # STATIC side: ratio table trained in batch over the full corpus
     ratio = _dsir_ratio_table(
         _dsir_bigram_buckets(spark.table("documents"))
     )
-
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    stream_bigrams = _dsir_bigram_buckets(raw)
     lq = F.floor(F.log(F.col("ratio")) * _NLL_SCALE).cast("long")
-    scored = (
-        stream_bigrams.join(F.broadcast(ratio), "b")  # stream-static join
-        .select("doc_id", lq.alias("lq"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_bigrams"),
-            F.sum("lq").alias("sum_q"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (F.col("sum_q").cast("double") / _NLL_SCALE).alias("log_weight"),
-        )
-    )
 
-    qname = f"docdsir_{run_id}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            scored.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+    def scored(raw: DataFrame) -> DataFrame:
+        return (
+            _dsir_bigram_buckets(raw)
+            .join(F.broadcast(ratio), "b")  # stream-static join
+            .select("doc_id", lq.alias("lq"))
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").cast("long").alias("n_bigrams"),
+                F.sum("lq").alias("sum_q"),
+            )
+            .select(
+                "doc_id",
+                "n_bigrams",
+                (F.col("sum_q").cast("double") / _NLL_SCALE).alias("log_weight"),
+            )
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
 
-    return spark.table(qname).orderBy("doc_id")
+    return _doc_fold(spark, n_arrival_batches, scored).orderBy("doc_id")
 
 
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -333,91 +253,48 @@ def stream_embedding_join(spark: SparkSession, n_arrival_batches: int = 4) -> Da
     side, keyed and shuffled once on the join id; widen the watermark to
     tolerate a slower embedding service at the cost of state size.
     """
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_docstream")
-    doc_dir = os.path.join(base, run_id, "docs")
-    emb_dir = os.path.join(base, run_id, "embs")
-    ckpt_dir = os.path.join(base, run_id, "ckpt")
-    os.makedirs(doc_dir, exist_ok=True)
-    os.makedirs(emb_dir, exist_ok=True)
-
-    (
-        spark.table("documents")
-        .repartitionByRange(n_arrival_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(doc_dir)
-    )
-    (
-        spark.table("embeddings")
-        .repartitionByRange(n_arrival_batches, "vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .parquet(emb_dir)
-    )
-    # docs arrive id-ascending, embeddings id-DESCENDING: the first doc
-    # batch waits until the LAST embedding batch for its partners
-    for d, reverse in ((doc_dir, False), (emb_dir, True)):
-        parts = sorted(
-            f for f in os.listdir(d)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        if reverse:
-            parts = list(reversed(parts))
-        base_mtime = os.path.getmtime(d)
-        for i, name in enumerate(parts):
-            p = os.path.join(d, name)
-            os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
-
     event_ts = lambda idcol: F.timestamp_seconds(  # noqa: E731
         F.lit(1700000000) + F.col(idcol) % 3600
     )
-    docs = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(doc_dir)
-        .select("doc_id", "source", "lang", event_ts("doc_id").alias("doc_ts"))
-        .withWatermark("doc_ts", "2 hours")
-    )
-    embs = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-        .select(
+    with tempfile.TemporaryDirectory(prefix="collector_spark_docs_") as run:
+        # docs arrive id-ascending, embeddings id-DESCENDING: the first doc
+        # batch waits until the LAST embedding batch for its partners
+        doc_dir = stage_replay(
+            spark.table("documents"),
+            "doc_id",
+            n_arrival_batches,
+            os.path.join(run, "docs"),
+        )
+        emb_dir = stage_replay(
+            spark.table("embeddings"),
             "vec_id",
-            "label",
-            F.size("embedding").alias("emb_dim"),
-            event_ts("vec_id").alias("emb_ts"),
+            n_arrival_batches,
+            os.path.join(run, "embs"),
+            reverse=True,
         )
-        .withWatermark("emb_ts", "2 hours")
-    )
-    joined = docs.join(
-        embs,
-        (F.col("doc_id") == F.col("vec_id")) & (F.col("doc_ts") == F.col("emb_ts")),
-        "inner",
-    ).select("doc_id", "source", "lang", "label", "emb_dim")
-
-    qname = f"docembjoin_{run_id}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+        docs = (
+            _doc_reader(spark, doc_dir)
+            .select("doc_id", "source", "lang", event_ts("doc_id").alias("doc_ts"))
+            .withWatermark("doc_ts", "2 hours")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
-
-    return spark.table(qname).orderBy("doc_id")
+        embs = (
+            spark.readStream.schema(EMB_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(emb_dir)
+            .select(
+                "vec_id",
+                "label",
+                F.size("embedding").alias("emb_dim"),
+                event_ts("vec_id").alias("emb_ts"),
+            )
+            .withWatermark("emb_ts", "2 hours")
+        )
+        joined = docs.join(
+            embs,
+            (F.col("doc_id") == F.col("vec_id")) & (F.col("doc_ts") == F.col("emb_ts")),
+            "inner",
+        ).select("doc_id", "source", "lang", "label", "emb_dim")
+        return run_to_completion(joined).orderBy("doc_id")
 
 
 def oracle_stream_embedding_join() -> str:
@@ -506,24 +383,6 @@ def _expand_bucket_pairs(state: DataFrame) -> DataFrame:
     )
 
 
-def _write_arrival_log(spark: SparkSession, dirpath: str, n_batches: int) -> None:
-    (
-        spark.table("documents")
-        .repartitionByRange(n_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(dirpath)
-    )
-    parts = sorted(
-        f for f in os.listdir(dirpath)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base_mtime = os.path.getmtime(dirpath)
-    for i, name in enumerate(parts):
-        p = os.path.join(dirpath, name)
-        os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
-
-
 def _score_batch_fn(land_dir: str, eval_grams: DataFrame | None = None):
     """foreachBatch body for the per-doc scoring stream: run the arriving
     micro-batch through the batch quality/decontamination/split operators
@@ -574,69 +433,28 @@ def start_manifest_streams(
     """Start the three manifest streams against run_dir's arrival log and
     return {name: StreamingQuery}. Exposed separately so the resume test
     can stop/restart an individual stream against the same checkpoints."""
-    src_dir = os.path.join(run_dir, "src")
     queries = {}
-    if "exact" in which:
-        raw = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        state = (
-            raw.select("doc_id", _content_hash_col())
-            .groupBy("content_hash")
-            .agg(
-                F.min("doc_id").alias("canonical_doc_id"),
-                F.count("*").cast("long").alias("group_size"),
-            )
-        )
-        queries["exact"] = (
-            state.writeStream.format("memory")
-            .queryName("manifest_exact")
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt_exact"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if "lsh" in which:
-        raw = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        buckets = raw.select(
-            "doc_id",
-            _content_hash_col(),
-            F.explode(_row_signature_cols()).alias("bucket"),
-        )
-        state = buckets.groupBy("bucket", "content_hash").agg(
-            F.min("doc_id").alias("min_doc")
-        )
-        queries["lsh"] = (
-            state.writeStream.format("memory")
-            .queryName("manifest_lsh")
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt_lsh"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if "score" in which:
-        from collector_spark.ml.curation import eval_gram_set
+    for leg in which:
+        raw = _doc_reader(spark, os.path.join(run_dir, "src"))
+        if leg == "score":
+            from collector_spark.ml.curation import eval_gram_set
 
-        # materialized ONCE per stream start: every micro-batch screens
-        # against this checkpointed set instead of re-deriving the eval
-        # explode+distinct per trigger
-        eval_grams = eval_gram_set(spark).localCheckpoint()
-        raw = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        queries["score"] = (
-            raw.writeStream.foreachBatch(
+            # materialized ONCE per stream start: every micro-batch screens
+            # against this checkpointed set instead of re-deriving the eval
+            # explode+distinct per trigger
+            eval_grams = eval_gram_set(spark).localCheckpoint()
+            sink = raw.writeStream.foreachBatch(
                 _score_batch_fn(os.path.join(run_dir, "land"), eval_grams)
             )
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt_score"))
+        else:
+            sink = (
+                _STATE_FOLDS[leg](raw)
+                .writeStream.format("memory")
+                .queryName(f"manifest_{leg}")
+                .outputMode("complete")
+            )
+        queries[leg] = (
+            sink.option("checkpointLocation", os.path.join(run_dir, f"ckpt_{leg}"))
             .trigger(availableNow=True)
             .start()
         )
@@ -668,51 +486,15 @@ def start_manifest_state_updates(
     compaction view, see compact_state_updates), swapped in for the
     memory-sink oracle harness. Checkpoints are separate from the memory
     legs', so both harnesses can run against one arrival log."""
-    src_dir = os.path.join(run_dir, "src")
-    queries = {}
-    if "exact" in which:
-        raw = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        state = (
-            raw.select("doc_id", _content_hash_col())
-            .groupBy("content_hash")
-            .agg(
-                F.min("doc_id").alias("canonical_doc_id"),
-                F.count("*").cast("long").alias("group_size"),
-            )
-        )
-        queries["exact"] = (
-            state.writeStream.outputMode("update")
-            .foreachBatch(_state_update_fn(os.path.join(run_dir, "upd_exact")))
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt_upd_exact"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if "lsh" in which:
-        raw = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        buckets = raw.select(
-            "doc_id",
-            _content_hash_col(),
-            F.explode(_row_signature_cols()).alias("bucket"),
-        )
-        state = buckets.groupBy("bucket", "content_hash").agg(
-            F.min("doc_id").alias("min_doc")
-        )
-        queries["lsh"] = (
-            state.writeStream.outputMode("update")
-            .foreachBatch(_state_update_fn(os.path.join(run_dir, "upd_lsh")))
-            .option("checkpointLocation", os.path.join(run_dir, "ckpt_upd_lsh"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    return queries
+    return {
+        leg: _STATE_FOLDS[leg](_doc_reader(spark, os.path.join(run_dir, "src")))
+        .writeStream.outputMode("update")
+        .foreachBatch(_state_update_fn(os.path.join(run_dir, f"upd_{leg}")))
+        .option("checkpointLocation", os.path.join(run_dir, f"ckpt_upd_{leg}"))
+        .trigger(availableNow=True)
+        .start()
+        for leg in which
+    }
 
 
 def compact_state_updates(
@@ -772,52 +554,25 @@ def compose_manifest(spark: SparkSession, run_dir: str) -> DataFrame:
 def stream_curation_manifest(
     spark: SparkSession, n_arrival_batches: int = 6
 ) -> DataFrame:
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_docstream")
-    run_dir = os.path.join(base, run_id)
-    _write_arrival_log(spark, os.path.join(run_dir, "src"), n_arrival_batches)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    run_dir = tempfile.mkdtemp(prefix="collector_spark_manifest_")
     try:
-        queries = start_manifest_streams(spark, run_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        for q in queries.values():
-            q.awaitTermination()
-    finally:
-        for q in queries.values():
-            q.stop()
-    try:
+        stage_replay(
+            spark.table("documents"),
+            "doc_id",
+            n_arrival_batches,
+            os.path.join(run_dir, "src"),
+        )
+        with state_partitions(spark):
+            queries = start_manifest_streams(spark, run_dir)
+        try:
+            for q in queries.values():
+                q.awaitTermination()
+        finally:
+            for q in queries.values():
+                q.stop()
         return compose_manifest(spark, run_dir)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
-
-
-def _write_incoming_log(spark: SparkSession, src_dir: str, n_batches: int) -> None:
-    """The INCOMING batch (doc_id % INC_BATCH_MOD == INC_BATCH_REM) written
-    as an arrival-ordered file log (same staggered-mtime convention as
-    _write_arrival_log, which writes the whole corpus)."""
-    from collector_spark.ml.dedup import INC_BATCH_MOD, INC_BATCH_REM
-
-    os.makedirs(src_dir, exist_ok=True)
-    (
-        spark.table("documents")
-        .filter((F.col("doc_id") % INC_BATCH_MOD) == INC_BATCH_REM)
-        .repartitionByRange(n_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(src_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base_mtime = os.path.getmtime(src_dir)
-    for i, name in enumerate(parts):
-        p = os.path.join(src_dir, name)
-        os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
 
 
 def start_incremental_screen(spark: SparkSession, run_dir: str):
@@ -826,24 +581,16 @@ def start_incremental_screen(spark: SparkSession, run_dir: str):
     idempotent per-batch changelog (each epoch overwrites its own
     deterministic batch=N directory — a replayed epoch rewrites instead of
     duplicating, which is what makes kill/resume exactly-once)."""
-    from collector_spark.ml.dedup import (
-        INC_BATCH_MOD,
-        INC_BATCH_REM,
-        incremental_dedup,
-    )
+    from collector_spark.ml.dedup import _inc_is_incoming, incremental_dedup
     from collector_spark.registry import drop_trailing_sort
 
-    src_dir = os.path.join(run_dir, "src")
-    ckpt_dir = os.path.join(run_dir, "ckpt")
     out_dir = os.path.join(run_dir, "out")
     os.makedirs(out_dir, exist_ok=True)
 
     # pin the static corpus once — the foreachBatch kernel must not chase
     # live lineage back through the source per trigger
     existing = (
-        spark.table("documents")
-        .filter((F.col("doc_id") % INC_BATCH_MOD) != INC_BATCH_REM)
-        .localCheckpoint()
+        spark.table("documents").filter(~_inc_is_incoming()).localCheckpoint()
     )
     cols = existing.columns
 
@@ -859,22 +606,14 @@ def start_incremental_screen(spark: SparkSession, run_dir: str):
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with state_partitions(spark):
         return (
-            raw.writeStream.foreachBatch(screen_batch)
-            .option("checkpointLocation", ckpt_dir)
+            _doc_reader(spark, os.path.join(run_dir, "src"))
+            .writeStream.foreachBatch(screen_batch)
+            .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def collect_incremental_results(spark: SparkSession, run_dir: str) -> DataFrame:
@@ -909,17 +648,24 @@ def stream_incremental_dedup(
     st_ml_stream_dedup / st_ml_stream_lsh demonstrate; composing the two
     is a state-compaction policy choice, not a new operator.
     """
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_docstream")
-    run_dir = os.path.join(base, run_id)
-    _write_incoming_log(spark, os.path.join(run_dir, "src"), n_arrival_batches)
-    query = start_incremental_screen(spark, run_dir)
+    from collector_spark.ml.dedup import _inc_is_incoming
+
+    run_dir = tempfile.mkdtemp(prefix="collector_spark_incdedup_")
     try:
-        query.awaitTermination()
+        stage_replay(
+            spark.table("documents").filter(_inc_is_incoming()),
+            "doc_id",
+            n_arrival_batches,
+            os.path.join(run_dir, "src"),
+        )
+        query = start_incremental_screen(spark, run_dir)
+        try:
+            query.awaitTermination()
+        finally:
+            query.stop()
+        out = collect_incremental_results(spark, run_dir).localCheckpoint()
     finally:
-        query.stop()
-    out = collect_incremental_results(spark, run_dir).localCheckpoint()
-    shutil.rmtree(run_dir, ignore_errors=True)
+        shutil.rmtree(run_dir, ignore_errors=True)
     return out.orderBy("doc_id")
 
 
@@ -939,18 +685,17 @@ def stream_incremental_dedup(
 def stream_zipf_fit(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
     from collector_spark.ml.curation import zipf_fit_from_counts
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    counts_state = (
-        raw.select(
-            "source",
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
+    def counts(raw: DataFrame) -> DataFrame:
+        return (
+            raw.select(
+                "source",
+                F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
+            )
+            .groupBy("source", "w")
+            .agg(F.count("*").cast("long").alias("cnt"))
         )
-        .groupBy("source", "w")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    qname = f"zipfcounts_{run_id}"
-    _run_state_to_memory(spark, counts_state, qname, ckpt_dir, cleanup)
-    return zipf_fit_from_counts(spark.table(qname))
+
+    return zipf_fit_from_counts(_doc_fold(spark, n_arrival_batches, counts))
 
 
 # ---------------------------------------------------------------------------
@@ -973,25 +718,22 @@ def stream_bloom_screen(spark: SparkSession, n_arrival_batches: int = 6) -> Data
         bloom_screen_from_bits,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(
-        spark,
-        n_arrival_batches,
-        docs=spark.table("documents").filter(~_inc_is_incoming()),
-    )
-    bits_state = (
-        raw.select(F.explode(_bloom_positions()).alias("pos"))
-        .select(
-            F.floor(F.col("pos") / BLOOM_WORD).alias("w_idx"),
-            _bloom_mask().alias("m"),
+    def bits(raw: DataFrame) -> DataFrame:
+        return (
+            raw.select(F.explode(_bloom_positions()).alias("pos"))
+            .select(
+                F.floor(F.col("pos") / BLOOM_WORD).alias("w_idx"),
+                _bloom_mask().alias("m"),
+            )
+            .groupBy("w_idx")
+            .agg(F.bit_or("m").alias("bits"))
         )
-        .groupBy("w_idx")
-        .agg(F.bit_or("m").alias("bits"))
-    )
-    qname = f"bloombits_{run_id}"
-    _run_state_to_memory(spark, bits_state, qname, ckpt_dir, cleanup)
+
     docs = spark.table("documents")
     return bloom_screen_from_bits(
-        spark.table(qname),
+        _doc_fold(
+            spark, n_arrival_batches, bits, docs=docs.filter(~_inc_is_incoming())
+        ),
         docs.filter(~_inc_is_incoming()),
         docs.filter(_inc_is_incoming()),
     )
@@ -1009,65 +751,14 @@ def stream_bloom_screen(spark: SparkSession, n_arrival_batches: int = 6) -> Data
 # ---------------------------------------------------------------------------
 
 
-def _staged_doc_stream(
-    spark: SparkSession, n_arrival_batches: int = 6, docs: DataFrame | None = None
-):
-    """Stage the documents table (or a caller-filtered subset) as an
-    arrival-ordered file stream; returns (raw stream DF, run cleanup fn,
-    run dirs)."""
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_docstream")
-    src_dir = os.path.join(base, run_id, "src")
-    ckpt_dir = os.path.join(base, run_id, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    (
-        (spark.table("documents") if docs is None else docs)
-        .repartitionByRange(n_arrival_batches, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(src_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base_mtime = os.path.getmtime(src_dir)
-    for i, name in enumerate(parts):
-        p = os.path.join(src_dir, name)
-        os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def cleanup():
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
-
-    return raw, cleanup, run_id, ckpt_dir
-
-
-def _run_state_to_memory(
-    spark, state_df, qname: str, ckpt_dir: str, cleanup, output_mode: str = "complete"
-):
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            state_df.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        cleanup()
+def _fixture_over(raw: DataFrame, sql: str) -> DataFrame:
+    """A documents-derived fixture rendered on the STREAM with its exact
+    fixture SQL (the derivation is the input contract — re-expressing it in
+    DataFrame ops here would let the two drift); only the source relation
+    is swapped."""
+    assert sql.count("FROM documents") == 1, "fixture SQL shape changed"
+    raw.createOrReplaceTempView("docstream_src")
+    return raw.sparkSession.sql(sql.replace("FROM documents", "FROM docstream_src"))
 
 
 def stream_hll_distinct(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
@@ -1081,8 +772,6 @@ def stream_hll_distinct(spark: SparkSession, n_arrival_batches: int = 6) -> Data
     )
     from collector_spark.ml import dedup as _dedup
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    sh = _shingle_hashes(raw)
     bucket = (F.col("h") % HLL_M).cast("long")
     w = F.floor(F.col("h") / HLL_M).cast("long")
     rho = (
@@ -1094,18 +783,20 @@ def stream_hll_distinct(spark: SparkSession, n_arrival_batches: int = 6) -> Data
         .otherwise(F.lit(HLL_RHO_CAP))
         .cast("long")
     )
-    regs = (
-        sh.select(bucket.alias("bucket"), w.alias("w"))
-        .select("bucket", rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("reg"))
-    )
-    qname = f"hllregs_{run_id}"
-    _run_state_to_memory(spark, regs, qname, ckpt_dir, cleanup)
+
+    def regs(raw: DataFrame) -> DataFrame:
+        return (
+            _shingle_hashes(raw)
+            .select(bucket.alias("bucket"), w.alias("w"))
+            .select("bucket", rho.alias("rho"))
+            .groupBy("bucket")
+            .agg(F.max("rho").alias("reg"))
+        )
+
     # estimate off the streamed registers through the batch math; the
     # exact-count audit column recomputes batch-side (it is the audit, not
     # the sketch)
-    return _dedup.hll_from_regs(spark, spark.table(qname))
+    return _dedup.hll_from_regs(spark, _doc_fold(spark, n_arrival_batches, regs))
 
 
 def stream_cms_heavy_hitters(
@@ -1114,29 +805,26 @@ def stream_cms_heavy_hitters(
     from collector_spark.ml.dedup import CMS_D, CMS_W, _hash60
     from collector_spark.ml import dedup as _dedup
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    words = raw.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
-    )
-    pos = words.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        (
-                            _hash60(F.concat(F.lit(f"cms{d}:"), F.col("w"))) % CMS_W
-                        ).alias("col"),
-                    )
-                    for d in range(CMS_D)
-                ]
+    positions = F.array(
+        *[
+            F.struct(
+                F.lit(d).alias("d"),
+                (_hash60(F.concat(F.lit(f"cms{d}:"), F.col("w"))) % CMS_W).alias("col"),
             )
-        ).alias("p")
-    ).select("p.d", "p.col")
-    sketch = pos.groupBy("d", "col").agg(F.count("*").cast("long").alias("cnt"))
-    qname = f"cmssketch_{run_id}"
-    _run_state_to_memory(spark, sketch, qname, ckpt_dir, cleanup)
-    return _dedup.cms_report_from_sketch(spark, spark.table(qname))
+            for d in range(CMS_D)
+        ]
+    )
+
+    def sketch(raw: DataFrame) -> DataFrame:
+        words = raw.select(
+            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
+        )
+        pos = words.select(F.explode(positions).alias("p")).select("p.d", "p.col")
+        return pos.groupBy("d", "col").agg(F.count("*").cast("long").alias("cnt"))
+
+    return _dedup.cms_report_from_sketch(
+        spark, _doc_fold(spark, n_arrival_batches, sketch)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1152,21 +840,20 @@ def stream_novelty_curve(spark: SparkSession, n_arrival_batches: int = 6) -> Dat
     from collector_spark.ml.dedup import NOVELTY_BATCH_SPAN, _shingle_hashes
     from collector_spark.ml import dedup as _dedup
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    batch_grams = (
-        _shingle_hashes(raw)
-        .select(
-            F.floor(F.col("doc_id") / NOVELTY_BATCH_SPAN).alias("batch"), "h"
+    def batch_grams(raw: DataFrame) -> DataFrame:
+        return (
+            _shingle_hashes(raw)
+            .select(
+                F.floor(F.col("doc_id") / NOVELTY_BATCH_SPAN).alias("batch"), "h"
+            )
+            .groupBy("h")
+            .agg(
+                F.min("batch").alias("first_batch"),
+                F.collect_set("batch").alias("batches"),
+            )
         )
-        .groupBy("h")
-        .agg(
-            F.min("batch").alias("first_batch"),
-            F.collect_set("batch").alias("batches"),
-        )
-    )
-    qname = f"novelty_{run_id}"
-    _run_state_to_memory(spark, batch_grams, qname, ckpt_dir, cleanup)
-    state = spark.table(qname)
+
+    state = _doc_fold(spark, n_arrival_batches, batch_grams)
     return _dedup.novelty_from_state(
         state.select("h", "first_batch", F.explode("batches").alias("batch"))
     )
@@ -1189,28 +876,22 @@ def stream_line_dedup(spark: SparkSession, n_arrival_batches: int = 6) -> DataFr
     from collector_spark.fixtures.defs import _doc_lines_sql
     from collector_spark.ml.dedup import LINE_POS_STRIDE, line_dedup_from_first_keys
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    # render lines on the STREAM with the exact F27 fixture SQL (the line
-    # derivation is the input contract — re-expressing it in DataFrame ops
-    # here would let the two drift); only the source relation is swapped
-    view = f"docstream_lines_{run_id}"
-    raw.createOrReplaceTempView(view)
-    sql = _doc_lines_sql("spark")
-    assert sql.count("FROM documents") == 1, "fixture SQL shape changed"
-    lines = spark.sql(sql.replace("FROM documents", f"FROM {view}"))
-    state = (
-        lines.select(
-            "line_text",
-            (F.col("doc_id") * LINE_POS_STRIDE + F.col("line_no"))
-            .cast("long")
-            .alias("pos_key"),
+    def first_keys(raw: DataFrame) -> DataFrame:
+        return (
+            _fixture_over(raw, _doc_lines_sql("spark"))
+            .select(
+                "line_text",
+                (F.col("doc_id") * LINE_POS_STRIDE + F.col("line_no"))
+                .cast("long")
+                .alias("pos_key"),
+            )
+            .groupBy("line_text")
+            .agg(F.min("pos_key").alias("first_key"))
         )
-        .groupBy("line_text")
-        .agg(F.min("pos_key").alias("first_key"))
+
+    return line_dedup_from_first_keys(
+        spark, _doc_fold(spark, n_arrival_batches, first_keys)
     )
-    qname = f"linefirst_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return line_dedup_from_first_keys(spark, spark.table(qname))
 
 
 # ---------------------------------------------------------------------------
@@ -1309,25 +990,22 @@ def stream_sequence_packing(
 
     from collector_spark.ml.curation import PACK_SHARD_DOCS
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    base = raw.select(
-        "doc_id",
-        "source",
-        F.floor(F.col("doc_id") / PACK_SHARD_DOCS).cast("long").alias("shard"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
-    )
-    packed = base.groupBy("source", "shard").applyInPandasWithState(
-        _pack_state_fn,
-        _pack_out_schema(),
-        _pack_state_schema(),
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    qname = f"seqpack_{run_id}"
-    _run_state_to_memory(
-        spark, packed, qname, ckpt_dir, cleanup, output_mode="append"
-    )
-    return spark.table(qname).orderBy("doc_id")
+    def packed(raw: DataFrame) -> DataFrame:
+        base = raw.select(
+            "doc_id",
+            "source",
+            F.floor(F.col("doc_id") / PACK_SHARD_DOCS).cast("long").alias("shard"),
+            F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
+        )
+        return base.groupBy("source", "shard").applyInPandasWithState(
+            _pack_state_fn,
+            _pack_out_schema(),
+            _pack_state_schema(),
+            "append",
+            GroupStateTimeout.NoTimeout,
+        )
+
+    return _doc_fold(spark, n_arrival_batches, packed, "append").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1346,27 +1024,22 @@ def stream_sequence_packing(
 def stream_frame_dedup(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
     from collector_spark.fixtures.defs import ALL_FIXTURES
     from collector_spark.ml.multimodal import (
+        _frame_pos_key,
         frame_dedup_from_first_keys,
         video_frames,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    view = f"docstream_media_{run_id}"
-    raw.createOrReplaceTempView(view)
-    sql = ALL_FIXTURES["media_rows"]
-    assert isinstance(sql, str) and sql.count("FROM documents") == 1
-    media = spark.sql(sql.replace("FROM documents", f"FROM {view}"))
-    from collector_spark.ml.multimodal import _frame_pos_key
+    def first_keys(raw: DataFrame) -> DataFrame:
+        return (
+            video_frames(_fixture_over(raw, ALL_FIXTURES["media_rows"]))
+            .select("frame_key", _frame_pos_key().alias("pos_key"))
+            .groupBy("frame_key")
+            .agg(F.min("pos_key").alias("first_key"))
+        )
 
-    state = (
-        video_frames(media)
-        .select("frame_key", _frame_pos_key().alias("pos_key"))
-        .groupBy("frame_key")
-        .agg(F.min("pos_key").alias("first_key"))
+    return frame_dedup_from_first_keys(
+        spark, _doc_fold(spark, n_arrival_batches, first_keys)
     )
-    qname = f"framefirst_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return frame_dedup_from_first_keys(spark, spark.table(qname))
 
 
 def stream_decontaminate(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
@@ -1393,9 +1066,9 @@ def stream_decontaminate(spark: SparkSession, n_arrival_batches: int = 6) -> Dat
         eval_gram_set,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
     eval_grams = eval_gram_set(spark).withColumn("_hit", F.lit(1)).persist()
-    try:
+
+    def scored(raw: DataFrame) -> DataFrame:
         grams = (
             raw.filter(F.col("source") != EVAL_SOURCE)
             .select("doc_id", "source", F.split(F.col("text"), " ").alias("t"))
@@ -1407,7 +1080,7 @@ def stream_decontaminate(spark: SparkSession, n_arrival_batches: int = 6) -> Dat
                 ).alias("gram"),
             )
         )
-        scored = (
+        return (
             grams.join(F.broadcast(eval_grams), "gram", "left")
             .groupBy("doc_id", "source")
             .agg(
@@ -1422,11 +1095,12 @@ def stream_decontaminate(spark: SparkSession, n_arrival_batches: int = 6) -> Dat
                 (F.col("matched_grams") > 0).alias("contaminated"),
             )
         )
-        qname = f"docdecon_{run_id}"
-        _run_state_to_memory(spark, scored, qname, ckpt_dir, cleanup)
+
+    try:
+        out = _doc_fold(spark, n_arrival_batches, scored)
     finally:
         eval_grams.unpersist()
-    return spark.table(qname).orderBy("doc_id")
+    return out.orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1447,20 +1121,19 @@ def stream_decontaminate(spark: SparkSession, n_arrival_batches: int = 6) -> Dat
 def stream_source_tvd(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
     from collector_spark.ml.textstats import tvd_from_counts
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    counts_state = (
-        raw.select(
-            "source",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-            ).alias("tok"),
+    def counts(raw: DataFrame) -> DataFrame:
+        return (
+            raw.select(
+                "source",
+                F.explode(
+                    F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+                ).alias("tok"),
+            )
+            .groupBy("source", "tok")
+            .agg(F.count("*").cast("long").alias("c"))
         )
-        .groupBy("source", "tok")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    qname = f"tvdcounts_{run_id}"
-    _run_state_to_memory(spark, counts_state, qname, ckpt_dir, cleanup)
-    return tvd_from_counts(spark.table(qname))
+
+    return tvd_from_counts(_doc_fold(spark, n_arrival_batches, counts))
 
 
 # ---------------------------------------------------------------------------
@@ -1481,20 +1154,14 @@ def stream_cdc_dedup(spark: SparkSession, n_arrival_batches: int = 6) -> DataFra
     from collector_spark.fixtures.defs import ALL_FIXTURES
     from collector_spark.ml.multimodal import _cdc_exploded, cdc_dedup_from_counts
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    view = f"docstream_cdc_{run_id}"
-    raw.createOrReplaceTempView(view)
-    sql = ALL_FIXTURES["media_rows"]
-    assert isinstance(sql, str) and sql.count("FROM documents") == 1
-    media = spark.sql(sql.replace("FROM documents", f"FROM {view}"))
-    state = (
-        _cdc_exploded(spark, media)
-        .groupBy("media_type", "chash", "cbytes")
-        .agg(F.count("*").cast("long").alias("copies"))
-    )
-    qname = f"cdccounts_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return cdc_dedup_from_counts(spark.table(qname))
+    def copies(raw: DataFrame) -> DataFrame:
+        return (
+            _cdc_exploded(spark, _fixture_over(raw, ALL_FIXTURES["media_rows"]))
+            .groupBy("media_type", "chash", "cbytes")
+            .agg(F.count("*").cast("long").alias("copies"))
+        )
+
+    return cdc_dedup_from_counts(_doc_fold(spark, n_arrival_batches, copies))
 
 
 # ---------------------------------------------------------------------------
@@ -1522,16 +1189,12 @@ def stream_boilerplate(spark: SparkSession, n_arrival_batches: int = 6) -> DataF
         boilerplate_from_doc_line_counts,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    view = f"docstream_boiler_{run_id}"
-    raw.createOrReplaceTempView(view)
-    sql = _doc_lines_sql("spark")
-    assert sql.count("FROM documents") == 1, "fixture SQL shape changed"
-    lines = spark.sql(sql.replace("FROM documents", f"FROM {view}"))
-    state = _doc_line_counts(lines)
-    qname = f"boilercounts_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return boilerplate_from_doc_line_counts(spark, spark.table(qname))
+    def counts(raw: DataFrame) -> DataFrame:
+        return _doc_line_counts(_fixture_over(raw, _doc_lines_sql("spark")))
+
+    return boilerplate_from_doc_line_counts(
+        spark, _doc_fold(spark, n_arrival_batches, counts)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1555,11 +1218,9 @@ def stream_pmi_collocations(
         pmi_from_pair_counts,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = _bigram_pair_counts(raw)
-    qname = f"pmicounts_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return pmi_from_pair_counts(spark.table(qname))
+    return pmi_from_pair_counts(
+        _doc_fold(spark, n_arrival_batches, _bigram_pair_counts)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1584,13 +1245,8 @@ def stream_nb_langid(spark: SparkSession, n_arrival_batches: int = 6) -> DataFra
         nb_langid_from_counts,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = _nb_counts(_nb_token_rows(raw))
-    qname = f"nbcounts_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return nb_langid_from_counts(
-        spark, spark.table(qname), spark.table("documents")
-    )
+    state = _doc_fold(spark, n_arrival_batches, lambda raw: _nb_counts(_nb_token_rows(raw)))
+    return nb_langid_from_counts(spark, state, spark.table("documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1615,13 +1271,12 @@ def stream_nb_quality(spark: SparkSession, n_arrival_batches: int = 6) -> DataFr
         nb_quality_from_counts,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = _nbq_counts(_nbq_token_rows(raw))
-    qname = f"nbqcounts_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return nb_quality_from_counts(
-        spark, spark.table(qname), spark.table("documents")
-    ).orderBy("doc_id")
+    state = _doc_fold(
+        spark, n_arrival_batches, lambda raw: _nbq_counts(_nbq_token_rows(raw))
+    )
+    return nb_quality_from_counts(spark, state, spark.table("documents")).orderBy(
+        "doc_id"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1642,11 +1297,9 @@ def stream_skipgram_pmi(
         pmi_from_pair_counts,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = _skipgram_pair_counts(raw)
-    qname = f"sgcounts_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return pmi_from_pair_counts(spark.table(qname))
+    return pmi_from_pair_counts(
+        _doc_fold(spark, n_arrival_batches, _skipgram_pair_counts)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1669,13 +1322,10 @@ def stream_quality_roc(spark: SparkSession, n_arrival_batches: int = 6) -> DataF
         quality_roc_from_margins,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = _nbq_counts(_nbq_token_rows(raw))
-    qname = f"nbqroc_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    margins = nb_quality_from_counts(
-        spark, spark.table(qname), spark.table("documents")
+    state = _doc_fold(
+        spark, n_arrival_batches, lambda raw: _nbq_counts(_nbq_token_rows(raw))
     )
+    margins = nb_quality_from_counts(spark, state, spark.table("documents"))
     return quality_roc_from_margins(margins)
 
 
@@ -1693,15 +1343,14 @@ def stream_quality_roc(spark: SparkSession, n_arrival_batches: int = 6) -> DataF
 def stream_dup_ngrams(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
     from collector_spark.ml.dedup import _shingle_hashes, dup_ngram_from_counts
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = (
-        _shingle_hashes(raw, carry=("source",))
-        .groupBy("source", "h")
-        .agg(F.count("*").cast("long").alias("n_inc"))
-    )
-    qname = f"dupng_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return dup_ngram_from_counts(spark.table(qname))
+    def counts(raw: DataFrame) -> DataFrame:
+        return (
+            _shingle_hashes(raw, carry=("source",))
+            .groupBy("source", "h")
+            .agg(F.count("*").cast("long").alias("n_inc"))
+        )
+
+    return dup_ngram_from_counts(_doc_fold(spark, n_arrival_batches, counts))
 
 
 # ---------------------------------------------------------------------------
@@ -1720,11 +1369,9 @@ def stream_padding_waste(spark: SparkSession, n_arrival_batches: int = 6) -> Dat
         padding_waste_from_counts,
     )
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    state = _padwaste_counts(raw)
-    qname = f"padwaste_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    return padding_waste_from_counts(spark.table(qname))
+    return padding_waste_from_counts(
+        _doc_fold(spark, n_arrival_batches, _padwaste_counts)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1802,18 +1449,17 @@ def stream_weighted_sample(
 
     from collector_spark.ml.curation import _wsample_keyed
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
-    keyed = _wsample_keyed(raw).drop("key")  # ints travel; key re-derived
-    topk = keyed.groupBy("source").applyInPandasWithState(
-        _ws_state_fn,
-        _ws_out_schema(),
-        _ws_state_schema(),
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    qname = f"wsample_{run_id}"
-    _run_state_to_memory(spark, topk, qname, ckpt_dir, cleanup, output_mode="append")
-    emitted = spark.table(qname)
+    def topk(raw: DataFrame) -> DataFrame:
+        keyed = _wsample_keyed(raw).drop("key")  # ints travel; key re-derived
+        return keyed.groupBy("source").applyInPandasWithState(
+            _ws_state_fn,
+            _ws_out_schema(),
+            _ws_state_schema(),
+            "append",
+            GroupStateTimeout.NoTimeout,
+        )
+
+    emitted = _doc_fold(spark, n_arrival_batches, topk, "append")
     last = Window.partitionBy("source")
     return (
         emitted.withColumn("_max_seq", F.max("seq").over(last))
@@ -1848,17 +1494,17 @@ def stream_corpus_validate(spark: SparkSession, n_arrival_batches: int = 6) -> D
     failed the moment a bad crawl batch lands."""
     from collector_spark.ml.export import _VALIDATE_ROW_CHECKS, validate_report
 
-    raw, cleanup, run_id, ckpt_dir = _staged_doc_stream(spark, n_arrival_batches)
     viol = [
         F.sum(F.expr(expr).cast("long")).alias(name)
         for name, expr in _VALIDATE_ROW_CHECKS
     ]
-    state = raw.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"), *viol
+    st = _doc_fold(
+        spark,
+        n_arrival_batches,
+        lambda raw: raw.groupBy("doc_id").agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"), *viol
+        ),
     )
-    qname = f"validate_{run_id}"
-    _run_state_to_memory(spark, state, qname, ckpt_dir, cleanup)
-    st = spark.table(qname)
     names = [n for n, _ in _VALIDATE_ROW_CHECKS]
     base = st.agg(
         F.sum("cnt").cast("long").alias("n_checked"),

@@ -26,6 +26,11 @@ primary per pid before streaming, so every real group closes and the
 run-to-completion output equals the batch stitcher (w3_log_stitch oracle)
 exactly; sentinel groups themselves never close and are filtered by seq.
 
+Harness: the sentinel-augmented corpus is staged once per session with
+``stage_replay`` (arrival order == event-time order) and every query runs
+with ``run_to_completion`` (streaming/replay.py), which also scopes the
+state width.
+
 Scale: state is per-pid (high cardinality, tiny per-key payload — the
 reference caps one pending event at 10 MB); the only shuffle is the
 groupBy(pid) exchange, identical to the batch stitcher's.
@@ -35,9 +40,7 @@ from __future__ import annotations
 
 import os
 import pickle
-import shutil
 import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -55,6 +58,7 @@ from pyspark.sql.types import (
 )
 
 from collector_spark.logs.parse import parse_df
+from collector_spark.streaming.replay import run_to_completion, stage_replay
 
 READINESS_MS = 3_000           # logs/stream/stream.go:233
 SENTINEL_SEQ_OFFSET = 10_000_000_000
@@ -252,12 +256,10 @@ def stitch_stream(
     )
 
 
-# sentinel-augmented stream source parquet, written once per (session,
-# prepared input dir) — the dataset-to-event-stream conversion is harness
-# setup (the same role as the driver materializing test data), not part of
-# the streaming operator under measurement; every stream query over the
-# same prepared corpus replays the same staggered files with a fresh
-# checkpoint
+# sentinel-augmented replay source, staged once per (session, prepared
+# input dir): the dataset-to-event-stream conversion is harness setup, not
+# part of the streaming operator under measurement; every stream query over
+# the same prepared corpus replays the same files with a fresh checkpoint
 _SOURCE_DIRS: dict[tuple[int, str], str] = {}
 
 
@@ -268,29 +270,14 @@ def _stream_source_dir(spark: SparkSession) -> str:
     cached = _SOURCE_DIRS.get(key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_stream")
-    src_dir = os.path.join(base, "src_" + uuid.uuid4().hex[:12])
-    os.makedirs(src_dir, exist_ok=True)
-    # arrival order == event-time order (as for a real log stream): range-
-    # partition by collected_at, then stagger file mtimes in range order so
-    # the file source (which replays oldest-modification-first) delivers
-    # batches in event-time order and the watermark never drops a live row
-    (
-        _with_sentinels(spark.table("log_raw"))
-        .repartitionByRange(8, "collected_at")
-        .sortWithinPartitions("collected_at")
-        .write.mode("overwrite")
-        .parquet(src_dir)
+    # arrival order == event-time order (as for a real log stream), so the
+    # watermark never drops a live row
+    src_dir = stage_replay(
+        _with_sentinels(spark.table("log_raw")),
+        "collected_at",
+        8,
+        tempfile.mkdtemp(prefix="collector_spark_stream_src_"),
     )
-    parts = sorted(
-        f
-        for f in os.listdir(src_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base_mtime = os.path.getmtime(src_dir)
-    for i, name in enumerate(parts):
-        p = os.path.join(src_dir, name)
-        os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
     _SOURCE_DIRS[key] = src_dir
     return src_dir
 
@@ -299,60 +286,15 @@ def _run_stream(
     spark: SparkSession,
     transform,
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
-    """Source + sentinel setup, run ``transform(raw_stream)`` to completion
-    against a memory sink, return the sentinel-filtered result.
-
-    Production deployment differs only in source/trigger: a live file/socket
-    source with trigger(processingTime='10 seconds') (ST5) instead of
-    trigger(availableNow); maxFilesPerTrigger bounds per-tick intake (ST8).
-
-    ``state_partitions`` sizes the stateful shuffle for THIS query (each
-    state-store partition pays a per-batch commit + a Python worker round
-    trip, so the verification harness right-sizes it down from the session
-    default; a long-lived production stream over many servers raises it —
-    the count is pinned by the first run's checkpoint either way).
-    """
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(tempfile.gettempdir(), "collector_spark_stream")
-    src_dir = _stream_source_dir(spark)
-    ckpt_dir = os.path.join(base, run_id, "ckpt")
-
+    """Run ``transform(raw_stream)`` over the replayed log corpus to
+    completion and return the sentinel-filtered result; maxFilesPerTrigger
+    bounds per-tick intake (ST8)."""
     reader = spark.readStream.schema(RAW_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw_stream = reader.parquet(src_dir)
-
-    qname = f"stream_{run_id}"
-    # streaming pins shuffle.partitions at first-checkpoint time; scope the
-    # override to query start and restore the session default right after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            transform(raw_stream)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(os.path.join(base, run_id), ignore_errors=True)
-
-    return (
-        spark.table(qname)
-        .filter(F.col("seq") < SENTINEL_SEQ_OFFSET)
-        .orderBy("pid", "seq")
-    )
+    out = run_to_completion(transform(reader.parquet(_stream_source_dir(spark))))
+    return out.filter(F.col("seq") < SENTINEL_SEQ_OFFSET).orderBy("pid", "seq")
 
 
 def stream_stitch(spark: SparkSession, max_files_per_trigger: int | None = None) -> DataFrame:

@@ -6,7 +6,8 @@ under (collected_at, interval) time keys (input/full_1min.go:39-62,
 state/postgres_statement.go:51-54) and flushes them with the 10-minute full
 snapshot. The Spark-native form is a watermarked tumbling-window streaming
 aggregation: readStream -> withWatermark -> groupBy(window(ts, '1 minute'),
-key) -> sums, run with trigger(availableNow) for verification and
+key) -> sums, run to completion through the streaming harness
+(streaming/replay.py ``run_to_completion``) for verification and with
 trigger(processingTime='1 minute') in production.
 
 Scale: windowed streaming aggregation is map-side-combinable per
@@ -17,12 +18,10 @@ active windows, exactly the reference's bucket-map footprint.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from collector_spark.streaming.replay import run_to_completion
 
 WATERMARK = "3 seconds"
 
@@ -42,19 +41,9 @@ def windowed_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_stat_buckets(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
-    """Run the windowed aggregation over the events table to completion and
-    return (window_start, key, calls, rows).
-
-    Verification runs in ``complete`` output mode so the final (still-open)
-    window is included and the result equals the batch oracle exactly;
-    production would run ``append`` + processingTime trigger, where the
-    watermark finalizes windows and evicts their state (ST9).
-    """
+def events_stream(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
+    """The events table as a file stream of (event_id, ts)."""
     from collector_spark import tables
-
-    run_id = uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "collector_spark_buckets", run_id)
 
     # the driver's parquet stores TIMESTAMP(NANOS); stream it with the raw
     # (nanos-as-long) schema, then convert exactly like tables.load does
@@ -68,36 +57,25 @@ def stream_stat_buckets(spark: SparkSession, sf_dir: str | None = None) -> DataF
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf)
     )
-    ts_type = dict(
-        zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])
-    ).get("ts")
-    if ts_type == "bigint":
+    if raw_schema["ts"].dataType.simpleString() == "bigint":
         ts = F.timestamp_micros(F.expr("ts DIV 1000"))
     else:
         # Watermarks require TIMESTAMP (with tz); the session tz is pinned
         # UTC, so casting a TIMESTAMP_NTZ parquet column is value-preserving.
         ts = F.col("ts").cast("timestamp")
-    events = raw.select("event_id", ts.alias("ts"))
+    return raw.select("event_id", ts.alias("ts"))
 
-    qname = f"stat_buckets_{run_id}"
-    q = (
-        windowed_counts(events)
-        .select(
-            F.col("w.start").alias("window_start"),
-            "key",
-            "calls",
-            "rows",
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+
+def stream_stat_buckets(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
+    """Run the windowed aggregation over the events table to completion and
+    return (window_start, key, calls, rows).
+
+    Verification runs in ``complete`` output mode so the final (still-open)
+    window is included and the result equals the batch oracle exactly;
+    production would run ``append`` + processingTime trigger, where the
+    watermark finalizes windows and evicts their state (ST9).
+    """
+    buckets = windowed_counts(events_stream(spark, sf_dir)).select(
+        F.col("w.start").alias("window_start"), "key", "calls", "rows"
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-    return spark.table(qname).orderBy("window_start", "key")
+    return run_to_completion(buckets, "complete").orderBy("window_start", "key")

@@ -68,22 +68,10 @@ def load(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     # arrive in >= cores splits (many files / row groups) and this branch
     # never fires.
     if name in _WIDEN_TABLES:
-        target = _widen_target(spark, f"{sf_dir}/{name}.parquet")
+        target = min(spark.sparkContext.defaultParallelism, 32)
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
     return df
-
-
-def _widen_target(spark: SparkSession, path: str) -> int:
-    """Partition count for the widen fan-out — overridable via
-    ``SPARK_GRAFT_WIDEN_TARGET`` (measurement / deployment knob; the
-    default stays the session core count, production-equivalent because
-    the fan-out branch never fires there — inputs already arrive in
-    >= cores splits)."""
-    override = os.environ.get("SPARK_GRAFT_WIDEN_TARGET")
-    if override:
-        return max(1, int(override))
-    return min(spark.sparkContext.defaultParallelism, 32)
 
 
 # last sf_dir registered — lets source-path-needing operators (streaming

@@ -195,20 +195,17 @@ def test_embedding_outliers_single_pass(prepared_spark):
 
 
 def test_incremental_dedup_materialize_collapses_scans(prepared_spark):
-    """E68's production knob: with materialize=True the canonical union is
-    checkpointed once and the plan's source-scan count collapses (46 -> a
-    handful); materialize=False trades scans for zero-barrier wall clock
-    at fixture scale. Both shapes pinned so neither silently regresses."""
+    """E68's materialization: the canonical union's shingles are
+    checkpointed once and the plan's source-scan count collapses (46 in
+    the former recompute shape -> a handful)."""
     from collector_spark.ml.dedup import incremental_dedup
 
     def scans(df):
         plan = _plan(df)
         return plan.count("Scan parquet") + plan.count("FileScan")
 
-    lazy_scans = scans(incremental_dedup(prepared_spark, materialize=False))
-    mat_scans = scans(incremental_dedup(prepared_spark, materialize=True))
+    mat_scans = scans(incremental_dedup(prepared_spark))
     assert mat_scans <= 8, mat_scans
-    assert lazy_scans > 3 * mat_scans, (lazy_scans, mat_scans)
 
 
 def test_incremental_dedup_default_is_sink_shape(prepared_spark):
@@ -226,12 +223,11 @@ def test_incremental_dedup_default_is_sink_shape(prepared_spark):
         return plan.count("Scan parquet") + plan.count("FileScan")
 
     default_scans = scans(incremental_dedup(prepared_spark))
-    mat_scans = scans(incremental_dedup(prepared_spark, materialize=True))
-    assert default_scans == mat_scans, (default_scans, mat_scans)
+    assert default_scans <= 8, default_scans
 
     registry.load_all()
     registered = registry.REGISTRY["ml_incremental_dedup"].spark_fn
-    assert scans(registered(prepared_spark)) == mat_scans
+    assert scans(registered(prepared_spark)) == default_scans
 
 
 def test_bpe_encode_default_is_linear_shape(prepared_spark):
@@ -240,8 +236,7 @@ def test_bpe_encode_default_is_linear_shape(prepared_spark):
     read once for the vocab fold, once for the doc join, at ANY round
     count) and the registered form IS the default — unlike incremental
     dedup, the cluster shape also wins at bench scale (sf0.1 steady-state
-    2.6 s vs 4.0 s recompute). The lazy form's 2^rounds lineage doubling
-    is pinned so a regression in either direction is visible."""
+    2.6 s vs 4.0 s recompute)."""
     from collector_spark import registry
     from collector_spark.ml.curation import bpe_encode
 
@@ -250,9 +245,7 @@ def test_bpe_encode_default_is_linear_shape(prepared_spark):
         return plan.count("Scan parquet") + plan.count("FileScan")
 
     default_scans = scans(bpe_encode(prepared_spark))
-    lazy_scans = scans(bpe_encode(prepared_spark, materialize=False))
     assert default_scans <= 4, default_scans
-    assert lazy_scans > 3 * default_scans, (lazy_scans, default_scans)
 
     registry.load_all()
     registered = registry.REGISTRY["ml_bpe_encode"].spark_fn

@@ -177,10 +177,14 @@ def test_separator_bytes_outside_captures_classify_as_two_pass(spark):
 
 def test_rewrite_groups_equals_regexp_extract(spark):
     """The generic helper vs per-group regexp_extract, same JVM regex, on
-    the 53-group autovacuum vector across all six version variants."""
+    the 53-group autovacuum vector across all six version variants, and on
+    disconnection lines holding a separator byte: inside the ``host=``
+    capture (a stitched continuation line under ``[^ ]+``), which would
+    shift the split, and in the unmatched tail."""
     from collector_spark.logs.classify import (
         _AV_FULL_NAMES,
         AUTOVACUUM_FULL_RE,
+        DISCONNECT_RE,
         _rewrite_groups,
     )
     from collector_spark.logs.rules import _autovacuum_sample
@@ -195,26 +199,35 @@ def test_rewrite_groups_equals_regexp_extract(spark):
         ).fetchall()
     ]
     con.close()
-    df = spark.createDataFrame([(b,) for b in lines], "content string").filter(
-        F.col("content").rlike(AUTOVACUUM_FULL_RE)
-    )
-    assert df.count() == len(lines)  # every variant matches
-    n = len(_AV_FULL_NAMES)
-    staged = df.select(
-        "content", _rewrite_groups(AUTOVACUUM_FULL_RE, n).alias("_g")
-    )
-    checks = staged.select(
-        *[
-            (
-                F.get(F.col("_g"), i)
-                == F.regexp_extract("content", AUTOVACUUM_FULL_RE, i + 1)
-            ).alias(f"g{i + 1}")
-            for i in range(n)
-        ]
-    )
-    for row in checks.collect():
-        bad = [k for k, v in row.asDict().items() if v is not True]
-        assert not bad, f"groups diverge from regexp_extract: {bad}"
+    disconnect = "disconnection: session time: 0:00:01.234 user=app database=orders"
+    cases = [
+        (AUTOVACUUM_FULL_RE, len(_AV_FULL_NAMES), lines),
+        (
+            DISCONNECT_RE,
+            6,
+            [
+                f"{disconnect} host=10.0.0.1 port=5432",
+                f"{disconnect} host=10.0.0.1\n\x01archive\x01x",
+                f"{disconnect} host=[local] tail\x01x",
+            ],
+        ),
+    ]
+    for regex, n, bodies in cases:
+        df = spark.createDataFrame([(b,) for b in bodies], "content string").filter(
+            F.col("content").rlike(regex)
+        )
+        assert df.count() == len(bodies)  # every variant matches
+        checks = _rewrite_groups(df, regex, n).select(
+            *[
+                (
+                    F.get(F.col("_g"), i) == F.regexp_extract("content", regex, i + 1)
+                ).alias(f"g{i + 1}")
+                for i in range(n)
+            ]
+        )
+        for row in checks.collect():
+            bad = [k for k, v in row.asDict().items() if v is not True]
+            assert not bad, f"groups diverge from regexp_extract: {bad}"
 
 
 def test_stitch_state_ingest_vectorized_matches_row_loop():

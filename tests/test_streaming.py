@@ -6,6 +6,7 @@ loss, and rotation with no line lost or duplicated."""
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pytest
 
@@ -175,49 +176,19 @@ def test_stream_buckets_append_mode_emits_only_closed_windows(prepared_spark):
     delay — so the append run must emit exactly the complete-mode result
     MINUS windows the final watermark never closed. The state store cannot
     retain evicted windows, which is the bounded-state contract at scale."""
-    import os
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from collector_spark.streaming import stat_buckets as SB
+    from collector_spark.streaming.replay import run_to_completion
 
     spark = prepared_spark
     complete = SB.stream_stat_buckets(spark, None).collect()
-
-    run_id = uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "collector_spark_buckets_append", run_id)
-    sf = __import__("collector_spark.tables", fromlist=["LAST_SF_DIR"]).LAST_SF_DIR
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    ts_type = dict(zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])).get("ts")
-    if ts_type == "bigint":
-        ts = F.timestamp_micros(F.expr("ts DIV 1000"))
-    else:
-        ts = F.col("ts").cast("timestamp")
-    events = raw.select("event_id", ts.alias("ts"))
-    qname = f"buckets_append_{run_id}"
-    q = (
-        SB.windowed_counts(events)
-        .select(F.col("w.start").alias("window_start"), "key", "calls", "rows")
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    appended = spark.table(qname).collect()
+    appended = run_to_completion(
+        SB.windowed_counts(SB.events_stream(spark)).select(
+            F.col("w.start").alias("window_start"), "key", "calls", "rows"
+        ),
+        "append",
+    ).collect()
 
     ckey = {(r["window_start"], r["key"]): (r["calls"], r["rows"]) for r in complete}
     akey = {(r["window_start"], r["key"]): (r["calls"], r["rows"]) for r in appended}
@@ -247,15 +218,15 @@ def test_manifest_score_stream_kill_resume_idempotent(prepared_spark, tmp_path):
 
     from collector_spark.ml.curation import curation_manifest
     from collector_spark.streaming.doc_stream import (
-        _write_arrival_log,
         compose_manifest,
         start_manifest_streams,
     )
+    from collector_spark.streaming.replay import stage_replay
 
     spark = prepared_spark
     run_dir = str(tmp_path / "manifest_run")
     src = os.path.join(run_dir, "src")
-    _write_arrival_log(spark, src, 6)
+    stage_replay(spark.table("documents"), "doc_id", 6, src)
 
     # deterministic kill point: hide the newest half of the arrival log, so
     # leg 1's availableNow drains exactly the first 3 files and terminates
@@ -318,15 +289,15 @@ def test_manifest_state_leg_update_sink_kill_resume(prepared_spark, tmp_path):
     from collector_spark.ml.dedup import minhash_candidate_pairs
     from collector_spark.streaming.doc_stream import (
         _expand_bucket_pairs,
-        _write_arrival_log,
         compact_state_updates,
         start_manifest_state_updates,
     )
+    from collector_spark.streaming.replay import stage_replay
 
     spark = prepared_spark
     run_dir = str(tmp_path / "state_run")
     src = os.path.join(run_dir, "src")
-    _write_arrival_log(spark, src, 6)
+    stage_replay(spark.table("documents"), "doc_id", 6, src)
 
     # kill point: hide the newest half, drain, then restore and resume
     hidden = str(tmp_path / "hidden")
@@ -398,17 +369,17 @@ def test_incremental_screen_kill_resume_idempotent(prepared_spark, tmp_path):
     directory instead of appending duplicates."""
     import os
 
-    from collector_spark.ml.dedup import incremental_dedup
+    from collector_spark.ml.dedup import _inc_is_incoming, incremental_dedup
     from collector_spark.streaming.doc_stream import (
-        _write_incoming_log,
         collect_incremental_results,
         start_incremental_screen,
     )
+    from collector_spark.streaming.replay import stage_replay
 
     spark = prepared_spark
     run_dir = str(tmp_path / "inc_run")
     src = os.path.join(run_dir, "src")
-    _write_incoming_log(spark, src, 4)
+    stage_replay(spark.table("documents").filter(_inc_is_incoming()), "doc_id", 4, src)
 
     hidden = str(tmp_path / "hidden")
     os.makedirs(hidden)
@@ -442,3 +413,89 @@ def test_incremental_screen_kill_resume_idempotent(prepared_spark, tmp_path):
     assert streamed.select("doc_id").distinct().count() == batch.count()
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
+
+
+def test_harness_restores_partitions_and_removes_run_dirs(
+    prepared_spark, tmp_path, monkeypatch
+):
+    """The streaming harness (collector_spark/streaming/replay.py) scopes
+    the state width to one query start and leaves nothing behind: the
+    session's ``spark.sql.shuffle.partitions`` is unchanged after a run
+    and after a query that fails at ``start()``, and the run's checkpoint
+    and staged source dirs are gone once the result is returned."""
+    from pyspark.errors import AnalysisException
+
+    from collector_spark.streaming.doc_stream import stream_exact_dedup
+    from collector_spark.streaming.replay import run_to_completion
+    from collector_spark.streaming.stat_buckets import stream_stat_buckets
+
+    spark = prepared_spark
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "13")
+    try:
+        assert stream_stat_buckets(spark).count() > 0
+        assert stream_exact_dedup(spark, 3).count() > 0
+        assert spark.conf.get(key) == "13"
+        assert os.listdir(scratch) == []
+
+        # append mode over an unwatermarked aggregation fails at start()
+        bad = spark.readStream.format("rate").load().groupBy("value").count()
+        with pytest.raises(AnalysisException):
+            run_to_completion(bad, "append")
+        assert spark.conf.get(key) == "13"
+        assert os.listdir(scratch) == []
+    finally:
+        spark.conf.set(key, prev)
+    assert not spark.streams.active
+
+
+def test_stage_replay_mtimes_follow_key_order(spark, tmp_path):
+    """The file source replays oldest-modification-first, so the staged
+    files' mtimes must rise strictly in key order (fall with reverse)."""
+    import pyarrow.parquet as pq
+
+    from collector_spark.streaming.replay import stage_replay
+
+    df = spark.range(200).selectExpr("(id * 7919) % 200 AS k", "id")
+    for reverse in (False, True):
+        path = stage_replay(df, "k", 4, str(tmp_path / f"rev{reverse}"), reverse)
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        assert len(files) == 4
+        by_mtime = sorted(files, key=lambda f: os.path.getmtime(os.path.join(path, f)))
+        mtimes = [os.path.getmtime(os.path.join(path, f)) for f in by_mtime]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+        keys = [pq.read_table(os.path.join(path, f)).column("k").to_pylist() for f in by_mtime]
+        for ks in keys:
+            assert ks == sorted(ks)  # sorted within each arrival batch
+        order = list(reversed(keys)) if reverse else keys
+        assert all(a[-1] < b[0] for a, b in zip(order, order[1:])), order
+
+
+def test_stream_staging_and_state_width_live_only_in_the_harness():
+    """One harness: under collector_spark/, only streaming/replay.py sets
+    ``spark.sql.shuffle.partitions`` at runtime or staggers file mtimes
+    (the SparkSession default that session.py configures is not a runtime
+    set)."""
+    import re
+
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "collector_spark")
+    harness = os.path.join(root, "streaming", "replay.py")
+    sets_width = re.compile(
+        r"""(?:\.set\(|\bSET\s)\s*['"]?spark\.sql\.shuffle\.partitions"""
+    )
+    utime = re.compile(r"\butime\(")
+    offenders = []
+    for dirpath, _, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == harness:
+                continue
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            if sets_width.search(src) or utime.search(src):
+                offenders.append(os.path.relpath(path, root))
+    assert not offenders, offenders
