@@ -76,16 +76,21 @@ def _words(col: Column) -> Column:
     return F.split(F.lower(col), " ")
 
 
-# Exact-dup content identity: md5 over whitespace-normalized lowered text.
-# ONE definition feeds exact_dup_groups, the span stage, and the span
-# candidate generator (plus all three oracles via _SQL_NORM_HASH /
+# Content identity: whitespace-normalized lowered text. ONE definition
+# feeds every content hash (exact_dup_groups, the span stage and its
+# candidate generator, the incremental and Bloom screens, the streaming
+# exact fold, the textstats fingerprints; the oracles via _SQL_NORM_HASH /
 # _SQL_CANON) so the keep filter cannot drift between consumers.
 
 _SQL_NORM_HASH = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
 
 
+def _norm_text() -> Column:
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+
+
 def _norm_hash() -> Column:
-    return F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
+    return F.md5(_norm_text())
 
 
 def _exact_canonicals(docs: DataFrame) -> DataFrame:
@@ -220,6 +225,12 @@ def _signatures_from(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+# oracle twin of _signatures_from, over a CTE named sh
+_SQL_MINS = ", ".join(
+    f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}" for i in range(K)
+)
+
+
 def minhash_signatures(spark: SparkSession) -> DataFrame:
     """K minhash values per doc (one explode + one groupBy)."""
     sh = _shingle_hashes(spark.table("documents"))
@@ -227,12 +238,9 @@ def minhash_signatures(spark: SparkSession) -> DataFrame:
 
 
 def oracle_minhash_signatures() -> str:
-    mins = ", ".join(
-        f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}" for i in range(K)
-    )
     return f"""
 WITH sh AS ({_SQL_SHINGLES})
-SELECT doc_id, {mins} FROM sh GROUP BY doc_id ORDER BY doc_id
+SELECT doc_id, {_SQL_MINS} FROM sh GROUP BY doc_id ORDER BY doc_id
 """
 
 
@@ -242,6 +250,18 @@ def _band_cols(rows: int | None = None) -> list[tuple[str, list[str]]]:
     return [
         (f"band{b}", [f"mh{b * rows + r}" for r in range(rows)]) for b in range(bands)
     ]
+
+
+def _sql_band_buckets(rows: int | None = None, extra: str = "") -> str:
+    """Oracle twin of _band_buckets over a CTE named sig; ``extra`` adds
+    columns to every band's SELECT."""
+    selects = []
+    for b, (name, cols) in enumerate(_band_cols(rows)):
+        concat = " || ',' || ".join(
+            [f"'{b}'"] + [f"CAST({c} AS VARCHAR)" for c in cols]
+        )
+        selects.append(f"SELECT doc_id, md5({concat}) AS bucket{extra} FROM sig")
+    return " UNION ALL ".join(selects)
 
 
 def _band_buckets(sig: DataFrame, rows_per_band: int | None = None) -> DataFrame:
@@ -257,28 +277,38 @@ def _band_buckets(sig: DataFrame, rows_per_band: int | None = None) -> DataFrame
     return sig.select("doc_id", F.explode(F.array(*keys)).alias("bucket"))
 
 
-def _pairs_from_buckets(buckets: DataFrame) -> DataFrame:
-    # pair generation by per-bucket expansion instead of a bucket self-join:
-    # a self-join recomputes the whole signature subtree per branch (no
-    # exchange reuse across build/probe sides), while groupBy(bucket) +
-    # inline pair transform computes it once and shuffles each (doc, band
-    # key) exactly once. Bucket size stays the skew/blowup knob either way.
+# Pair generation by per-bucket expansion instead of a bucket self-join: a
+# self-join recomputes the whole bucket subtree per branch (no exchange
+# reuse across build/probe sides), while groupBy(bucket) + inline pair
+# transform computes it once and shuffles each (member, bucket) row exactly
+# once. Bucket size stays the skew/blowup knob either way.
+_BUCKET_PAIRS = (
+    "flatten(transform(ids, (a, i) -> "
+    "transform(slice(ids, i + 2, size(ids) - i - 1), "
+    "b -> struct(a AS doc_a, b AS doc_b))))"
+)
+
+
+def _bucket_pairs(
+    rows: DataFrame, bucket: str, member: str, cap: int | None = None
+) -> DataFrame:
+    """Every (doc_a < doc_b) pair of ``member`` values sharing a ``bucket``
+    of ``rows`` — one row per (bucket, pair), so callers either dedupe or
+    count. Buckets with more than ``cap`` members are dropped before the
+    expansion: the worst case is cap^2/2 pairs per bucket, in the plan."""
+    ids = rows.groupBy(bucket).agg(F.sort_array(F.collect_set(member)).alias("ids"))
+    keep = F.size("ids") > 1
+    if cap is not None:
+        keep = keep & (F.size("ids") <= cap)
     return (
-        buckets.groupBy("bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= LSH_BUCKET_CAP))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "b -> struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
+        ids.filter(keep)
+        .select(F.explode(F.expr(_BUCKET_PAIRS)).alias("p"))
         .select("p.doc_a", "p.doc_b")
-        .distinct()
     )
+
+
+def _pairs_from_buckets(buckets: DataFrame) -> DataFrame:
+    return _bucket_pairs(buckets, "bucket", "doc_id", LSH_BUCKET_CAP).distinct()
 
 
 def _candidate_pairs_from(sig: DataFrame, rows_per_band: int | None = None) -> DataFrame:
@@ -299,17 +329,10 @@ def minhash_candidate_pairs(spark: SparkSession) -> DataFrame:
 
 
 def oracle_minhash_candidate_pairs() -> str:
-    mins = ", ".join(
-        f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}" for i in range(K)
-    )
-    band_selects = []
-    for b, (name, cols) in enumerate(_band_cols()):
-        concat = " || ',' || ".join([f"'{b}'"] + [f"CAST({c} AS VARCHAR)" for c in cols])
-        band_selects.append(f"SELECT doc_id, md5({concat}) AS bucket FROM sig")
-    buckets = " UNION ALL ".join(band_selects)
+    buckets = _sql_band_buckets()
     return f"""
 WITH sh AS ({_SQL_SHINGLES_CANON}),
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+sig AS (SELECT doc_id, {_SQL_MINS} FROM sh GROUP BY doc_id),
 buckets AS ({buckets}),
 ok AS (
   SELECT bucket FROM buckets
@@ -353,16 +376,67 @@ def _persisted_shingles(
     return sh
 
 
+def _doc_sizes(sh: DataFrame) -> DataFrame:
+    return sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+
+
+def _shingle_overlap(
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    pairs: DataFrame | None = None,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    sizes_a: DataFrame | None = None,
+    sizes_b: DataFrame | None = None,
+) -> DataFrame:
+    """The verify kernel of the similarity join: (a, b, inter = |A∩B|,
+    n_a = |A|, n_b = |B|, jaccard = |A∩B| / |A∪B|) over two (doc_id, h)
+    shingle relations. With ``pairs`` — an (a, b) candidate relation —
+    exactly those pairs are scored (filter-then-verify); without, every
+    pair sharing a shingle is (the exhaustive truth side), once per
+    unordered pair (a < b) when both sides are the same relation. Sizes
+    default to each side's per-doc shingle counts. All integer counts and
+    one double division: exact, and identical in both engines."""
+    la = sh_a.select(F.col("doc_id").alias(a), "h")
+    rb = sh_b.select(F.col("doc_id").alias(b), "h")
+    if pairs is not None:
+        hits = pairs.join(la, a).join(rb, [b, "h"])
+    elif sh_a is sh_b:
+        hits = la.join(rb, "h").filter(F.col(a) < F.col(b))
+    else:
+        hits = la.join(rb, "h")
+    if sizes_a is None:
+        sizes_a = _doc_sizes(sh_a)
+    if sizes_b is None:
+        sizes_b = sizes_a if sh_b is sh_a else _doc_sizes(sh_b)
+    inter = F.col("inter")
+    return (
+        hits.groupBy(a, b)
+        .agg(F.count("*").alias("inter"))
+        .join(sizes_a.select(F.col("doc_id").alias(a), F.col("n").alias("n_a")), a)
+        .join(sizes_b.select(F.col("doc_id").alias(b), F.col("n").alias("n_b")), b)
+        .select(
+            a,
+            b,
+            "inter",
+            "n_a",
+            "n_b",
+            (
+                inter.cast("double")
+                / (F.col("n_a") + F.col("n_b") - inter).cast("double")
+            ).alias("jaccard"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     spark: SparkSession,
     threshold: float = 0.5,
     cand: DataFrame | None = None,
     canon: DataFrame | None = None,
 ) -> DataFrame:
-    """Verify stage: exact shingle Jaccard for LSH candidate pairs.
-
-    intersection via join on (h), sizes via per-doc counts; similarity =
-    |A∩B| / (|A| + |B| - |A∩B|). All integer counts — exact.
+    """Verify stage: exact shingle Jaccard for LSH candidate pairs
+    (_shingle_overlap over the candidates).
 
     The shingle relation feeds four consumers (signatures, intersection x2,
     sizes); persisting it once keeps the dominant explode+distinct from
@@ -372,31 +446,12 @@ def ngram_jaccard_pairs(
     sh = _persisted_shingles(spark, canon)
     if cand is None:
         cand = _candidate_pairs_from(_signatures_from(sh))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id")) & (F.col("sa.h") == F.col("sb.h")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.alias("na"), F.col("doc_a") == F.col("na.doc_id"))
-        .join(sizes.alias("nb"), F.col("doc_b") == F.col("nb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na.n") + F.col("nb.n") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
+    return (
+        _shingle_overlap(sh, sh, cand)
+        .select("doc_a", "doc_b", "jaccard")
         .filter(F.col("jaccard") >= threshold)
         .orderBy("doc_a", "doc_b")
     )
-    return out
 
 
 def oracle_ngram_jaccard_pairs(threshold: float = 0.5) -> str:
@@ -424,64 +479,88 @@ ORDER BY i.doc_a, i.doc_b
 """
 
 
-def connected_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Min-label propagation over an undirected pair graph: label(v) starts
-    at v; each round takes the min of a node's label and its neighbors'
-    labels until a fixed point. Rounds are one join + one groupBy each, all
-    distributed; ``localCheckpoint`` truncates lineage so the plan doesn't
-    deepen per round. Convergence needs O(diameter) rounds and the cap
-    asserts rather than silently emitting a partial labeling. For
-    adversarially long chain graphs swap the body for alternating
-    large-star/small-star (same per-round shuffle shape, O(log n) rounds).
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of an undirected pair graph by alternating
+    large-star/small-star contraction (Kiveris et al. 2014, "Connected
+    Components in MapReduce and Beyond"; E47, the O(log n)-round path that
+    replaced min-label propagation). Input: (doc_a, doc_b) pairs.
+    Output: (node, label) with label = the minimum node id reachable,
+    checkpointed.
 
-    Input: (doc_a, doc_b) pairs. Output: (node, label) with label = the
-    minimum node id reachable.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    Each round derives m(u) = min(u, Γ(u)) and deg(u) from one groupBy(u)
+    over the checkpointed symmetric edge set. The graph is done when no
+    node with a smaller neighbour (m(u) < u) has a second neighbour: that
+    holds exactly when every component is a star centred on its minimum,
+    so label = m(u). A star-forest input therefore pays zero contraction
+    rounds. Otherwise large-star (even rounds: strictly larger neighbours
+    attach to m(u)) and small-star (odd rounds: u and its smaller
+    neighbours attach to m(u)) rewrite the edge set, one lazy
+    localCheckpoint per round so lineage stays flat. Measured rounds: the
+    sf0.01 near-dup pair graph 1, an ordered 60-node chain 11, 300 nodes
+    17, 1000 nodes 19. The round cap is log2(n)^2 of the node count n
+    (the alternation's O(log^2 n) bound) and raises rather than emit a
+    partial labeling."""
+
+    def sym(e: DataFrame) -> DataFrame:
+        swapped = e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        return e.unionByName(swapped).distinct()
+
+    no_loop = F.col("u") != F.col("v")
+    # the one pass over the (lazy, possibly deep) pairs lineage; self-loops
+    # stay in it so a pure self-loop node remains a (singleton) component
+    linked = sym(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    ).localCheckpoint(eager=False)
+    nodes = linked.select("u").distinct()
+    max_rounds = nodes.count().bit_length() ** 2
+    edges = linked.filter(no_loop)
+    r = 0
+    while True:
+        # m stays lazy: one groupBy over the (lazily) checkpointed edges,
+        # which this round's check materializes
+        m = edges.groupBy("u").agg(
+            F.least(F.col("u"), F.min("v")).alias("m"),
+            F.count("*").alias("deg"),
         )
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    label_t = dict(labels.dtypes)["label"]
-    for _ in range(max_rounds):
-        nbr = edges.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).select(F.col("dst").alias("node"), "label")
-        # the node's previous label rides the SAME fold (every node has
-        # exactly one labels row, so min(_old) recovers it): the changed
-        # check then filters the freshly checkpointed rows instead of
-        # paying a join job per round (r12 optimization — at toy/fixture
-        # graph sizes the loop is pure per-round job latency, and this
-        # removes one shuffle join from every round; labels per round are
-        # unchanged, min over the same multiset)
-        new_labels = (
-            labels.select("node", "label", F.col("label").alias("_old"))
-            .unionByName(
-                nbr.select(
-                    "node", "label", F.lit(None).cast(label_t).alias("_old")
-                )
-            )
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.min("_old").alias("_old"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.filter(F.col("label") != F.col("_old")).limit(1).count()
-        )
-        labels = new_labels.select("node", "label")
-        if changed == 0:
+        hub = m.filter((F.col("m") < F.col("u")) & (F.col("deg") > 1))
+        if hub.limit(1).count() == 0:
             break
-    else:
-        raise RuntimeError("connected_components: label propagation did not converge")
-    return labels
+        if r == max_rounds:
+            raise RuntimeError(
+                f"connected_components: no star forest after {r} rounds"
+            )
+        side = F.col("v") > F.col("u") if r % 2 == 0 else F.col("v") < F.col("u")
+        out = edges.filter(side).join(m, "u").select(
+            F.col("v").alias("u"), F.col("m").alias("v")
+        )
+        if r % 2 == 1:
+            out = out.unionByName(m.select("u", F.col("m").alias("v")))
+        edges = sym(out).filter(no_loop).localCheckpoint(eager=False)
+        r += 1
+    return (
+        nodes.join(m, "u", "left")
+        .select(F.col("u").alias("node"), F.coalesce("m", "u").alias("label"))
+        .localCheckpoint()
+    )
+
+
+def _clusters(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Cluster rows of a (doc_a, doc_b) pair graph: one row per node in
+    any pair — (id_col, cluster_id = min reachable id, cluster_size,
+    is_canonical), unsorted."""
+    labels = connected_components(pairs)
+    sizes = labels.groupBy("label").agg(F.count("*").cast("long").alias("cluster_size"))
+    # plain key join, NOT broadcast: cluster count is data-scaled (on a
+    # web-crawl corpus a large fraction of docs participate in clusters), so
+    # a forced broadcast would collect a billion-row relation to the driver
+    # at 100 TB. Both sides hash-partition on `label`; AQE may still choose
+    # broadcast at toy scale where it is actually safe.
+    return labels.join(sizes, "label").select(
+        F.col("node").alias(id_col),
+        F.col("label").alias("cluster_id"),
+        "cluster_size",
+        (F.col("node") == F.col("label")).alias("is_canonical"),
+    )
 
 
 def dup_clusters(
@@ -502,23 +581,7 @@ def dup_clusters(
     pairs = ngram_jaccard_pairs(spark, threshold, cand, canon).select(
         "doc_a", "doc_b"
     )
-    labels = connected_components(pairs)
-    sizes = labels.groupBy("label").agg(F.count("*").cast("long").alias("cluster_size"))
-    # plain key join, NOT broadcast: cluster count is data-scaled (on a
-    # web-crawl corpus a large fraction of docs participate in clusters), so
-    # a forced broadcast would collect a billion-row relation to the driver
-    # at 100 TB. Both sides hash-partition on `label`; AQE may still choose
-    # broadcast at toy scale where it is actually safe.
-    return (
-        labels.join(sizes, "label")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-            (F.col("node") == F.col("label")).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
+    return _clusters(pairs).orderBy("doc_id")
 
 
 def oracle_dup_clusters(threshold: float = 0.5) -> str:
@@ -839,22 +902,7 @@ def _span_candidate_pairs(spark: SparkSession) -> DataFrame:
     knob for AQE."""
     docs = spark.table("documents")
     grams = _span_gram_hashes(_exact_canonicals(docs), distinct=True)
-    return (
-        grams.groupBy("h")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "b -> struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    return _bucket_pairs(grams, "h", "doc_id").distinct()
 
 
 def ngram_containment_pairs(
@@ -866,36 +914,17 @@ def ngram_containment_pairs(
     into the generator — see _span_candidate_pairs), plus a flag for pairs
     containment catches that Jaccard (at its 0.5 gate) would miss."""
     sh = _persisted_shingles(spark)
-    cand = _span_candidate_pairs(spark)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id")) & (F.col("sa.h") == F.col("sb.h")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = (
-        F.col("inter").cast("double")
-        / (F.col("na.n") + F.col("nb.n") - F.col("inter")).cast("double")
-    )
-    cont = F.col("inter").cast("double") / F.least(
-        F.col("na.n"), F.col("nb.n")
-    ).cast("double")
+    scored = _shingle_overlap(sh, sh, _span_candidate_pairs(spark))
+    cont = F.col("inter").cast("double") / F.least("n_a", "n_b").cast("double")
+    jac = F.col("jaccard")
     return (
-        inter.join(sizes.alias("na"), F.col("doc_a") == F.col("na.doc_id"))
-        .join(sizes.alias("nb"), F.col("doc_b") == F.col("nb.doc_id"))
-        .select(
+        scored.select(
             "doc_a",
             "doc_b",
             cont.alias("containment"),
-            jac.alias("jaccard"),
+            jac,
             (cont >= F.lit(threshold)).alias("contained"),
-            ((cont >= F.lit(threshold)) & (jac < F.lit(0.5))).alias(
-                "subset_only"
-            ),
+            ((cont >= F.lit(threshold)) & (jac < F.lit(0.5))).alias("subset_only"),
         )
         .filter(F.col("containment") >= threshold)
         .orderBy("doc_a", "doc_b")
@@ -971,19 +1000,8 @@ def source_overlap(spark: SparkSession) -> DataFrame:
     )
     sizes = grams.groupBy("source").agg(F.count("*").cast("long").alias("n_grams"))
     pairs = (
-        grams.groupBy("h")
-        .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .filter(F.size("ss") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ss, (a, i) -> "
-                    "transform(slice(ss, i + 2, size(ss) - i - 1), "
-                    "b -> struct(a AS s_a, b AS s_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.s_a", "p.s_b")
+        _bucket_pairs(grams, "h", "source")
+        .groupBy(F.col("doc_a").alias("s_a"), F.col("doc_b").alias("s_b"))
         .agg(F.count("*").cast("long").alias("shared"))
     )
     # emit both directions: containment is asymmetric
@@ -1034,115 +1052,6 @@ FROM directed b
 JOIN sizes z ON z.source = b.s_a
 ORDER BY source, other_source
 """
-
-
-# ---------------------------------------------------------------------------
-# E47 — alternating large-star/small-star connected components (Kiveris et
-# al. 2014, "Connected Components in MapReduce and Beyond"): the
-# O(log n)-round scale path the min-label docstring promises for
-# adversarially deep graphs (a 10^6-long duplicate chain needs 10^6
-# min-label rounds but ~20 star rounds). Per round: one groupBy(u) for
-# m(u) = min(Γ(u) ∪ {u}), one join back, a union, a distinct — the same
-# bounded shuffle shape as one min-label round.
-# ---------------------------------------------------------------------------
-
-
-def connected_components_star(pairs: DataFrame, max_rounds: int = 16) -> DataFrame:
-    """Same contract as connected_components: input (doc_a, doc_b) pairs,
-    output (node, label) with label = min reachable node id."""
-
-    def sym(e: DataFrame) -> DataFrame:
-        return (
-            e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def norm(e: DataFrame) -> DataFrame:
-        return e.select(
-            F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
-        ).distinct()
-
-    edges = sym(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    ).localCheckpoint()
-    # node set from the RAW pairs: a pure self-loop node has no surviving
-    # symmetric edge but is still its own (singleton) component
-    nodes = (
-        pairs.select(F.col("doc_a").alias("u"))
-        .unionByName(pairs.select(F.col("doc_b").alias("u")))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_norm = None
-    for r in range(max_rounds):
-        m = (
-            edges.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least(F.col("u"), F.col("mv")).alias("m"))
-        )
-        if r % 2 == 0:
-            # large-star: strictly larger neighbors attach to m(u)
-            out = (
-                edges.filter(F.col("v") > F.col("u"))
-                .join(m, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-        else:
-            # small-star: u and its smaller neighbors attach to m(u)
-            nbrs = (
-                edges.filter(F.col("v") < F.col("u"))
-                .join(m, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            out = nbrs.unionByName(m.select("u", F.col("m").alias("v")))
-        edges = sym(out).localCheckpoint()
-        if r % 2 == 1:
-            cur_norm = norm(edges).localCheckpoint()
-            if prev_norm is not None:
-                changed = (
-                    cur_norm.exceptAll(prev_norm)
-                    .unionByName(prev_norm.exceptAll(cur_norm))
-                    .limit(1)
-                    .count()
-                )
-                if changed == 0:
-                    break
-            prev_norm = cur_norm
-    else:
-        raise RuntimeError("connected_components_star: did not converge")
-    # fixed point is a star forest centered at each component's min: every
-    # node's label is min(self, neighbors)
-    final_m = (
-        edges.groupBy("u")
-        .agg(F.min("v").alias("mv"))
-        .select("u", F.least(F.col("u"), F.col("mv")).alias("label"))
-    )
-    return nodes.join(final_m, "u", "left").select(
-        F.col("u").alias("node"),
-        F.coalesce("label", F.col("u")).alias("label"),
-    )
-
-
-def dup_clusters_star(spark: SparkSession, threshold: float = 0.5) -> DataFrame:
-    """dup_clusters through the star-contraction CC — identical output
-    (same verified pair graph, same labels), so the SAME recursive-closure
-    oracle verifies it; registered to pin the log-round path end to end."""
-    pairs = ngram_jaccard_pairs(spark, threshold).select("doc_a", "doc_b")
-    labels = connected_components_star(pairs)
-    sizes = labels.groupBy("label").agg(
-        F.count("*").cast("long").alias("cluster_size")
-    )
-    return (
-        labels.join(sizes, "label")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-            (F.col("node") == F.col("label")).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1199,25 +1108,21 @@ WHERE sh.h NOT IN (
 """
 
 
-def lsh_dedup_recall(spark: SparkSession) -> DataFrame:
-    # truth Jaccard over informative canonical shingles (TRUTH_BUCKET_CAP
-    # anti-joined), materialized ONCE per session (localCheckpoint) — the
-    # candidate side is the production banding (canonical-first +
-    # LSH_BUCKET_CAP) being measured, over the same keep-set universe
-    truth = _checkpointed_truth(spark)
-    cand = _candidate_pairs_from(_signatures_from(_persisted_shingles(spark))).withColumn(
-        "c", F.lit(1)
-    )
-    flagged = truth.join(cand, on=["doc_a", "doc_b"], how="left")
-    exploded = flagged.select(
-        "jaccard",
-        "c",
-        F.explode(
-            F.array(*[F.lit(float(t)) for t in RECALL_THRESHOLDS])
-        ).alias("threshold"),
-    ).filter(F.col("jaccard") >= F.col("threshold"))
+def _recall_by_threshold(truth: DataFrame, cand: DataFrame) -> DataFrame:
+    """(threshold, truth_pairs, caught_pairs, recall): the share of the
+    exact-Jaccard truth pairs at or above each RECALL_THRESHOLDS cut that
+    the (doc_a, doc_b) candidate relation surfaces."""
+    flagged = truth.join(cand.withColumn("c", F.lit(1)), ["doc_a", "doc_b"], "left")
     return (
-        exploded.groupBy("threshold")
+        flagged.select(
+            "jaccard",
+            "c",
+            F.explode(
+                F.array(*[F.lit(float(t)) for t in RECALL_THRESHOLDS])
+            ).alias("threshold"),
+        )
+        .filter(F.col("jaccard") >= F.col("threshold"))
+        .groupBy("threshold")
         .agg(
             F.count("*").cast("long").alias("truth_pairs"),
             F.count("c").cast("long").alias("caught_pairs"),
@@ -1231,7 +1136,17 @@ def lsh_dedup_recall(spark: SparkSession) -> DataFrame:
                 / F.col("truth_pairs").cast("double")
             ).alias("recall"),
         )
-        .orderBy("threshold")
+    )
+
+
+def lsh_dedup_recall(spark: SparkSession) -> DataFrame:
+    # truth Jaccard over informative canonical shingles (TRUTH_BUCKET_CAP
+    # anti-joined), materialized ONCE per session (localCheckpoint) — the
+    # candidate side is the production banding (canonical-first +
+    # LSH_BUCKET_CAP) being measured, over the same keep-set universe
+    cand = _candidate_pairs_from(_signatures_from(_persisted_shingles(spark)))
+    return _recall_by_threshold(_checkpointed_truth(spark), cand).orderBy(
+        "threshold"
     )
 
 
@@ -1300,31 +1215,7 @@ def _jaccard_truth(sh: DataFrame) -> DataFrame:
     the TRUTH_BUCKET_CAP anti-join bounds the per-hash pair expansion
     in-plan (see the E54 block comment)."""
     sh = _truth_shingles(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        sh.alias("sa")
-        .join(
-            sh.alias("sb"),
-            (F.col("sa.h") == F.col("sb.h"))
-            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
-        )
-        .groupBy(
-            F.col("sa.doc_id").alias("doc_a"), F.col("sb.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.alias("na"), F.col("doc_a") == F.col("na.doc_id"))
-        .join(sizes.alias("nb"), F.col("doc_b") == F.col("nb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na.n") + F.col("nb.n") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
+    return _shingle_overlap(sh, sh).select("doc_a", "doc_b", "jaccard")
 
 
 def _checkpointed_truth(spark: SparkSession) -> DataFrame:
@@ -1352,43 +1243,20 @@ def lsh_tuning(spark: SparkSession) -> DataFrame:
     truth = _checkpointed_truth(spark)
     out = None
     for r in LSH_TUNING_ROWS:
-        cand = _candidate_pairs_from(sig, r).withColumn("c", F.lit(1))
-        flagged = truth.join(cand, on=["doc_a", "doc_b"], how="left")
-        theory = None
-        for t in RECALL_THRESHOLDS:
-            lit_t = F.lit(float(t))
-            branch = F.when(
-                F.col("threshold") == lit_t, F.lit(_scurve(r, float(t)))
-            )
-            theory = branch if theory is None else theory.when(
-                F.col("threshold") == lit_t, F.lit(_scurve(r, float(t)))
-            )
-        agg = (
-            flagged.select(
-                "jaccard",
-                "c",
-                F.explode(
-                    F.array(*[F.lit(float(t)) for t in RECALL_THRESHOLDS])
-                ).alias("threshold"),
-            )
-            .filter(F.col("jaccard") >= F.col("threshold"))
-            .groupBy("threshold")
-            .agg(
-                F.count("*").cast("long").alias("truth_pairs"),
-                F.count("c").cast("long").alias("caught_pairs"),
-            )
-            .select(
-                F.lit(r).cast("int").alias("rows_per_band"),
-                F.lit(K // r).cast("int").alias("n_bands"),
-                "threshold",
-                "truth_pairs",
-                "caught_pairs",
-                (
-                    F.col("caught_pairs").cast("double")
-                    / F.col("truth_pairs").cast("double")
-                ).alias("recall"),
-                theory.alias("theory_capture"),
-            )
+        theory = F.coalesce(
+            *[
+                F.when(F.col("threshold") == float(t), F.lit(_scurve(r, float(t))))
+                for t in RECALL_THRESHOLDS
+            ]
+        )
+        agg = _recall_by_threshold(truth, _candidate_pairs_from(sig, r)).select(
+            F.lit(r).cast("int").alias("rows_per_band"),
+            F.lit(K // r).cast("int").alias("n_bands"),
+            "threshold",
+            "truth_pairs",
+            "caught_pairs",
+            "recall",
+            theory.alias("theory_capture"),
         )
         out = agg if out is None else out.unionByName(agg)
     return out.orderBy("rows_per_band", "threshold")
@@ -1398,13 +1266,7 @@ def _oracle_banded_pairs(r: int) -> str:
     """Candidate-pair SQL body over the shared sig CTE for a given
     rows-per-band (mirrors _candidate_pairs_from's banding, including the
     LSH_BUCKET_CAP bucket-size bound)."""
-    band_selects = []
-    for b, (name, cols) in enumerate(_band_cols(r)):
-        concat = " || ',' || ".join(
-            [f"'{b}'"] + [f"CAST({c} AS VARCHAR)" for c in cols]
-        )
-        band_selects.append(f"SELECT doc_id, md5({concat}) AS bucket FROM sig")
-    buckets = " UNION ALL ".join(band_selects)
+    buckets = _sql_band_buckets(r)
     return (
         f"WITH bk AS ({buckets}), "
         f"ok AS (SELECT bucket FROM bk GROUP BY bucket "
@@ -1416,10 +1278,6 @@ def _oracle_banded_pairs(r: int) -> str:
 
 
 def oracle_lsh_tuning() -> str:
-    mins = ", ".join(
-        f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}"
-        for i in range(K)
-    )
     tlist = ", ".join(str(t) for t in RECALL_THRESHOLDS)
     per_config = []
     for r in LSH_TUNING_ROWS:
@@ -1443,7 +1301,7 @@ GROUP BY g.threshold""")
     union = " UNION ALL ".join(per_config)
     return f"""
 WITH sh AS ({_SQL_SHINGLES_CANON}),
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+sig AS (SELECT doc_id, {_SQL_MINS} FROM sh GROUP BY doc_id),
 sh_t AS ({_SQL_TRUTH_SH}),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh_t GROUP BY doc_id),
 truth_inter AS (
@@ -1498,25 +1356,108 @@ def _inc_is_incoming() -> Column:
     return (F.col("doc_id") % INC_BATCH_MOD) == INC_BATCH_REM
 
 
-def incremental_dedup(
-    spark: SparkSession,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    docs = spark.table("documents") if docs is None else docs
-    existing = docs.filter(~_inc_is_incoming())
-    incoming = docs.filter(_inc_is_incoming())
+_SQL_INC_FLAG = f", doc_id % {INC_BATCH_MOD} = {INC_BATCH_REM} AS inc"
 
-    # exact screen: existing corpus collapses to one row per content hash
-    ex_hash = (
+
+def _exact_screen(existing: DataFrame) -> DataFrame:
+    """The exact screen's dimension: the existing corpus collapsed to one
+    row per content hash (h, ex_exact = min doc_id)."""
+    return (
         existing.select(_norm_hash().alias("h"), "doc_id")
         .groupBy("h")
         .agg(F.min("doc_id").alias("ex_exact"))
+    )
+
+
+def _side_canonicals(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) of the exact-dup canonicals of each side, each side
+    canonicalized on its own."""
+    return (
+        _exact_canonicals(docs.filter(~_inc_is_incoming()))
+        .select("doc_id", "text")
+        .unionByName(
+            _exact_canonicals(docs.filter(_inc_is_incoming())).select(
+                "doc_id", "text"
+            )
+        )
+    )
+
+
+def _side_buckets(sh: DataFrame) -> DataFrame:
+    """(bucket, ex_ids, inc_ids): each band bucket's members split by
+    side, sorted."""
+    buckets = _band_buckets(_signatures_from(sh)).withColumn(
+        "inc", _inc_is_incoming()
+    )
+    return buckets.groupBy("bucket").agg(
+        F.sort_array(
+            F.collect_list(F.when(~F.col("inc"), F.col("doc_id")))
+        ).alias("ex_ids"),
+        F.sort_array(
+            F.collect_list(F.when(F.col("inc"), F.col("doc_id")))
+        ).alias("inc_ids"),
+    )
+
+
+def _cross_pairs(grouped: DataFrame) -> DataFrame:
+    """Distinct (ex_id, inc_id) pairs of (ex_ids, inc_ids) bucket rows:
+    the expansion crosses the sides only (the existing corpus never
+    re-pairs with itself), and a bucket whose combined membership passes
+    LSH_BUCKET_CAP is dropped before it."""
+    return (
+        grouped.filter(
+            (F.size("ex_ids") > 0)
+            & (F.size("inc_ids") > 0)
+            & (F.size("ex_ids") + F.size("inc_ids") <= LSH_BUCKET_CAP)
+        )
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ex_ids, a -> transform(inc_ids, "
+                    "b -> struct(a AS ex_id, b AS inc_id))))"
+                )
+            ).alias("p")
+        )
+        .select("p.ex_id", "p.inc_id")
+        .distinct()
+    )
+
+
+def _inc_decision(
+    incoming: DataFrame, ex_hash: DataFrame, scored: DataFrame
+) -> DataFrame:
+    """The screen's per-incoming-doc decision from the exact screen's
+    dimension and the scored (ex_id, inc_id) near pairs."""
+    near = (
+        scored.filter(F.col("jaccard") >= INC_JACCARD_THRESHOLD)
+        .groupBy("inc_id")
+        .agg(F.min("ex_id").alias("ex_near"), F.max("jaccard").alias("best_jaccard"))
     )
     inc_hashed = incoming.select("doc_id", _norm_hash().alias("h"))
     # in-batch canonical carrier for the near screen: same-content incoming
     # docs inherit their canonical's verdict (identical shingle sets)
     inc_canon_ids = inc_hashed.groupBy("h").agg(F.min("doc_id").alias("canon_id"))
+    out = (
+        inc_hashed.join(ex_hash, "h", "left")
+        .join(inc_canon_ids, "h")
+        .join(near, F.col("canon_id") == F.col("inc_id"), "left")
+    )
+    return out.select(
+        "doc_id",
+        (F.col("ex_exact").isNull() & F.col("ex_near").isNull()).alias("keep"),
+        F.when(F.col("ex_exact").isNotNull(), F.lit("exact_duplicate"))
+        .when(F.col("ex_near").isNotNull(), F.lit("near_duplicate"))
+        .alias("drop_reason"),
+        F.coalesce(F.col("ex_exact"), F.col("ex_near")).alias("matched_doc_id"),
+        "best_jaccard",
+    ).orderBy("doc_id")
 
+
+def incremental_dedup(
+    spark: SparkSession,
+    docs: DataFrame | None = None,
+) -> DataFrame:
+    docs = spark.table("documents") if docs is None else docs
     # near screen: canonical-first signatures per side, cross-side pairs only
     # One checkpoint pins the canonical union's shingles for their three
     # consumers (band buckets via signatures, both sides of the
@@ -1535,79 +1476,13 @@ def incremental_dedup(
     # checkpoint; plan showed 7 Generate nodes). Interleaved A/B at sf0.1:
     # 7.82 -> 5.63 s min-of-4 (collected outputs bit-identical). The
     # scan-collapse plan pins still hold.
-    union_canon = (
-        _exact_canonicals(existing)
-        .select("doc_id", "text")
-        .unionByName(_exact_canonicals(incoming).select("doc_id", "text"))
+    sh = _shingle_hashes(_side_canonicals(docs)).localCheckpoint(eager=False)
+    pairs = _cross_pairs(_side_buckets(sh))
+    return _inc_decision(
+        docs.filter(_inc_is_incoming()),
+        _exact_screen(docs.filter(~_inc_is_incoming())),
+        _shingle_overlap(sh, sh, pairs, "ex_id", "inc_id"),
     )
-    sh = _shingle_hashes(union_canon).localCheckpoint(eager=False)
-    buckets = _band_buckets(_signatures_from(sh)).withColumn(
-        "inc", _inc_is_incoming()
-    )
-    grouped = buckets.groupBy("bucket").agg(
-        F.sort_array(
-            F.collect_list(F.when(~F.col("inc"), F.col("doc_id")))
-        ).alias("ex_ids"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("inc"), F.col("doc_id")))
-        ).alias("inc_ids"),
-    )
-    pairs = (
-        grouped.filter(
-            (F.size("ex_ids") > 0)
-            & (F.size("inc_ids") > 0)
-            & (F.size("ex_ids") + F.size("inc_ids") <= LSH_BUCKET_CAP)
-        )
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ex_ids, a -> transform(inc_ids, "
-                    "b -> struct(a AS ex_id, b AS inc_id))))"
-                )
-            ).alias("p")
-        )
-        .select("p.ex_id", "p.inc_id")
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        pairs.join(sh.alias("sa"), F.col("ex_id") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("inc_id") == F.col("sb.doc_id"))
-            & (F.col("sa.h") == F.col("sb.h")),
-        )
-        .groupBy("ex_id", "inc_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    jaccard = F.col("inter").cast("double") / (
-        F.col("na.n") + F.col("nb.n") - F.col("inter")
-    ).cast("double")
-    verified = (
-        inter.join(sizes.alias("na"), F.col("ex_id") == F.col("na.doc_id"))
-        .join(sizes.alias("nb"), F.col("inc_id") == F.col("nb.doc_id"))
-        .select("ex_id", "inc_id", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= INC_JACCARD_THRESHOLD)
-    )
-    near = verified.groupBy("inc_id").agg(
-        F.min("ex_id").alias("ex_near"),
-        F.max("jaccard").alias("best_jaccard"),
-    )
-
-    out = (
-        inc_hashed.join(ex_hash, "h", "left")
-        .join(inc_canon_ids, "h")
-        .join(near, F.col("canon_id") == F.col("inc_id"), "left")
-    )
-    return out.select(
-        "doc_id",
-        (F.col("ex_exact").isNull() & F.col("ex_near").isNull()).alias("keep"),
-        F.when(F.col("ex_exact").isNotNull(), F.lit("exact_duplicate"))
-        .when(F.col("ex_near").isNotNull(), F.lit("near_duplicate"))
-        .alias("drop_reason"),
-        F.coalesce(F.col("ex_exact"), F.col("ex_near")).alias("matched_doc_id"),
-        "best_jaccard",
-    ).orderBy("doc_id")
 
 
 def dedup_index_write(
@@ -1633,11 +1508,6 @@ def dedup_index_write(
     docs = spark.table("documents") if docs is None else docs
     existing = docs.filter(~_inc_is_incoming())
     par = spark.sparkContext.defaultParallelism
-    ex_hash = (
-        existing.select(_norm_hash().alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("ex_exact"))
-    )
     # checkpoint AFTER the explode+hash (r12, the incremental_dedup
     # optimization): sh feeds the signature fold, the sizes aggregate, and
     # its own parquet write — three consumers that each re-ran the shingle
@@ -1645,22 +1515,16 @@ def dedup_index_write(
     # fewer bytes than the docs' text
     canon = _exact_canonicals(existing).select("doc_id", "text")
     sh = _shingle_hashes(canon).localCheckpoint(eager=False)
-    buckets = (
-        _band_buckets(_signatures_from(sh))
-        .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ex_ids"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ex_hash.repartition(par, "h").write.mode("overwrite").parquet(
+    _exact_screen(existing).repartition(par, "h").write.mode("overwrite").parquet(
         f"{out_dir}/exact"
     )
-    buckets.repartition(par, "bucket").write.mode("overwrite").parquet(
-        f"{out_dir}/buckets"
-    )
+    _side_buckets(sh).select("bucket", "ex_ids").repartition(
+        par, "bucket"
+    ).write.mode("overwrite").parquet(f"{out_dir}/buckets")
     sh.repartition(par, "doc_id").sortWithinPartitions("doc_id").write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/shingles")
-    sizes.repartition(par, "doc_id").write.mode("overwrite").parquet(
+    _doc_sizes(sh).repartition(par, "doc_id").write.mode("overwrite").parquet(
         f"{out_dir}/sizes"
     )
     rows = [
@@ -1679,97 +1543,30 @@ def incremental_dedup_from_index(spark: SparkSession, index_dir: str) -> DataFra
     grouping) appears NOWHERE here; all plan work is O(batch). Decision
     rows are pinned bit-identical to incremental_dedup's in-plan form:
     signatures are per-doc (side-independent), the pre-grouped ex_ids
-    arrays equal the in-plan collect_list split, and the cap filter,
-    integer intersection counts, and the jaccard double all derive from
-    the same exact values."""
-    docs = spark.table("documents")
-    incoming = docs.filter(_inc_is_incoming())
-    ex_hash = spark.read.parquet(f"{index_dir}/exact")
-    inc_hashed = incoming.select("doc_id", _norm_hash().alias("h"))
-    inc_canon_ids = inc_hashed.groupBy("h").agg(F.min("doc_id").alias("canon_id"))
-
+    arrays are the same side split, and the cap filter, integer
+    intersection counts, and the jaccard double all derive from the same
+    exact values."""
+    incoming = spark.table("documents").filter(_inc_is_incoming())
     inc_canon = (
         _exact_canonicals(incoming)
         .select("doc_id", "text")
         .localCheckpoint(eager=False)
     )
     sh_inc = _shingle_hashes(inc_canon)
-    inc_grouped = (
-        _band_buckets(_signatures_from(sh_inc))
-        .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("inc_ids"))
+    index = {
+        rel: spark.read.parquet(f"{index_dir}/{rel}")
+        for rel in ("exact", "buckets", "shingles", "sizes")
+    }
+    inc_buckets = _side_buckets(sh_inc).select("bucket", "inc_ids")
+    pairs = _cross_pairs(inc_buckets.join(index["buckets"], "bucket"))
+    scored = _shingle_overlap(
+        index["shingles"], sh_inc, pairs, "ex_id", "inc_id", sizes_a=index["sizes"]
     )
-    pairs = (
-        inc_grouped.join(spark.read.parquet(f"{index_dir}/buckets"), "bucket")
-        .filter(F.size("ex_ids") + F.size("inc_ids") <= LSH_BUCKET_CAP)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ex_ids, a -> transform(inc_ids, "
-                    "b -> struct(a AS ex_id, b AS inc_id))))"
-                )
-            ).alias("p")
-        )
-        .select("p.ex_id", "p.inc_id")
-        .distinct()
-    )
-    sh_ex = spark.read.parquet(f"{index_dir}/shingles")
-    inter = (
-        pairs.join(sh_ex.alias("sa"), F.col("ex_id") == F.col("sa.doc_id"))
-        .join(
-            sh_inc.alias("sb"),
-            (F.col("inc_id") == F.col("sb.doc_id"))
-            & (F.col("sa.h") == F.col("sb.h")),
-        )
-        .groupBy("ex_id", "inc_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes_ex = spark.read.parquet(f"{index_dir}/sizes")
-    sizes_inc = sh_inc.groupBy("doc_id").agg(F.count("*").alias("n"))
-    jaccard = F.col("inter").cast("double") / (
-        F.col("na.n") + F.col("nb.n") - F.col("inter")
-    ).cast("double")
-    verified = (
-        inter.join(sizes_ex.alias("na"), F.col("ex_id") == F.col("na.doc_id"))
-        .join(sizes_inc.alias("nb"), F.col("inc_id") == F.col("nb.doc_id"))
-        .select("ex_id", "inc_id", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= INC_JACCARD_THRESHOLD)
-    )
-    near = verified.groupBy("inc_id").agg(
-        F.min("ex_id").alias("ex_near"),
-        F.max("jaccard").alias("best_jaccard"),
-    )
-    out = (
-        inc_hashed.join(ex_hash, "h", "left")
-        .join(inc_canon_ids, "h")
-        .join(near, F.col("canon_id") == F.col("inc_id"), "left")
-    )
-    return out.select(
-        "doc_id",
-        (F.col("ex_exact").isNull() & F.col("ex_near").isNull()).alias("keep"),
-        F.when(F.col("ex_exact").isNotNull(), F.lit("exact_duplicate"))
-        .when(F.col("ex_near").isNotNull(), F.lit("near_duplicate"))
-        .alias("drop_reason"),
-        F.coalesce(F.col("ex_exact"), F.col("ex_near")).alias("matched_doc_id"),
-        "best_jaccard",
-    ).orderBy("doc_id")
+    return _inc_decision(incoming, index["exact"], scored)
 
 
 def oracle_incremental_dedup() -> str:
-    mins = ", ".join(
-        f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}"
-        for i in range(K)
-    )
-    band_selects = []
-    for b, (name, cols) in enumerate(_band_cols()):
-        concat = " || ',' || ".join(
-            [f"'{b}'"] + [f"CAST({c} AS VARCHAR)" for c in cols]
-        )
-        band_selects.append(
-            f"SELECT doc_id, md5({concat}) AS bucket, "
-            f"doc_id % {INC_BATCH_MOD} = {INC_BATCH_REM} AS inc FROM sig"
-        )
-    buckets = " UNION ALL ".join(band_selects)
+    buckets = _sql_band_buckets(extra=_SQL_INC_FLAG)
     canon_ex = _SQL_CANON.replace("FROM documents d", "FROM existing d")
     canon_inc = _SQL_CANON.replace("FROM documents d", "FROM incoming d")
     shingles = _SQL_SHINGLES.replace("FROM documents", "FROM union_canon")
@@ -1792,7 +1589,7 @@ union_canon AS (
   SELECT doc_id, text FROM ({canon_inc}) ic
 ),
 sh AS ({shingles}),
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+sig AS (SELECT doc_id, {_SQL_MINS} FROM sh GROUP BY doc_id),
 buckets AS ({buckets}),
 ok AS (
   SELECT bucket FROM buckets
@@ -1976,10 +1773,9 @@ BLOOM_WORDS = BLOOM_BITS // BLOOM_WORD
 def _bloom_positions(salt_prefix: str = "bloom") -> Column:
     """Array of BLOOM_K bit positions for the current row's normalized
     content."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return F.array(
         *[
-            (_hash60(F.concat(F.lit(f"{salt_prefix}{j}:"), norm)) % BLOOM_BITS)
+            (_hash60(F.concat(F.lit(f"{salt_prefix}{j}:"), _norm_text())) % BLOOM_BITS)
             for j in range(BLOOM_K)
         ]
     )
@@ -2501,10 +2297,6 @@ def minhash_estimate_quality(spark: SparkSession) -> DataFrame:
 
 
 def oracle_minhash_estimate_quality() -> str:
-    mins = ", ".join(
-        f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}"
-        for i in range(K)
-    )
     pairs_inner = oracle_minhash_candidate_pairs().rsplit("ORDER BY", 1)[0]
     match_sum = " + ".join(
         f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(K)
@@ -2512,7 +2304,7 @@ def oracle_minhash_estimate_quality() -> str:
     return f"""
 WITH cand AS ({pairs_inner}),
 sh AS ({_SQL_SHINGLES_CANON}),
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+sig AS (SELECT doc_id, {_SQL_MINS} FROM sh GROUP BY doc_id),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
@@ -2924,23 +2716,11 @@ SWEEP_T10 = [5, 6, 7, 8, 9]
 def dedup_threshold_sweep(spark: SparkSession) -> DataFrame:
     sh = _persisted_shingles(spark)
     cand = _candidate_pairs_from(_signatures_from(sh))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    pc = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id")) & (F.col("sa.h") == F.col("sb.h")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("long").alias("inter"))
-        .join(sizes.alias("na"), F.col("doc_a") == F.col("na.doc_id"))
-        .join(sizes.alias("nb"), F.col("doc_b") == F.col("nb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter",
-            (F.col("na.n") + F.col("nb.n") - F.col("inter")).cast("long").alias("uni"),
-        )
+    pc = _shingle_overlap(sh, sh, cand).select(
+        "doc_a",
+        "doc_b",
+        "inter",
+        (F.col("n_a") + F.col("n_b") - F.col("inter")).alias("uni"),
     )
     flagged = (
         pc.select(
@@ -3166,15 +2946,9 @@ def incremental_dedup_recall(
     from collector_spark.ml.vectors import RECALL_PROBE_N
 
     docs = spark.table("documents") if docs is None else docs
-    existing = docs.filter(~_inc_is_incoming())
-    incoming = docs.filter(_inc_is_incoming())
-    union_canon = (
-        _exact_canonicals(existing)
-        .select("doc_id", "text")
-        .unionByName(_exact_canonicals(incoming).select("doc_id", "text"))
-        .localCheckpoint(eager=False)
-    )
-    sh = _shingle_hashes(union_canon).localCheckpoint(eager=False)
+    sh = _shingle_hashes(
+        _side_canonicals(docs).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
 
     probe_ids = (
         sh.filter(_inc_is_incoming())
@@ -3183,56 +2957,20 @@ def incremental_dedup_recall(
         .orderBy("doc_id")
         .limit(RECALL_PROBE_N)
     )
-    ptf = sh.join(F.broadcast(probe_ids), "doc_id").select(
-        F.col("doc_id").alias("inc_id"), "h"
+    probe_sh = sh.join(F.broadcast(probe_ids), "doc_id")
+    sizes = _doc_sizes(sh)
+    truth = _shingle_overlap(
+        sh.filter(~_inc_is_incoming()),
+        F.broadcast(probe_sh),
+        a="ex_id",
+        b="inc_id",
+        sizes_a=sizes,
+        sizes_b=sizes,
     )
-    inter = (
-        sh.filter(~_inc_is_incoming())
-        .join(F.broadcast(ptf), "h")
-        .groupBy(F.col("doc_id").alias("ex_id"), "inc_id")
-        .agg(F.count("*").cast("long").alias("inter"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
-
     # reached: the SAME cross-side banded bucket stage E68 runs
-    buckets = _band_buckets(_signatures_from(sh)).withColumn(
-        "inc", _inc_is_incoming()
-    )
-    grouped = buckets.groupBy("bucket").agg(
-        F.sort_array(
-            F.collect_list(F.when(~F.col("inc"), F.col("doc_id")))
-        ).alias("ex_ids"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("inc"), F.col("doc_id")))
-        ).alias("inc_ids"),
-    )
-    reached = (
-        grouped.filter(
-            (F.size("ex_ids") > 0)
-            & (F.size("inc_ids") > 0)
-            & (F.size("ex_ids") + F.size("inc_ids") <= LSH_BUCKET_CAP)
-        )
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ex_ids, a -> transform(inc_ids, "
-                    "b -> struct(a AS ex_id, b AS inc_id))))"
-                )
-            ).alias("p")
-        )
-        .select("p.ex_id", "p.inc_id")
-        .distinct()
-        .withColumn("reached", F.lit(1))
-    )
-
-    jac = F.col("inter").cast("double") / (
-        F.col("na.n") + F.col("nb.n") - F.col("inter")
-    ).cast("double")
+    reached = _cross_pairs(_side_buckets(sh)).withColumn("reached", F.lit(1))
     flagged = (
-        inter.join(sizes.alias("na"), F.col("ex_id") == F.col("na.doc_id"))
-        .join(sizes.alias("nb"), F.col("inc_id") == F.col("nb.doc_id"))
-        .select("ex_id", "inc_id", jac.alias("jaccard"))
-        .join(reached, ["ex_id", "inc_id"], "left")
+        truth.join(reached, ["ex_id", "inc_id"], "left")
         .select(
             "jaccard", F.coalesce(F.col("reached"), F.lit(0)).alias("reached")
         )
@@ -3265,20 +3003,7 @@ def incremental_dedup_recall(
 def oracle_incremental_dedup_recall() -> str:
     from collector_spark.ml.vectors import RECALL_PROBE_N
 
-    mins = ", ".join(
-        f"MIN((h * CAST({A[i]} AS BIGINT) + {B[i]}) % {P31}) AS mh{i}"
-        for i in range(K)
-    )
-    band_selects = []
-    for b, (name, cols) in enumerate(_band_cols()):
-        concat = " || ',' || ".join(
-            [f"'{b}'"] + [f"CAST({c} AS VARCHAR)" for c in cols]
-        )
-        band_selects.append(
-            f"SELECT doc_id, md5({concat}) AS bucket, "
-            f"doc_id % {INC_BATCH_MOD} = {INC_BATCH_REM} AS inc FROM sig"
-        )
-    buckets = " UNION ALL ".join(band_selects)
+    buckets = _sql_band_buckets(extra=_SQL_INC_FLAG)
     canon_ex = _SQL_CANON.replace("FROM documents d", "FROM existing d")
     canon_inc = _SQL_CANON.replace("FROM documents d", "FROM incoming d")
     shingles = _SQL_SHINGLES.replace("FROM documents", "FROM union_canon")
@@ -3318,7 +3043,7 @@ inter AS (
   GROUP BY e.doc_id, i.doc_id
 ),
 sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+sig AS (SELECT doc_id, {_SQL_MINS} FROM sh GROUP BY doc_id),
 buckets AS ({buckets}),
 ok AS (
   SELECT bucket FROM buckets

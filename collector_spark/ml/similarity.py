@@ -379,34 +379,18 @@ ORDER BY query_id, rank
 def embedding_dup_clusters(
     spark: SparkSession, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
-    """Near-duplicate clusters in embedding space: connected components
-    (ml/dedup.py min-label propagation) over the verified cosine near-dup
-    pair graph — the embedding-side counterpart of ml_dup_clusters, giving
-    a training pipeline the transitive keep/drop grouping rather than raw
-    pairs. Output: (vec_id, cluster_id = min reachable vec_id,
-    cluster_size, is_canonical)."""
-    from collector_spark.ml.dedup import connected_components
+    """Near-duplicate clusters in embedding space: the ml/dedup.py cluster
+    assembly (connected components, sizes, canonical flag) over the
+    verified cosine near-dup pair graph — the embedding-side counterpart of
+    ml_dup_clusters, giving a training pipeline the transitive keep/drop
+    grouping rather than raw pairs. Output: (vec_id, cluster_id = min
+    reachable vec_id, cluster_size, is_canonical)."""
+    from collector_spark.ml.dedup import _clusters
 
     pairs = embedding_neardup_pairs(spark, threshold).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels = connected_components(pairs)
-    sizes = labels.groupBy("label").agg(
-        F.count("*").cast("long").alias("cluster_size")
-    )
-    return (
-        # plain key join — cluster membership/size is data-scaled (see
-        # ml/dedup.py dup_clusters); a forced broadcast would OOM the driver
-        # at 100 TB. AQE may still pick broadcast where genuinely small.
-        labels.join(sizes, "label")
-        .select(
-            F.col("node").alias("vec_id"),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-            (F.col("node") == F.col("label")).alias("is_canonical"),
-        )
-        .orderBy("vec_id")
-    )
+    return _clusters(pairs, "vec_id").orderBy("vec_id")
 
 
 def oracle_embedding_dup_clusters(threshold: float = NEARDUP_THRESHOLD) -> str:

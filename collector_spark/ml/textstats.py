@@ -15,6 +15,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from collector_spark.ml.dedup import (
+    _SQL_SHINGLES,
+    P31,
+    _norm_hash,
+    _norm_text,
+    _shingle_hashes,
+    _words,
+)
+
 # tiny language profiles (public stopword lists, truncated)
 PROFILES = {
     "en": ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for"],
@@ -23,10 +32,6 @@ PROFILES = {
 }
 
 _TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def _words(col: Column) -> Column:
-    return F.split(F.lower(col), " ")
 
 
 def _hits(words: Column, profile: list[str]) -> Column:
@@ -222,11 +227,8 @@ def doc_fingerprint(spark: SparkSession) -> DataFrame:
     whitespace-normalized text plus a winnowing-style rolling fingerprint
     (the minimum word-trigram shingle hash — the window-min of the rolling
     hash sequence with the window spanning the document)."""
-    from collector_spark.ml.dedup import _shingle_hashes
-
     docs = spark.table("documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    whole = docs.select("doc_id", F.md5(norm).alias("content_md5"))
+    whole = docs.select("doc_id", _norm_hash().alias("content_md5"))
     rolling = (
         _shingle_hashes(docs)
         .groupBy("doc_id")
@@ -240,8 +242,6 @@ def doc_fingerprint(spark: SparkSession) -> DataFrame:
 
 
 def oracle_doc_fingerprint() -> str:
-    from collector_spark.ml.dedup import _SQL_SHINGLES
-
     return f"""
 WITH sh AS ({_SQL_SHINGLES}),
 rolling AS (SELECT doc_id, CAST(MIN(h) AS BIGINT) AS min_shingle_hash FROM sh GROUP BY doc_id)
@@ -282,10 +282,8 @@ _CKSUM_P = 1_000_000_007
 
 
 def winnowing_fingerprints(spark: SparkSession) -> DataFrame:
-    from collector_spark.ml.dedup import P31
-
     k, w = WINNOW_K, WINNOW_W
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = _norm_text()
     hashes = (
         f"transform(sequence(1, length(norm) - {k - 1}), i -> "
         f"CAST(conv(substring(md5(substring(norm, i, {k})), 1, 15), 16, 10) "
@@ -321,8 +319,6 @@ def winnowing_fingerprints(spark: SparkSession) -> DataFrame:
 
 def oracle_winnowing_fingerprints() -> str:
     k, w = WINNOW_K, WINNOW_W
-    from collector_spark.ml.dedup import P31
-
     return rf"""
 WITH base AS (
   SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
@@ -382,10 +378,9 @@ WINNOW_MIN_ALIGNED = 8
 
 def winnowing_matches(spark: SparkSession) -> DataFrame:
     from pyspark.sql import Window
-    from collector_spark.ml.dedup import P31
 
     k, w = WINNOW_K, WINNOW_W
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = _norm_text()
     hashes = (
         f"transform(sequence(1, length(norm) - {k - 1}), i -> "
         f"CAST(conv(substring(md5(substring(norm, i, {k})), 1, 15), 16, 10) "
@@ -473,8 +468,6 @@ def winnowing_matches(spark: SparkSession) -> DataFrame:
 
 def oracle_winnowing_matches() -> str:
     k, w = WINNOW_K, WINNOW_W
-    from collector_spark.ml.dedup import P31
-
     return rf"""
 WITH base AS (
   SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm

@@ -587,11 +587,8 @@ register(
 
 register("ml_dup_clusters", dedup.dup_clusters, dedup.oracle_dup_clusters())
 
-register(
-    "ml_dup_clusters_star",
-    dedup.dup_clusters_star,
-    dedup.oracle_dup_clusters(),
-)
+# the same query under its E47 name: registered names are the catalog contract
+register("ml_dup_clusters_star", dedup.dup_clusters, dedup.oracle_dup_clusters())
 
 register(
     "ml_dedup_keep_list", dedup.dedup_keep_list, dedup.oracle_dedup_keep_list()
@@ -1085,9 +1082,9 @@ register(
 #    scoring with an idempotent epoch-keyed landing sink) composed by a
 #    batch compaction through the SAME injectable batch operators;
 #    availableNow equals ml_curation_manifest row-for-row (same oracle)
-# -- r7: duplicate clusters through alternating large-star/small-star CC
-#    (O(log n) rounds — the adversarial-chain scale path); identical
-#    labels, same recursive-closure oracle as ml_dup_clusters
+# -- r7: ml_dup_clusters_star — registered above on dup_clusters itself
+#    since the two CC kernels merged into the one large-star/small-star
+#    connected_components (O(log n) rounds, zero on star forests)
 # -- r7: product-quantization ANN (PQ/ADC): corpus stored as M codes,
 #    asymmetric search via broadcast per-query distance LUT
 register("ml_pq_topk", similarity.pq_topk, similarity.oracle_pq_topk())
@@ -1155,7 +1152,8 @@ register(
 )
 
 # -- (3) plan changed in r5 (size join de-broadcast), judge-verified only:
-#    duplicate clusters via min-label propagation over verified pairs
+#    duplicate clusters via the shared dedup cluster assembly over
+#    verified pairs
 register(
     "ml_embedding_dup_clusters",
     partial(

@@ -32,6 +32,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from collector_spark.ml.dedup import LSH_BUCKET_CAP, _bucket_pairs, _norm_hash
 from collector_spark.streaming.replay import (
     run_to_completion,
     stage_replay,
@@ -75,7 +76,7 @@ def _exact_fold(raw: DataFrame) -> DataFrame:
     """The exact-dedup state: content hash -> canonical (min) doc_id and
     group size."""
     return (
-        raw.select("doc_id", _content_hash_col())
+        raw.select("doc_id", _norm_hash().alias("content_hash"))
         .groupBy("content_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -88,7 +89,7 @@ def _lsh_fold(raw: DataFrame) -> DataFrame:
     """The LSH bucket state: (band bucket, content hash) -> min doc_id."""
     buckets = raw.select(
         "doc_id",
-        _content_hash_col(),
+        _norm_hash().alias("content_hash"),
         F.explode(_row_signature_cols()).alias("bucket"),
     )
     return buckets.groupBy("bucket", "content_hash").agg(
@@ -343,44 +344,21 @@ ORDER BY d.doc_id
 # ---------------------------------------------------------------------------
 
 
-def _content_hash_col():
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return F.md5(norm).alias("content_hash")
-
-
 def _expand_bucket_pairs(state: DataFrame) -> DataFrame:
     """Final LSH bucket state (bucket, content_hash, min_doc) -> distinct
     candidate pairs with the batch operator's canonical-first + capped
     semantics: a content's rows are kept only where min_doc equals its
     GLOBAL canonical (min over every bucket the content appears in — every
     doc lands in all of its own band buckets, so this is the exact-dedup
-    min-doc_id canonical), then buckets regroup, the LSH_BUCKET_CAP bound
-    drops degenerate buckets, and surviving members expand pairwise — the
-    same expansion as ml/dedup.py's _candidate_pairs_from."""
+    min-doc_id canonical), then the batch path's capped bucket expansion
+    (ml/dedup.py's _bucket_pairs) pairs the surviving members."""
     from pyspark.sql import Window
-
-    from collector_spark.ml.dedup import LSH_BUCKET_CAP
 
     w = Window.partitionBy("content_hash")
     members = state.withColumn("canon", F.min("min_doc").over(w)).filter(
         F.col("min_doc") == F.col("canon")
     )
-    return (
-        members.groupBy("bucket")
-        .agg(F.sort_array(F.collect_set("min_doc")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= LSH_BUCKET_CAP))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "b -> struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    return _bucket_pairs(members, "bucket", "min_doc", LSH_BUCKET_CAP).distinct()
 
 
 def _score_batch_fn(land_dir: str, eval_grams: DataFrame | None = None):
@@ -404,7 +382,7 @@ def _score_batch_fn(land_dir: str, eval_grams: DataFrame | None = None):
 
         sess = mb.sparkSession
         base = mb.select(
-            "doc_id", "source", "lang", _content_hash_col()
+            "doc_id", "source", "lang", _norm_hash().alias("content_hash")
         )
         qk = quality_keep_list(sess, docs=mb).select(
             "doc_id",

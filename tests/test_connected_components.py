@@ -1,8 +1,10 @@
-"""Property test: the distributed min-label propagation in
+"""Property test: the distributed large-star/small-star kernel
 ml/dedup.py::connected_components equals a sequential union-find on
 arbitrary random graphs — the oracle only ever exercises the fixture's
 near-dup pair graph, so this is the general-correctness gate (chains,
-forests, multi-component graphs, self-loops, duplicate edges)."""
+forests, multi-component graphs, self-loops, duplicate edges). Every
+graph runs with the kernel's defaults, so the two long chains also pin
+that its node-count-derived round cap admits them."""
 
 from __future__ import annotations
 
@@ -50,6 +52,9 @@ for seed in (7, 42):
     GRAPHS.append(
         [(rng.randrange(30), rng.randrange(30)) for _ in range(25)]
     )
+# long ordered chains: ~n min-label rounds, O(log n) contraction rounds;
+# the 300-node chain needs more rounds than a fixed 16-round cap allowed
+GRAPHS += [[(i, i + 1) for i in range(n)] for n in (60, 300)]
 
 
 @pytest.mark.parametrize("edges", GRAPHS, ids=range(len(GRAPHS)))
@@ -62,37 +67,26 @@ def test_matches_union_find(prepared_spark, edges):
     )
     got = {
         r["node"]: r["label"]
-        for r in connected_components(pairs, max_rounds=30).collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == expected
 
 
-@pytest.mark.parametrize("edges", GRAPHS, ids=range(len(GRAPHS)))
+@pytest.mark.parametrize("edges", GRAPHS[:5], ids=range(5))
 def test_star_matches_union_find(prepared_spark, edges):
-    from collector_spark.ml.dedup import connected_components_star
+    """Large-star/small-star steps pick sides by node id, so the labeling
+    must not depend on how the pairs arrive: every edge reversed and the
+    list shuffled gives the same components as union-find."""
+    from collector_spark.ml.dedup import connected_components
 
     expected = _union_find_components(edges)
+    flipped = [(b, a) for a, b in edges]
+    random.Random(len(edges)).shuffle(flipped)
     pairs = prepared_spark.createDataFrame(
-        [(int(a), int(b)) for a, b in edges], "doc_a long, doc_b long"
+        [(int(a), int(b)) for a, b in flipped], "doc_a long, doc_b long"
     )
     got = {
         r["node"]: r["label"]
-        for r in connected_components_star(pairs).collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == expected
-
-
-def test_star_converges_on_long_chain_in_log_rounds(prepared_spark):
-    """A 60-node chain needs ~60 min-label rounds but must fit inside the
-    star variant's default 16-round cap — the O(log n) contract."""
-    from collector_spark.ml.dedup import connected_components_star
-
-    chain = [(i, i + 1) for i in range(60)]
-    pairs = prepared_spark.createDataFrame(
-        [(int(a), int(b)) for a, b in chain], "doc_a long, doc_b long"
-    )
-    got = {
-        r["node"]: r["label"]
-        for r in connected_components_star(pairs).collect()
-    }
-    assert got == {n: 0 for n in range(61)}
