@@ -31,8 +31,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from collector_spark.ml.dedup import _hash60, _n_tokens, _sql_hash60, _tokens
+from collector_spark.ml.textstats import NB_SCALE, _qgrid, _qlog, _sql_qlog
 
 # word n-gram width for contamination checks (8 is the common published
 # choice for benchmark decontamination)
@@ -61,6 +64,27 @@ def _word_ngrams(tok_col: str, n: int):
             f"i -> concat_ws(' ', slice({tok_col}, i, {n})))"
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def _token_pairs(
+    df: DataFrame, toks: str, *keep: str, window: int = 1, names=("w1", "w2")
+) -> DataFrame:
+    """(keep..., w1, w2): every ordered pair (t[i], t[j]), i < j <= i +
+    window, of the token-array column ``toks`` (window 1 = adjacent
+    pairs). Row-local — a nested transform over positions, no lag window,
+    no self-join on position. The size >= 2 guard is load-bearing: Spark's
+    sequence(1, 0) is [1, 0], not empty."""
+    a, b = names
+    pairs = F.expr(
+        f"flatten(transform(sequence(1, size({toks}) - 1), i -> "
+        f"transform(sequence(i + 1, least(i + {window}, size({toks}))), j -> "
+        f"struct(element_at({toks}, i) AS {a}, element_at({toks}, j) AS {b}))))"
+    )
+    return (
+        df.filter(F.size(toks) >= 2)
+        .select(*keep, F.explode(pairs).alias("_p"))
+        .select(*keep, f"_p.{a}", f"_p.{b}")
+    )
 
 
 def eval_gram_set(spark: SparkSession) -> DataFrame:
@@ -667,7 +691,7 @@ ORDER BY source
 
 def sampling_weights(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = _n_tokens()
     per_source = docs.select("source", toks.alias("t")).groupBy("source").agg(
         F.count("*").cast("long").alias("docs"),
         F.sum("t").cast("long").alias("tokens"),
@@ -723,7 +747,7 @@ HIST_MAX_BUCKET = 15
 
 def length_histogram(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = _n_tokens()
     bucket = F.least(
         F.floor(toks / HIST_BUCKET_TOKENS), F.lit(HIST_MAX_BUCKET)
     ).cast("int")
@@ -785,7 +809,7 @@ CHUNK_STRIDE = 96
 
 def doc_chunks(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
-    words = F.split(F.trim(F.col("text")), r"\s+")
+    words = _tokens(lower=False)
     n = F.size(words)
     stop = F.greatest(n - CHUNK_TOKENS, F.lit(0)) + 1
     grid = F.sequence(F.lit(1), stop, F.lit(CHUNK_STRIDE))
@@ -930,7 +954,7 @@ PACK_SHARD_DOCS = 200  # doc_ids per independent packing shard
 
 def sequence_packing(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = _n_tokens()
     base = docs.select(
         "doc_id",
         "source",
@@ -1014,7 +1038,35 @@ ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 
-_NLL_SCALE = 1048576  # 2^20: NLL quantization grid (exact integer sums)
+def _grid_mean(x: Column) -> Column:
+    """Group mean of ``x``, exact: each value floored onto the shared 2^-20
+    grid, summed as int64 (identical under any reduce order — a raw double
+    SUM flaked by 1 ulp with partitioning), then ONE division."""
+    return F.sum(_qgrid(x)).cast("double") / (F.count("*").cast("double") * NB_SCALE)
+
+
+def _doc_words(spark: SparkSession, *keep: str) -> DataFrame:
+    """(keep..., w): one row per lowered word of every document."""
+    return spark.table("documents").select(*keep, F.explode(_tokens()).alias("w"))
+
+
+def _unigram_model(words: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The corpus unigram model over a (..., w) relation: the (w, cnt)
+    vocabulary and its 1-row (total) word count."""
+    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
+    return vocab, vocab.agg(F.sum("cnt").cast("long").alias("total"))
+
+
+def _nll(cnt: Column) -> Column:
+    return -F.log(cnt.cast("double") / F.col("total").cast("double"))
+
+
+def _doc_mean_nll(scored: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, mean_nll) over words joined to (cnt, total)."""
+    return scored.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_tokens"),
+        _grid_mean(_nll(F.col("cnt"))).alias("mean_nll"),
+    )
 
 
 def _unigram_nll(spark: SparkSession) -> DataFrame:
@@ -1022,35 +1074,9 @@ def _unigram_nll(spark: SparkSession) -> DataFrame:
     registered query and its downstream compositions (perplexity
     bucketing) — compositions join this mid-plan and must not inherit a
     pointless global sort."""
-    docs = spark.table("documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").cast("long").alias("total"))
-    scored = words.join(vocab, "w").crossJoin(F.broadcast(total))
-    nll = -F.log(F.col("cnt").cast("double") / F.col("total").cast("double"))
-    # per-word ln bits are identical across engines (verified), but a
-    # floating SUM depends on reduce order — quantize each word's NLL onto
-    # an integer 2^-20 grid so the aggregate is an exact integer sum,
-    # order-independent on any partitioning
-    nll_q = F.floor(nll * _NLL_SCALE).cast("long")
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.sum(nll_q).alias("sum_q"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            (
-                F.col("sum_q").cast("double")
-                / (F.col("n_tokens").cast("double") * _NLL_SCALE)
-            ).alias("mean_nll"),
-        )
-    )
+    words = _doc_words(spark, "doc_id")
+    vocab, total = _unigram_model(words)
+    return _doc_mean_nll(words.join(vocab, "w").crossJoin(F.broadcast(total)))
 
 
 def unigram_logprob(spark: SparkSession) -> DataFrame:
@@ -1067,8 +1093,8 @@ vocab AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM words GROUP BY w),
 total AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM vocab)
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
   CAST(SUM(CAST(FLOOR(-ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))
-                      * {_NLL_SCALE}) AS BIGINT)) AS DOUBLE)
-    / (CAST(COUNT(*) AS DOUBLE) * {_NLL_SCALE}) AS mean_nll
+                      * {NB_SCALE}) AS BIGINT)) AS DOUBLE)
+    / (CAST(COUNT(*) AS DOUBLE) * {NB_SCALE}) AS mean_nll
 FROM words JOIN vocab USING (w) CROSS JOIN total
 GROUP BY doc_id
 ORDER BY doc_id
@@ -1088,8 +1114,6 @@ _SPLIT_MOD = 1_000_000
 
 
 def split_assign(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
-    from collector_spark.ml.dedup import _hash60
-
     docs = spark.table("documents") if docs is None else docs
     u = (
         _hash60(F.concat(F.lit("split:"), F.col("text"))) % _SPLIT_MOD
@@ -1106,8 +1130,6 @@ def split_assign(spark: SparkSession, docs: DataFrame | None = None) -> DataFram
 
 
 def oracle_split_assign() -> str:
-    from collector_spark.ml.dedup import _sql_hash60
-
     h = _sql_hash60("'split:' || text")
     return f"""
 SELECT doc_id, source,
@@ -1296,7 +1318,7 @@ def corpus_report(spark: SparkSession) -> DataFrame:
     from collector_spark.ml.dedup import exact_dup_groups
 
     docs = spark.table("documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = _n_tokens()
     base = docs.select("doc_id", "source", "lang", toks.alias("n_tokens"))
     dup = exact_dup_groups(spark).select(
         "doc_id", (~F.col("keep")).alias("is_dup")
@@ -1316,12 +1338,8 @@ def corpus_report(spark: SparkSession) -> DataFrame:
             F.count("*").cast("long").alias("docs"),
             F.sum("n_tokens").cast("long").alias("tokens"),
             # per-doc scores are bit-identical across engines; AVG's
-            # reduce order is not — same integer-grid trick as E41
-            (
-                F.sum(F.floor(F.col("quality_score") * _NLL_SCALE).cast("long"))
-                .cast("double")
-                / (F.count("*").cast("double") * _NLL_SCALE)
-            ).alias("mean_quality"),
+            # reduce order is not — same integer-grid mean as E41
+            _grid_mean(F.col("quality_score")).alias("mean_quality"),
             (
                 F.sum(F.when(F.coalesce("is_dup", F.lit(False)), 1).otherwise(0))
                 .cast("double")
@@ -1390,13 +1408,8 @@ VOCAB_HOT_K = 64  # top-K words broadcast (the skew head)
 
 
 def unigram_logprob_skew(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").cast("long").alias("total"))
+    words = _doc_words(spark, "doc_id")
+    vocab, total = _unigram_model(words)
     # deterministic hot set: top-K by (count desc, word) — TakeOrdered,
     # never a full sort; K is a constant, so the broadcast is bounded at
     # any corpus size
@@ -1409,24 +1422,7 @@ def unigram_logprob_skew(spark: SparkSession) -> DataFrame:
     hot_scored = words.join(F.broadcast(hot), "w")
     cold_scored = words.join(cold, "w")
     scored = hot_scored.unionByName(cold_scored).crossJoin(F.broadcast(total))
-    nll = -F.log(F.col("cnt").cast("double") / F.col("total").cast("double"))
-    nll_q = F.floor(nll * _NLL_SCALE).cast("long")
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.sum(nll_q).alias("sum_q"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            (
-                F.col("sum_q").cast("double")
-                / (F.col("n_tokens").cast("double") * _NLL_SCALE)
-            ).alias("mean_nll"),
-        )
-        .orderBy("doc_id")
-    )
+    return _doc_mean_nll(scored).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1450,36 +1446,20 @@ TOPK_VOCAB_K = 256  # bounded broadcast vocabulary (constant at any SF)
 
 
 def unigram_logprob_topk(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").cast("long").alias("total"))
+    words = _doc_words(spark, "doc_id")
+    vocab, total = _unigram_model(words)
     topk = vocab.orderBy(F.col("cnt").desc(), "w").limit(TOPK_VOCAB_K)
     scored = words.join(F.broadcast(topk), "w", "left").crossJoin(
         F.broadcast(total)
     )
     # in-vocab: -ln(cnt/total); OOV floor: cnt := 1  =>  NLL = ln(total)
     eff_cnt = F.coalesce(F.col("cnt"), F.lit(1).cast("long"))
-    nll = -F.log(eff_cnt.cast("double") / F.col("total").cast("double"))
-    nll_q = F.floor(nll * _NLL_SCALE).cast("long")
     return (
         scored.groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
             F.sum(F.col("cnt").isNull().cast("long")).alias("n_oov"),
-            F.sum(nll_q).alias("sum_q"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "n_oov",
-            (
-                F.col("sum_q").cast("double")
-                / (F.col("n_tokens").cast("double") * _NLL_SCALE)
-            ).alias("mean_nll"),
+            _grid_mean(_nll(eff_cnt)).alias("mean_nll"),
         )
         .orderBy("doc_id")
     )
@@ -1498,8 +1478,8 @@ SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
   CAST(SUM(CASE WHEN t.cnt IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
   CAST(SUM(CAST(FLOOR(-ln(CAST(COALESCE(t.cnt, 1) AS DOUBLE)
                           / CAST(total AS DOUBLE))
-                      * {_NLL_SCALE}) AS BIGINT)) AS DOUBLE)
-    / (CAST(COUNT(*) AS DOUBLE) * {_NLL_SCALE}) AS mean_nll
+                      * {NB_SCALE}) AS BIGINT)) AS DOUBLE)
+    / (CAST(COUNT(*) AS DOUBLE) * {NB_SCALE}) AS mean_nll
 FROM words LEFT JOIN topk t USING (w) CROSS JOIN total
 GROUP BY doc_id
 ORDER BY doc_id
@@ -1570,9 +1550,11 @@ ORDER BY p.doc_a, p.doc_b
 # whitespace pre-tokenization -> word frequency table -> weighted adjacent
 # character-pair counts -> top merge candidates. This is the inner loop of
 # byte-pair-encoding vocabulary induction (Sennrich et al. 2016): the
-# highest-count pair is the next merge. Only ONE step is materialized (the
-# full training loop is sequential by nature and runs this query per
-# round over a progressively re-segmented vocab).
+# highest-count pair is the next merge. Only ONE step is materialized:
+# round 1 of the E89 trainer's own stages (_bpe_pair_counts over the
+# initial _bpe_vocab_seg character segmentation), with each candidate
+# reported as its merged string (pair = sym_a || sym_b, unambiguous while
+# every symbol is one character).
 #
 # Scale: the pair explode runs over the DISTINCT word table, not the
 # corpus — the classic BPE trick; cost is O(vocab x word-length), and the
@@ -1585,27 +1567,21 @@ BPE_TOP_PAIRS = 200
 
 
 def bpe_pair_counts(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents")
-    words = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
+    counts = _bpe_pair_counts(_bpe_vocab_seg(spark)).select(
+        F.concat("sym_a", "sym_b").alias("pair"), "pair_count"
     )
-    wcounts = (
-        words.groupBy("w")
-        .agg(F.count("*").cast("long").alias("wc"))
-        .filter(F.length("w") >= 2)
-    )
-    pairs = wcounts.select(
-        "wc",
-        F.explode(
-            F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
-        ).alias("pair"),
-    )
-    agg = pairs.groupBy("pair").agg(F.sum("wc").cast("long").alias("pair_count"))
-    top = agg.orderBy(F.desc("pair_count"), F.asc("pair")).limit(BPE_TOP_PAIRS)
-    rank = Window.orderBy(F.desc("pair_count"), F.asc("pair"))
+    return _bpe_top(counts, BPE_TOP_PAIRS, ["pair"], ["pair", "pair_count"])
+
+
+def _bpe_top(counts: DataFrame, k: int, ties: list[str], cols: list[str]) -> DataFrame:
+    """The k highest pair counts (ties ascending on ``ties``) with their
+    merge_rank — TakeOrdered, then a rank window over k rows."""
+    order = [F.desc("pair_count")] + [F.asc(c) for c in ties]
+    rank = F.row_number().over(Window.orderBy(*order)).cast("int")
     return (
-        top.withColumn("merge_rank", F.row_number().over(rank).cast("int"))
-        .select("merge_rank", "pair", "pair_count")
+        counts.orderBy(*order)
+        .limit(k)
+        .select(rank.alias("merge_rank"), *cols)
         .orderBy("merge_rank")
     )
 
@@ -1662,50 +1638,25 @@ LIMIT {BPE_TOP_PAIRS}
 
 
 def bigram_logprob(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents").select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("wl")
-    )
-    words = docs.select("doc_id", F.explode("wl").alias("w"))
-    c1 = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt1"))
-    total = c1.agg(F.sum("cnt1").cast("long").alias("total"))
-    bigrams = (
-        docs.filter(F.size("wl") >= 2)
-        .select(
-            "doc_id",
-            F.explode(F.expr("sequence(1, size(wl) - 1)")).alias("i"),
-            "wl",
-        )
-        .select(
-            "doc_id",
-            F.element_at("wl", F.col("i").cast("int")).alias("w1"),
-            F.element_at("wl", F.col("i").cast("int") + 1).alias("w2"),
-        )
-    )
+    docs = spark.table("documents").select("doc_id", _tokens().alias("wl"))
+    c1, total = _unigram_model(docs.select(F.explode("wl").alias("w")))
+    bigrams = _token_pairs(docs, "wl", "doc_id")
     c2 = bigrams.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("cnt2"))
     scored = (
         bigrams.join(c2, ["w1", "w2"])
-        .join(c1.select(F.col("w").alias("w1"), F.col("cnt1").alias("cnt_prev")), "w1")
-        .join(c1.select(F.col("w").alias("w2"), F.col("cnt1").alias("cnt_cur")), "w2")
+        .join(c1.select(F.col("w").alias("w1"), F.col("cnt").alias("cnt_prev")), "w1")
+        .join(c1.select(F.col("w").alias("w2"), F.col("cnt").alias("cnt_cur")), "w2")
         .crossJoin(F.broadcast(total))
     )
     p = (
         F.col("cnt2").cast("double")
         + F.col("cnt_cur").cast("double") / F.col("total").cast("double")
     ) / (F.col("cnt_prev").cast("double") + F.lit(1.0))
-    nll_q = F.floor(-F.log(p) * _NLL_SCALE).cast("long")
     return (
         scored.groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_bigrams"),
-            F.sum(nll_q).alias("sum_q"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (
-                F.col("sum_q").cast("double")
-                / (F.col("n_bigrams").cast("double") * _NLL_SCALE)
-            ).alias("mean_bigram_nll"),
+            _grid_mean(-F.log(p)).alias("mean_bigram_nll"),
         )
         .orderBy("doc_id")
     )
@@ -1735,7 +1686,7 @@ scored AS (
       (CAST(c2.cnt2 AS DOUBLE)
          + CAST(cur.cnt1 AS DOUBLE) / CAST(total.total AS DOUBLE))
       / (CAST(prv.cnt1 AS DOUBLE) + 1.0)
-    ) * {_NLL_SCALE}) AS BIGINT) AS nll_q
+    ) * {NB_SCALE}) AS BIGINT) AS nll_q
   FROM bigrams b
   JOIN c2 USING (w1, w2)
   JOIN c1 prv ON prv.w = b.w1
@@ -1744,7 +1695,7 @@ scored AS (
 )
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
   CAST(SUM(nll_q) AS DOUBLE)
-    / (CAST(COUNT(*) AS DOUBLE) * {_NLL_SCALE}) AS mean_bigram_nll
+    / (CAST(COUNT(*) AS DOUBLE) * {NB_SCALE}) AS mean_bigram_nll
 FROM scored
 GROUP BY doc_id
 ORDER BY doc_id
@@ -1772,8 +1723,6 @@ WEIGHTED_SAMPLE_K = 25
 
 
 def weighted_sample(spark: SparkSession) -> DataFrame:
-    from collector_spark.ml.dedup import _hash60
-
     docs = spark.table("documents")
     u = (
         (_hash60(F.concat(F.lit("wsample:"), F.col("text"))) % _SPLIT_MOD).cast(
@@ -1781,9 +1730,7 @@ def weighted_sample(spark: SparkSession) -> DataFrame:
         )
         + F.lit(0.5)
     ) / float(_SPLIT_MOD)
-    key_q = F.floor(
-        F.log(u) / F.col("n_chars").cast("double") * _NLL_SCALE
-    ).cast("long")
+    key_q = _qgrid(F.log(u) / F.col("n_chars").cast("double"))
     ranked = docs.select(
         "source", "doc_id", F.col("n_chars").alias("weight"), key_q.alias("key_q")
     ).withColumn(
@@ -1804,15 +1751,13 @@ def weighted_sample(spark: SparkSession) -> DataFrame:
 
 
 def oracle_weighted_sample() -> str:
-    from collector_spark.ml.dedup import _sql_hash60
-
     h = _sql_hash60("'wsample:' || text")
     return f"""
 WITH keyed AS (
   SELECT source, doc_id, n_chars AS weight,
     CAST(FLOOR(
       ln((CAST(({h}) % {_SPLIT_MOD} AS DOUBLE) + 0.5) / {_SPLIT_MOD})
-      / CAST(n_chars AS DOUBLE) * {_NLL_SCALE}
+      / CAST(n_chars AS DOUBLE) * {NB_SCALE}
     ) AS BIGINT) AS key_q
   FROM documents
 ),
@@ -1831,13 +1776,18 @@ ORDER BY source, sample_rank
 
 # ---------------------------------------------------------------------------
 # E55 — BPE merge application + re-count (the round-2 composition over
-# E51): apply the highest-count merge candidate to the vocabulary's
-# symbol sequences — literal leftmost-first replacement of the pair, the
-# same greedy application order as reference BPE trainers — then re-count
-# adjacent symbol pairs over the re-segmented sequences. Together with
-# E51 this materializes one full iteration of the BPE training loop
-# (count -> merge -> recount); the production loop replays this query per
-# merge with the growing merges table.
+# E51): apply round 1's best pair to the vocabulary's symbol sequences,
+# then re-count adjacent symbol pairs with the E89 trainer's
+# _bpe_pair_counts. Together with E51 this materializes one full
+# iteration of the BPE training loop (count -> merge -> recount).
+#
+# Round-1 symbols are single characters, so ONE plain leftmost replace of
+# 'a b' by 'ab' is exact greedy BPE: a match can only start on a symbol,
+# and the scan resumes on the separator after it ('1 0 0 0 0 0' with '00'
+# yields '1 00 00 0'). The trainer's _bpe_apply is not used here: its
+# sentinel double replace splits runs of five or more of a doubled pair
+# (' 1 0 0 0 0 0 ' yields ' 1 00 0 00 '), see E89. Off such runs the
+# rank-1 row is ml_bpe_train's merge 2.
 #
 # Post-merge symbols are multi-character, so round-2 pairs are emitted as
 # (sym_a, sym_b) columns, not a concatenation (which would be ambiguous).
@@ -1851,66 +1801,20 @@ BPE_ROUND2_TOP = 50
 
 
 def bpe_merge_round(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents")
-    words = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
+    seg = _bpe_vocab_seg(spark)
+    best = _bpe_best(_bpe_pair_counts(seg)).select(
+        F.concat_ws(" ", "sym_a", "sym_b").alias("pat"),
+        F.concat("sym_a", "sym_b").alias("applied_pair"),
     )
-    wcounts = (
-        words.groupBy("w")
-        .agg(F.count("*").cast("long").alias("wc"))
-        .filter(F.length("w") >= 2)
+    merged = seg.crossJoin(F.broadcast(best)).select(
+        "wc", "applied_pair", F.replace("seg", "pat", "applied_pair").alias("seg")
     )
-    pairs1 = wcounts.select(
-        "wc",
-        F.explode(
-            F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
-        ).alias("pair"),
-    )
-    top1 = (
-        pairs1.groupBy("pair")
-        .agg(F.sum("wc").cast("long").alias("pair_count"))
-        .orderBy(F.desc("pair_count"), F.asc("pair"))
-        .limit(1)
-        .select(F.col("pair").alias("applied_pair"))
-    )
-    seg = F.expr(
-        "array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), ' ')"
-    )
-    with_merge = wcounts.crossJoin(F.broadcast(top1))
-    seg2 = F.replace(
-        seg,
-        F.concat(
-            F.substring("applied_pair", 1, 1),
-            F.lit(" "),
-            F.substring("applied_pair", 2, 1),
-        ),
-        F.col("applied_pair"),
-    )
-    toks = with_merge.select(
-        "wc", "applied_pair", F.split(seg2, " ").alias("toks")
-    ).filter(F.size("toks") >= 2)
-    pairs2 = toks.select(
-        "wc",
-        "applied_pair",
-        F.explode(F.expr("sequence(1, size(toks) - 1)")).alias("i"),
-        "toks",
-    ).select(
-        "wc",
-        "applied_pair",
-        F.element_at("toks", F.col("i").cast("int")).alias("sym_a"),
-        F.element_at("toks", F.col("i").cast("int") + 1).alias("sym_b"),
-    )
-    agg2 = pairs2.groupBy("applied_pair", "sym_a", "sym_b").agg(
-        F.sum("wc").cast("long").alias("pair_count")
-    )
-    top = agg2.orderBy(
-        F.desc("pair_count"), F.asc("sym_a"), F.asc("sym_b")
-    ).limit(BPE_ROUND2_TOP)
-    rank = Window.orderBy(F.desc("pair_count"), F.asc("sym_a"), F.asc("sym_b"))
-    return (
-        top.withColumn("merge_rank", F.row_number().over(rank).cast("int"))
-        .select("merge_rank", "applied_pair", "sym_a", "sym_b", "pair_count")
-        .orderBy("merge_rank")
+    recount = _bpe_pair_counts(merged, "applied_pair")
+    return _bpe_top(
+        recount,
+        BPE_ROUND2_TOP,
+        ["sym_a", "sym_b"],
+        ["applied_pair", "sym_a", "sym_b", "pair_count"],
     )
 
 
@@ -1966,23 +1870,25 @@ LIMIT {BPE_ROUND2_TOP}
 
 
 # ---------------------------------------------------------------------------
-# E89 — iterative BPE trainer (Sennrich et al. 2016): the N-round
-# generalization of E51/E55's single count->merge->recount iteration,
-# emitting the ORDERED merge table a tokenizer build consumes. Each round
-# counts adjacent symbol pairs over the DISTINCT-word segmentation
-# relation (the classic O(vocab)-per-round BPE trick — corpus word counts
-# are folded once, never re-scanned), picks the argmax pair
-# (ties: sym_a, sym_b ascending — engine-aligned string collation on
+# E89 — iterative BPE trainer (Sennrich et al. 2016): the N-round loop
+# whose stages E51 (round 1's counts) and E55 (round 1's recount) also
+# run, emitting the ORDERED merge table a tokenizer build consumes.
+# Each round counts adjacent symbol pairs over the DISTINCT-word
+# segmentation relation (the classic O(vocab)-per-round BPE trick —
+# corpus word counts are folded once, never re-scanned), picks the argmax
+# pair (ties: sym_a, sym_b ascending — engine-aligned string collation on
 # ASCII), and applies it as a literal leftmost-greedy merge.
 #
 # Merge application: segmentations are space-joined symbol strings wrapped
 # in sentinel spaces (' c h a r s '), and the pair is replaced textually
 # (' a b ' -> ' ab '). A single leftmost non-overlapping replace pass
 # misses an occurrence whose LEADING separator was consumed by the
-# previous replacement's trailing space ('a b a b' chains); after one
-# pass the survivors are isolated, so applying the replace twice
-# completes exact greedy BPE ('a a a' correctly yields 'aa a'). Both
-# engines implement the same leftmost/scan-after-replacement semantics.
+# previous replacement's trailing space ('a b a b' chains); the second
+# pass merges those survivors ('a a a' yields 'aa a', 'a b a b' yields
+# 'ab ab'). That is exact greedy BPE except on a run of five or more of a
+# doubled pair's symbol, where pass 1 leaves the third symbol between two
+# merges (' a a a a a ' yields ' aa a aa ', greedy gives ' aa aa a ').
+# The oracle applies the same two passes, so both engines agree on it.
 #
 # The round-consistency property (round i+1's pair counts equal a
 # from-scratch recount after applying merge i) is pinned in
@@ -2002,11 +1908,9 @@ def _bpe_vocab_seg(spark: SparkSession, keep_word: bool = False) -> DataFrame:
     segmentation wrapped in sentinel spaces (' c h a r s ').
     keep_word additionally carries the word itself (the encoder's join
     key back to the corpus)."""
-    words = spark.table("documents").select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
-    )
     wcounts = (
-        words.groupBy("w")
+        _doc_words(spark)
+        .groupBy("w")
         .agg(F.count("*").cast("long").alias("wc"))
         .filter(F.length("w") >= 2)
     )
@@ -2019,22 +1923,13 @@ def _bpe_vocab_seg(spark: SparkSession, keep_word: bool = False) -> DataFrame:
     return wcounts.select(*cols)
 
 
-def _bpe_pair_counts(segged: DataFrame) -> DataFrame:
-    """(sym_a, sym_b, pair_count) over the current segmentation."""
-    t = segged.select("wc", F.split(F.trim(F.col("seg")), " ").alias("toks")).filter(
-        F.size("toks") >= 2
-    )
-    pairs = t.select(
-        "wc",
-        F.explode(F.expr("sequence(1, size(toks) - 1)")).alias("i"),
-        "toks",
-    ).select(
-        "wc",
-        F.element_at("toks", F.col("i").cast("int")).alias("sym_a"),
-        F.element_at("toks", F.col("i").cast("int") + 1).alias("sym_b"),
-    )
-    return pairs.groupBy("sym_a", "sym_b").agg(
-        F.sum("wc").cast("long").alias("pair_count")
+def _bpe_pair_counts(segged: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., sym_a, sym_b, pair_count) over the current segmentation."""
+    toks = segged.select("wc", *keys, F.split(F.trim(F.col("seg")), " ").alias("toks"))
+    return (
+        _token_pairs(toks, "toks", "wc", *keys, names=("sym_a", "sym_b"))
+        .groupBy(*keys, "sym_a", "sym_b")
+        .agg(F.sum("wc").cast("long").alias("pair_count"))
     )
 
 
@@ -2075,58 +1970,63 @@ def bpe_train(spark: SparkSession, rounds: int = BPE_TRAIN_ROUNDS) -> DataFrame:
     return out.orderBy("merge_rank")
 
 
-def oracle_bpe_train(rounds: int = BPE_TRAIN_ROUNDS) -> str:
-    seg0 = (
-        "SELECT wc, ' ' || array_to_string(list_transform(range(1, length(w) + 1), "
-        "i -> substr(w, CAST(i AS INT), 1)), ' ') || ' ' AS seg FROM wcounts"
-    )
-
-    def pair_cte(seg_name: str, name: str) -> str:
-        return f"""{name} AS (
-  SELECT toks[CAST(i AS INT)] AS sym_a, toks[CAST(i AS INT) + 1] AS sym_b,
-    CAST(SUM(wc) AS BIGINT) AS pair_count
-  FROM (SELECT wc, string_split(trim(seg), ' ') AS toks FROM {seg_name}) s,
-       LATERAL (SELECT unnest(range(1, len(toks))) AS i) g
-  WHERE len(toks) >= 2
-  GROUP BY sym_a, sym_b
-)"""
-
+def _sql_bpe_rounds(rounds: int, encode: bool) -> list[str]:
+    """The oracle CTE chain shared by E89 and E91: corpus words -> distinct
+    word counts -> character segmentation seg0 -> per round r the pair
+    counts p{r}, the argmax b{r} and the merged segmentation seg{r} (the
+    trainer stops before merging its last pair). The encoder carries
+    doc_id through the words and each word through its segmentation."""
+    d, w = ("doc_id, ", "w, ") if encode else ("", "")
     parts = [
-        r"""words AS (
-  SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
+        rf"""words AS (
+  SELECT {d}unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
   FROM documents
 )""",
         """wcounts AS (
   SELECT w, CAST(COUNT(*) AS BIGINT) AS wc
   FROM words WHERE length(w) >= 2 GROUP BY w
 )""",
-        f"seg0 AS ({seg0})",
+        f"seg0 AS (SELECT {w}wc, ' ' || array_to_string(list_transform("
+        "range(1, length(w) + 1), i -> substr(w, CAST(i AS INT), 1)), ' ')"
+        " || ' ' AS seg FROM wcounts)",
     ]
-    selects = []
     for r in range(1, rounds + 1):
-        parts.append(pair_cte(f"seg{r - 1}", f"p{r}"))
+        parts.append(
+            f"""p{r} AS (
+  SELECT toks[CAST(i AS INT)] AS sym_a, toks[CAST(i AS INT) + 1] AS sym_b,
+    CAST(SUM(wc) AS BIGINT) AS pair_count
+  FROM (SELECT wc, string_split(trim(seg), ' ') AS toks FROM seg{r - 1}) s,
+       LATERAL (SELECT unnest(range(1, len(toks))) AS i) g
+  WHERE len(toks) >= 2
+  GROUP BY sym_a, sym_b
+)"""
+        )
         parts.append(
             f"""b{r} AS (
-  SELECT sym_a, sym_b, pair_count FROM p{r}
+  SELECT sym_a, sym_b{"" if encode else ", pair_count"} FROM p{r}
   ORDER BY pair_count DESC, sym_a ASC, sym_b ASC LIMIT 1
 )"""
         )
-        selects.append(
-            f"SELECT {r} AS merge_rank, sym_a, sym_b,"
-            f" sym_a || sym_b AS merged, pair_count FROM b{r}"
-        )
-        if r < rounds:
+        if encode or r < rounds:
             parts.append(
                 f"""seg{r} AS (
-  SELECT wc,
+  SELECT {w}wc,
     replace(replace(seg,
       ' ' || sym_a || ' ' || sym_b || ' ', ' ' || sym_a || sym_b || ' '),
       ' ' || sym_a || ' ' || sym_b || ' ', ' ' || sym_a || sym_b || ' ') AS seg
   FROM seg{r - 1} CROSS JOIN b{r}
 )"""
             )
-    body = ",\n".join(parts)
-    union = "\nUNION ALL\n".join(selects)
+    return parts
+
+
+def oracle_bpe_train(rounds: int = BPE_TRAIN_ROUNDS) -> str:
+    body = ",\n".join(_sql_bpe_rounds(rounds, encode=False))
+    union = "\nUNION ALL\n".join(
+        f"SELECT {r} AS merge_rank, sym_a, sym_b,"
+        f" sym_a || sym_b AS merged, pair_count FROM b{r}"
+        for r in range(1, rounds + 1)
+    )
     return f"""
 WITH {body}
 SELECT CAST(merge_rank AS INT) AS merge_rank, sym_a, sym_b, merged, pair_count
@@ -2180,10 +2080,7 @@ def _bpe_tokens_per_word(spark: SparkSession, rounds: int) -> DataFrame:
 
 def bpe_encode(spark: SparkSession, rounds: int = BPE_ENCODE_ROUNDS) -> DataFrame:
     tok_per_word = _bpe_tokens_per_word(spark, rounds)
-    words = spark.table("documents").select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
+    words = _doc_words(spark, "doc_id")
     return (
         words.join(tok_per_word, "w", "left")
         .groupBy("doc_id")
@@ -2208,49 +2105,7 @@ def bpe_encode(spark: SparkSession, rounds: int = BPE_ENCODE_ROUNDS) -> DataFram
 
 
 def oracle_bpe_encode(rounds: int = BPE_ENCODE_ROUNDS) -> str:
-    seg0 = (
-        "SELECT w, wc, ' ' || array_to_string(list_transform(range(1, length(w) + 1), "
-        "i -> substr(w, CAST(i AS INT), 1)), ' ') || ' ' AS seg FROM wcounts"
-    )
-
-    def pair_cte(seg_name: str, name: str) -> str:
-        return f"""{name} AS (
-  SELECT toks[CAST(i AS INT)] AS sym_a, toks[CAST(i AS INT) + 1] AS sym_b,
-    CAST(SUM(wc) AS BIGINT) AS pair_count
-  FROM (SELECT wc, string_split(trim(seg), ' ') AS toks FROM {seg_name}) s,
-       LATERAL (SELECT unnest(range(1, len(toks))) AS i) g
-  WHERE len(toks) >= 2
-  GROUP BY sym_a, sym_b
-)"""
-
-    parts = [
-        r"""words AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-  FROM documents
-)""",
-        """wcounts AS (
-  SELECT w, CAST(COUNT(*) AS BIGINT) AS wc
-  FROM words WHERE length(w) >= 2 GROUP BY w
-)""",
-        f"seg0 AS ({seg0})",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(pair_cte(f"seg{r - 1}", f"p{r}"))
-        parts.append(
-            f"""b{r} AS (
-  SELECT sym_a, sym_b FROM p{r}
-  ORDER BY pair_count DESC, sym_a ASC, sym_b ASC LIMIT 1
-)"""
-        )
-        parts.append(
-            f"""seg{r} AS (
-  SELECT w, wc,
-    replace(replace(seg,
-      ' ' || sym_a || ' ' || sym_b || ' ', ' ' || sym_a || sym_b || ' '),
-      ' ' || sym_a || ' ' || sym_b || ' ', ' ' || sym_a || sym_b || ' ') AS seg
-  FROM seg{r - 1} CROSS JOIN b{r}
-)"""
-        )
+    parts = _sql_bpe_rounds(rounds, encode=True)
     parts.append(
         f"""tokw AS (
   SELECT w, CAST(len(string_split(trim(seg), ' ')) AS BIGINT) AS w_tokens
@@ -2303,35 +2158,11 @@ def _dsir_bigram_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, source, b): hashed word-bigram bucket per occurrence.
     Stateless row-local expressions only, so the SAME projection runs
     unchanged over a streaming DataFrame (st_ml_stream_dsir)."""
-    from collector_spark.ml.dedup import _hash60
-
-    wl = docs.select(
+    wl = docs.select("doc_id", "source", _tokens().alias("wl"))
+    return _token_pairs(wl, "wl", "doc_id", "source").select(
         "doc_id",
         "source",
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("wl"),
-    )
-    return (
-        wl.filter(F.size("wl") >= 2)
-        .select(
-            "doc_id",
-            "source",
-            F.explode(F.expr("sequence(1, size(wl) - 1)")).alias("i"),
-            "wl",
-        )
-        .select(
-            "doc_id",
-            "source",
-            (
-                _hash60(
-                    F.concat_ws(
-                        " ",
-                        F.element_at("wl", F.col("i").cast("int")),
-                        F.element_at("wl", F.col("i").cast("int") + 1),
-                    )
-                )
-                % DSIR_BUCKETS
-            ).alias("b"),
-        )
+        (_hash60(F.concat_ws(" ", "w1", "w2")) % DSIR_BUCKETS).alias("b"),
     )
 
 
@@ -2366,31 +2197,29 @@ def _dsir_ratio_table(bigrams: DataFrame) -> DataFrame:
     )
 
 
-def dsir_weights(spark: SparkSession) -> DataFrame:
-    bigrams = _dsir_bigram_buckets(spark.table("documents"))
-    ratio = _dsir_ratio_table(bigrams)
-    lq = F.floor(F.log(F.col("ratio")) * _NLL_SCALE).cast("long")
-    scored = bigrams.join(F.broadcast(ratio), "b").select(
-        "doc_id", lq.alias("lq")
-    )
+def dsir_from_ratio(bigrams: DataFrame, ratio: DataFrame) -> DataFrame:
+    """E57's scoring stage: (doc_id, n_bigrams, log_weight) from the
+    bucketed bigram occurrences and the (b, ratio) table — shared by the
+    batch operator and the streaming twin (a stream-static join there).
+    log_weight is the exact grid sum of ln(ratio), one division."""
     return (
-        scored.groupBy("doc_id")
+        bigrams.join(F.broadcast(ratio), "b")
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_bigrams"),
-            F.sum("lq").alias("sum_q"),
+            (F.sum(_qgrid(F.log(F.col("ratio")))).cast("double") / NB_SCALE).alias(
+                "log_weight"
+            ),
         )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (F.col("sum_q").cast("double") / _NLL_SCALE).alias("log_weight"),
-        )
-        .orderBy("doc_id")
     )
+
+
+def dsir_weights(spark: SparkSession) -> DataFrame:
+    bigrams = _dsir_bigram_buckets(spark.table("documents"))
+    return dsir_from_ratio(bigrams, _dsir_ratio_table(bigrams)).orderBy("doc_id")
 
 
 def oracle_dsir_weights() -> str:
-    from collector_spark.ml.dedup import _sql_hash60
-
     h = _sql_hash60("wl[CAST(i AS INT)] || ' ' || wl[CAST(i AS INT) + 1]")
     return rf"""
 WITH docs AS (
@@ -2425,8 +2254,8 @@ ratio AS (
   FROM r_counts r LEFT JOIN t_counts t USING (b) CROSS JOIN totals x
 )
 SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-  CAST(SUM(CAST(FLOOR(ln(ratio) * {_NLL_SCALE}) AS BIGINT)) AS DOUBLE)
-    / {_NLL_SCALE} AS log_weight
+  CAST(SUM(CAST(FLOOR(ln(ratio) * {NB_SCALE}) AS BIGINT)) AS DOUBLE)
+    / {NB_SCALE} AS log_weight
 FROM bigrams g JOIN ratio USING (b)
 GROUP BY g.doc_id
 ORDER BY g.doc_id
@@ -2771,8 +2600,8 @@ total AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM vocab),
 nll AS (
   SELECT doc_id,
     CAST(SUM(CAST(FLOOR(-ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))
-                        * {_NLL_SCALE}) AS BIGINT)) AS DOUBLE)
-      / (CAST(COUNT(*) AS DOUBLE) * {_NLL_SCALE}) AS mean_nll
+                        * {NB_SCALE}) AS BIGINT)) AS DOUBLE)
+      / (CAST(COUNT(*) AS DOUBLE) * {NB_SCALE}) AS mean_nll
   FROM words JOIN vocab USING (w) CROSS JOIN total
   GROUP BY doc_id
 ),
@@ -2819,12 +2648,8 @@ VOCAB_COV_K = 16
 
 
 def vocab_coverage(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents")
-    words = docs.select(
-        "source",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
+    words = _doc_words(spark, "source")
+    vocab, _ = _unigram_model(words)
     topk = vocab.orderBy(F.col("cnt").desc(), "w").limit(VOCAB_COV_K)
     j = words.join(
         F.broadcast(topk.select("w", F.lit(True).alias("in_vocab"))), "w", "left"
@@ -2901,7 +2726,7 @@ def _gopher_exprs() -> dict[str, "F.Column"]:
     — shared by the audit table (gopher_filters) and every consumer that
     needs the keep label inline (the E113 classifier's streamable fold,
     where a label JOIN would be a stream-stream join)."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens()
     n_words = F.size(toks).cast("long")
     mean_wl = (F.col("n_chars") - (n_words - 1)).cast("double") / n_words
     # '#' and '...' are Gopher's symbol set; count occurrences in the raw
@@ -3109,29 +2934,13 @@ KN_DISCOUNT = 0.75
 
 
 def kneser_ney_bigram(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents").select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("wl")
-    )
-    bigrams = (
-        docs.filter(F.size("wl") >= 2)
-        .select(
-            "doc_id",
-            F.explode(F.expr("sequence(1, size(wl) - 1)")).alias("i"),
-            "wl",
-        )
-        .select(
-            "doc_id",
-            F.element_at("wl", F.col("i").cast("int")).alias("w1"),
-            F.element_at("wl", F.col("i").cast("int") + 1).alias("w2"),
-        )
-        # r12 optimization: the bigram explode fed FIVE subtree
-        # evaluations (the scoring join plus c2/ctx/cont/types_total,
-        # which each re-derived it through live lineage — 5 Generate
-        # nodes in the plan). Checkpoint the exploded relation once and
-        # the model count relation once; every branch reads materialized
-        # rows.
-        .localCheckpoint(eager=False)
-    )
+    docs = spark.table("documents").select("doc_id", _tokens().alias("wl"))
+    # r12 optimization: the bigram explode fed FIVE subtree evaluations
+    # (the scoring join plus c2/ctx/cont/types_total, which each
+    # re-derived it through live lineage — 5 Generate nodes in the plan).
+    # Checkpoint the exploded relation once and the model count relation
+    # once; every branch reads materialized rows.
+    bigrams = _token_pairs(docs, "wl", "doc_id").localCheckpoint(eager=False)
     c2 = (
         bigrams.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("cnt2"))
@@ -3152,7 +2961,6 @@ def kneser_ney_bigram(spark: SparkSession) -> DataFrame:
     ) * (
         F.col("n_left").cast("double") / F.col("n_types").cast("double")
     )
-    nll_q = F.floor(-F.log(p) * _NLL_SCALE).cast("long")
     return (
         bigrams.join(c2, ["w1", "w2"])
         .join(ctx, "w1")
@@ -3161,15 +2969,7 @@ def kneser_ney_bigram(spark: SparkSession) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_bigrams"),
-            F.sum(nll_q).alias("sum_q"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (
-                F.col("sum_q").cast("double")
-                / (F.col("n_bigrams").cast("double") * _NLL_SCALE)
-            ).alias("mean_kn_nll"),
+            _grid_mean(-F.log(p)).alias("mean_kn_nll"),
         )
         .orderBy("doc_id")
     )
@@ -3205,7 +3005,7 @@ scored AS (
       + ({KN_DISCOUNT} * CAST(ctx.fanout AS DOUBLE)
            / CAST(ctx.ctx_total AS DOUBLE))
         * (CAST(cont.n_left AS DOUBLE) / CAST(tt.n_types AS DOUBLE))
-    ) * {_NLL_SCALE}) AS BIGINT) AS nll_q
+    ) * {NB_SCALE}) AS BIGINT) AS nll_q
   FROM bigrams b
   JOIN c2 USING (w1, w2)
   JOIN ctx USING (w1)
@@ -3214,7 +3014,7 @@ scored AS (
 )
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
   CAST(SUM(nll_q) AS DOUBLE)
-    / (CAST(COUNT(*) AS DOUBLE) * {_NLL_SCALE}) AS mean_kn_nll
+    / (CAST(COUNT(*) AS DOUBLE) * {NB_SCALE}) AS mean_kn_nll
 FROM scored
 GROUP BY doc_id
 ORDER BY doc_id
@@ -3243,12 +3043,13 @@ ZIPF_TOP_R = 200
 
 
 def zipf_fit(spark: SparkSession) -> DataFrame:
-    words = spark.table("documents").select(
-        "source",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    counts = words.groupBy("source", "w").agg(F.count("*").cast("long").alias("cnt"))
-    return zipf_fit_from_counts(counts)
+    return zipf_fit_from_counts(_source_word_counts(spark.table("documents")))
+
+
+def _source_word_counts(docs: DataFrame) -> DataFrame:
+    """The additive (source, w, cnt) fold — the streaming twin's state."""
+    words = docs.select("source", F.explode(_tokens()).alias("w"))
+    return words.groupBy("source", "w").agg(F.count("*").cast("long").alias("cnt"))
 
 
 def zipf_fit_from_counts(counts: DataFrame) -> DataFrame:
@@ -3263,8 +3064,8 @@ def zipf_fit_from_counts(counts: DataFrame) -> DataFrame:
             Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("w"))
         ),
     ).filter(F.col("rank") <= ZIPF_TOP_R)
-    qx = F.floor(F.log(F.col("rank").cast("double")) * _NLL_SCALE).cast("long")
-    qy = F.floor(F.log(F.col("cnt").cast("double")) * _NLL_SCALE).cast("long")
+    qx = _qlog(F.col("rank"))
+    qy = _qlog(F.col("cnt"))
     sums = ranked.groupBy("source").agg(
         F.count("*").cast("long").alias("n"),
         F.sum(qx).alias("sx"),
@@ -3288,13 +3089,13 @@ def zipf_fit_from_counts(counts: DataFrame) -> DataFrame:
         "source",
         F.col("n").alias("n_points"),
         slope.alias("zipf_slope"),
-        ((sy - (cov / vx) * sx) / (n * _NLL_SCALE)).alias("zipf_intercept"),
+        ((sy - (cov / vx) * sx) / (n * NB_SCALE)).alias("zipf_intercept"),
         ((cov * cov) / (vx * vy)).alias("r_squared"),
     ).orderBy("source")
 
 
 def oracle_zipf_fit() -> str:
-    s = _NLL_SCALE
+    s = NB_SCALE
     return rf"""
 WITH words AS (
   SELECT source, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
@@ -3629,10 +3430,9 @@ def score_drift(spark: SparkSession) -> DataFrame:
             # floor-quantized on the shared 2^20 grid: Java's Math.log and
             # libm log may differ in the last ulp for the same argument —
             # the same cross-engine hazard the NLL scores pin this way
-            (
-                F.floor((p - q) * F.log(p / q) * _NLL_SCALE)
-                / F.lit(float(_NLL_SCALE))
-            ).alias("psi_contrib"),
+            (_qgrid((p - q) * F.log(p / q)) / F.lit(float(NB_SCALE))).alias(
+                "psi_contrib"
+            ),
         )
         .orderBy("bucket")
     )
@@ -3671,7 +3471,7 @@ SELECT bucket, n_existing, n_incoming,
    - (CAST(n_incoming AS DOUBLE) + {sm}) / (CAST(ti AS DOUBLE) + {sb}))
   * ln(((CAST(n_existing AS DOUBLE) + {sm}) / (CAST(te AS DOUBLE) + {sb}))
        / ((CAST(n_incoming AS DOUBLE) + {sm}) / (CAST(ti AS DOUBLE) + {sb})))
-  * {_NLL_SCALE}) / CAST({_NLL_SCALE} AS DOUBLE) AS psi_contrib
+  * {NB_SCALE}) / CAST({NB_SCALE} AS DOUBLE) AS psi_contrib
 FROM counts CROSS JOIN totals
 ORDER BY bucket
 """
@@ -3826,11 +3626,7 @@ def tokenizer_fertility(
     spark: SparkSession, rounds: int = BPE_ENCODE_ROUNDS
 ) -> DataFrame:
     tok_per_word = _bpe_tokens_per_word(spark, rounds)
-    words = spark.table("documents").select(
-        "doc_id",
-        "source",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
+    words = _doc_words(spark, "doc_id", "source")
     return (
         words.join(tok_per_word, "w", "left")
         .groupBy("source")
@@ -4046,25 +3842,21 @@ PMI_MIN_COUNT = 5
 PMI_MIN_LIFT = 2
 
 
+def _word_pair_counts(docs: DataFrame, window: int) -> DataFrame:
+    """(w1, w2, n_pair): counts of the ordered word pairs at most
+    ``window`` apart. Additive groupBy, so the SAME expression folds the
+    streaming twins' state (st_ml_pmi, st_ml_skipgram) — batch-equal under
+    any arrival batching."""
+    wl = docs.select(_tokens().alias("wl"))
+    return (
+        _token_pairs(wl, "wl", window=window)
+        .groupBy("w1", "w2")
+        .agg(F.count("*").cast("long").alias("n_pair"))
+    )
+
+
 def _bigram_pair_counts(docs: DataFrame) -> DataFrame:
-    """(w1, w2, n_pair): adjacent-pair counts. Additive groupBy, so the
-    SAME expression folds the streaming twin's state (st_ml_pmi) —
-    batch-equal under any arrival batching."""
-    wl = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    bigrams = (
-        docs.select("doc_id", wl.alias("wl"))
-        .filter(F.size("wl") >= 2)
-        .select(
-            F.explode(F.expr("sequence(1, size(wl) - 1)")).alias("i"), "wl"
-        )
-        .select(
-            F.element_at("wl", F.col("i").cast("int")).alias("w1"),
-            F.element_at("wl", F.col("i").cast("int") + 1).alias("w2"),
-        )
-    )
-    return bigrams.groupBy("w1", "w2").agg(
-        F.count("*").cast("long").alias("n_pair")
-    )
+    return _word_pair_counts(docs, 1)
 
 
 def pmi_from_pair_counts(c12: DataFrame) -> DataFrame:
@@ -4189,7 +3981,7 @@ def _nbq_token_rows(docs: DataFrame) -> DataFrame:
     keep = _gopher_exprs()["keep"]
     toks = docs.select(
         keep.alias("label_keep"),
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
+        F.explode(_tokens()).alias("tok"),
     )
     markers = docs.select(
         keep.alias("label_keep"), F.lit(NB_DOC_MARKER).alias("tok")
@@ -4219,7 +4011,7 @@ def _nbq_doc_tf(docs: DataFrame) -> DataFrame:
         docs.select(
             "doc_id",
             _gopher_exprs()["keep"].alias("label_keep"),
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
+            F.explode(_tokens()).alias("tok"),
         )
         .groupBy("doc_id", "tok")
         .agg(
@@ -4240,7 +4032,7 @@ def nb_quality_from_counts(
     checkpointed) per-doc token-frequency relation; it feeds two branches
     (the class sums and the doc length), so when absent the derivation is
     checkpointed here rather than exploded twice (r12 optimization)."""
-    from collector_spark.ml.textstats import NB_DOC_MARKER, _qlog
+    from collector_spark.ml.textstats import NB_DOC_MARKER
 
     model = counts.filter(F.col("tok") != NB_DOC_MARKER).select(
         F.col("label_keep").alias("m_cls"),
@@ -4372,10 +4164,7 @@ def _nb_quality_core(
 
 
 def oracle_nb_quality() -> str:
-    from collector_spark.ml.textstats import NB_SCALE
-
     labels_inner = oracle_gopher_filters().rsplit("ORDER BY", 1)[0]
-    ql = lambda arg: f"CAST(floor(ln(CAST({arg} AS DOUBLE)) * {NB_SCALE}) AS BIGINT)"  # noqa: E731
     return rf"""
 WITH lab AS (SELECT doc_id, keep AS label_keep FROM ({labels_inner}) g),
 toks AS (
@@ -4395,8 +4184,8 @@ model AS (
 vocab AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS v FROM toks),
 cls AS (
   SELECT m.m_cls AS cls,
-    {ql('t.t + vo.v')} AS q_denom,
-    {ql('p.d')} AS q_prior
+    {_sql_qlog('t.t + vo.v')} AS q_denom,
+    {_sql_qlog('p.d')} AS q_prior
   FROM (SELECT m_cls, CAST(SUM(c) AS BIGINT) AS t FROM model GROUP BY m_cls) t
   JOIN (SELECT m_cls FROM model GROUP BY m_cls) m ON m.m_cls = t.m_cls
   JOIN (SELECT label_keep, CAST(COUNT(*) AS BIGINT) AS d
@@ -4405,9 +4194,9 @@ cls AS (
 ),
 sums AS (
   SELECT f.doc_id, MAX(f.label_keep) AS label_keep,
-    CAST(SUM(CASE WHEN m.m_cls THEN f.tf * {ql('m.c + 1')} ELSE 0 END) AS BIGINT)
+    CAST(SUM(CASE WHEN m.m_cls THEN f.tf * {_sql_qlog('m.c + 1')} ELSE 0 END) AS BIGINT)
       AS s_keep,
-    CAST(SUM(CASE WHEN NOT m.m_cls THEN f.tf * {ql('m.c + 1')} ELSE 0 END) AS BIGINT)
+    CAST(SUM(CASE WHEN NOT m.m_cls THEN f.tf * {_sql_qlog('m.c + 1')} ELSE 0 END) AS BIGINT)
       AS s_drop
   FROM tf f JOIN model m ON m.tok = f.tok
   GROUP BY f.doc_id
@@ -4427,9 +4216,9 @@ cagg AS (
   FROM cls
 ),
 cboth AS (
-  SELECT COALESCE(cagg.qdk0, {ql('vo.v')}) AS qd_keep,
+  SELECT COALESCE(cagg.qdk0, {_sql_qlog('vo.v')}) AS qd_keep,
          COALESCE(cagg.qpk0, {NB_ABSENT_PRIOR}) AS qp_keep,
-         COALESCE(cagg.qdd0, {ql('vo.v')}) AS qd_drop,
+         COALESCE(cagg.qdd0, {_sql_qlog('vo.v')}) AS qd_drop,
          COALESCE(cagg.qpd0, {NB_ABSENT_PRIOR}) AS qp_drop
   FROM cagg CROSS JOIN vocab vo
 ),
@@ -4470,23 +4259,7 @@ SKIPGRAM_WINDOW = 3
 
 
 def _skipgram_pair_counts(docs: DataFrame) -> DataFrame:
-    w = SKIPGRAM_WINDOW
-    wl = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    pairs = (
-        docs.select(wl.alias("wl"))
-        .filter(F.size("wl") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(1, size(wl) - 1), i -> "
-                    f"transform(sequence(i + 1, least(i + {w}, size(wl))), j -> "
-                    f"struct(element_at(wl, i) AS w1, element_at(wl, j) AS w2))))"
-                )
-            ).alias("p")
-        )
-        .select("p.w1", "p.w2")
-    )
-    return pairs.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("n_pair"))
+    return _word_pair_counts(docs, SKIPGRAM_WINDOW)
 
 
 def skipgram_pmi(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
@@ -4551,9 +4324,6 @@ QSAMPLE_M = 1 << 20
 
 
 def quality_sample(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
-    from collector_spark.ml.dedup import _hash60
-    from collector_spark.ml.textstats import _qlog
-
     docs_t = spark.table("documents") if docs is None else docs
     margins = _nb_quality_core(spark, docs).select(
         "doc_id", "label_keep", "logodds_q"
@@ -4578,19 +4348,15 @@ def quality_sample(spark: SparkSession, docs: DataFrame | None = None) -> DataFr
 
 
 def oracle_quality_sample() -> str:
-    from collector_spark.ml.dedup import _sql_hash60
-    from collector_spark.ml.textstats import NB_SCALE
-
     margins = oracle_nb_quality().rsplit("ORDER BY", 1)[0]
     salted = "'qsample:' || text"
     h = f"({_sql_hash60(salted)}) % {QSAMPLE_M - 1} + 1"
-    ql = lambda a: f"CAST(floor(ln(CAST({a} AS DOUBLE)) * {NB_SCALE}) AS BIGINT)"  # noqa: E731
     return f"""
 WITH m AS ({margins}),
 hsh AS (SELECT doc_id, source, CAST({h} AS BIGINT) AS h FROM documents)
 SELECT m.doc_id, hsh.source, m.label_keep, m.logodds_q,
-  {ql('hsh.h')} - {ql(f'{QSAMPLE_M} - hsh.h')} AS logit_q,
-  m.logodds_q > {ql('hsh.h')} - {ql(f'{QSAMPLE_M} - hsh.h')} AS keep
+  {_sql_qlog('hsh.h')} - {_sql_qlog(f'{QSAMPLE_M} - hsh.h')} AS logit_q,
+  m.logodds_q > {_sql_qlog('hsh.h')} - {_sql_qlog(f'{QSAMPLE_M} - hsh.h')} AS keep
 FROM m JOIN hsh ON hsh.doc_id = m.doc_id
 ORDER BY m.doc_id
 """
@@ -4624,18 +4390,27 @@ ORDER BY m.doc_id
 # ---------------------------------------------------------------------------
 
 NB_ROC_LIM_NATS = 32
-NB_ROC_BIN = 1 << 20  # one nat per bin on the shared quantized-log grid
+# the clamp in grid units: one nat is NB_SCALE on the shared quantized-log
+# grid, and one nat is one bin
+_ROC_LIM = NB_ROC_LIM_NATS * NB_SCALE
+
+
+def _margin_bin() -> Column:
+    """The one-nat bin (0 .. 2 * NB_ROC_LIM_NATS) of the clamped
+    logodds_q margin."""
+    clamped = F.greatest(F.lit(-_ROC_LIM), F.least(F.lit(_ROC_LIM), F.col("logodds_q")))
+    return F.floor((clamped + F.lit(_ROC_LIM)) / F.lit(float(NB_SCALE))).cast("long")
+
+
+def _bin_q_lo() -> Column:
+    """A bin's lower edge back on the logodds_q scale."""
+    return (F.col("bin") * NB_SCALE - _ROC_LIM).cast("long")
 
 
 def _quality_bin_counts(margins: DataFrame) -> DataFrame:
     """(bin, n_pos, n_neg) over the occupied score bins — the shared fold
     of the ROC curve, the AUC, and the ST30 streaming twin."""
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
-    shifted = (
-        F.greatest(F.lit(-lim), F.least(F.lit(lim), F.col("logodds_q"))) + F.lit(lim)
-    )
-    b = F.floor(shifted / F.lit(float(NB_ROC_BIN))).cast("long")
-    return margins.select(b.alias("bin"), "label_keep").groupBy("bin").agg(
+    return margins.select(_margin_bin().alias("bin"), "label_keep").groupBy("bin").agg(
         F.sum(F.col("label_keep").cast("long")).cast("long").alias("n_pos"),
         F.sum((~F.col("label_keep")).cast("long")).cast("long").alias("n_neg"),
     )
@@ -4671,10 +4446,9 @@ def quality_roc_from_margins(margins: DataFrame) -> DataFrame:
 
 
 def _roc_select(curve: DataFrame) -> DataFrame:
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
     return curve.select(
         "bin",
-        (F.col("bin") * NB_ROC_BIN - lim).cast("long").alias("q_lo"),
+        _bin_q_lo().alias("q_lo"),
         "n_pos",
         "n_neg",
         "tp",
@@ -4741,16 +4515,14 @@ curve AS (
 
 
 def _sql_quality_bins() -> str:
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
     margins = oracle_nb_quality().rsplit("ORDER BY", 1)[0]
-    return f"WITH m AS ({margins}),{_SQL_QUALITY_BINS.format(lim=lim, bin=NB_ROC_BIN)}"
+    return f"WITH m AS ({margins}),{_SQL_QUALITY_BINS.format(lim=_ROC_LIM, bin=NB_SCALE)}"
 
 
 def oracle_quality_roc() -> str:
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
     return f"""
 {_sql_quality_bins()}
-SELECT c.bin, CAST(c.bin * {NB_ROC_BIN} - {lim} AS BIGINT) AS q_lo,
+SELECT c.bin, CAST(c.bin * {NB_SCALE} - {_ROC_LIM} AS BIGINT) AS q_lo,
   c.n_pos, c.n_neg, c.tp, c.fp,
   CASE WHEN t.p_tot > 0 THEN CAST(c.tp AS DOUBLE) / t.p_tot END AS tpr,
   CASE WHEN t.n_tot > 0 THEN CAST(c.fp AS DOUBLE) / t.n_tot END AS fpr
@@ -4766,11 +4538,10 @@ def quality_pr(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
     ratio is ONE IEEE division of exact int64 counts, NULL-guarded on
     empty denominators (one-class corpora still report their counts)."""
     curve = _quality_curve(spark, docs)
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
     fn = F.col("p_tot") - F.col("tp")
     return curve.select(
         "bin",
-        (F.col("bin") * NB_ROC_BIN - lim).cast("long").alias("q_lo"),
+        _bin_q_lo().alias("q_lo"),
         "tp",
         "fp",
         fn.cast("long").alias("fn"),
@@ -4790,10 +4561,9 @@ def quality_pr(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
 
 
 def oracle_quality_pr() -> str:
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
     return f"""
 {_sql_quality_bins()}
-SELECT c.bin, CAST(c.bin * {NB_ROC_BIN} - {lim} AS BIGINT) AS q_lo,
+SELECT c.bin, CAST(c.bin * {NB_SCALE} - {_ROC_LIM} AS BIGINT) AS q_lo,
   c.tp, c.fp, CAST(t.p_tot - c.tp AS BIGINT) AS fn,
   CASE WHEN c.tp + c.fp > 0
        THEN CAST(c.tp AS DOUBLE) / (c.tp + c.fp) END AS precision,
@@ -4833,7 +4603,7 @@ def padding_waste(spark: SparkSession, docs: DataFrame | None = None) -> DataFra
 def _padwaste_counts(docs: DataFrame) -> DataFrame:
     """The additive per-bucket fold (row-local projection + one bounded
     groupBy) — the ST32 streaming twin's state."""
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = _n_tokens()
     b = (F.length(F.bin(toks)) - 1).cast("long")
     kept = F.least(toks, F.lit(PACK_BUDGET).cast("long"))
     trunc = F.greatest(toks - PACK_BUDGET, F.lit(0).cast("long"))
@@ -4925,14 +4695,9 @@ def quality_margin_quantiles(
     that bounded relation — never data-scaled."""
     margins = _nb_quality_core(spark, docs)
     docs_t = spark.table("documents") if docs is None else docs
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
-    shifted = (
-        F.greatest(F.lit(-lim), F.least(F.lit(lim), F.col("logodds_q"))) + F.lit(lim)
-    )
-    b = F.floor(shifted / F.lit(float(NB_ROC_BIN))).cast("long")
     per = (
         margins.join(docs_t.select("doc_id", "source"), "doc_id")
-        .select("source", b.alias("bin"))
+        .select("source", _margin_bin().alias("bin"))
         .groupBy("source", "bin")
         .agg(F.count("*").cast("long").alias("n"))
     )
@@ -4945,10 +4710,9 @@ def quality_margin_quantiles(
     cum = per.withColumn("cum", F.sum("n").over(wc).cast("long")).withColumn(
         "n_docs", F.sum("n").over(wt).cast("long")
     )
-    q_lo = (F.col("bin") * NB_ROC_BIN - lim).cast("long")
     aggs = [F.max("n_docs").alias("n_docs")] + [
         F.min(
-            F.when(F.col("cum") * 100 >= F.lit(p) * F.col("n_docs"), q_lo)
+            F.when(F.col("cum") * 100 >= F.lit(p) * F.col("n_docs"), _bin_q_lo())
         ).alias(f"q{p}_lo")
         for p in QUANTILE_PCTS
     ]
@@ -4956,19 +4720,18 @@ def quality_margin_quantiles(
 
 
 def oracle_quality_margin_quantiles() -> str:
-    lim = NB_ROC_LIM_NATS * NB_ROC_BIN
     margins = oracle_nb_quality().rsplit("ORDER BY", 1)[0]
     qs = ",\n  ".join(
         f"CAST(MIN(CASE WHEN cum * 100 >= {p} * n_docs"
-        f" THEN bin * {NB_ROC_BIN} - {lim} END) AS BIGINT) AS q{p}_lo"
+        f" THEN bin * {NB_SCALE} - {_ROC_LIM} END) AS BIGINT) AS q{p}_lo"
         for p in QUANTILE_PCTS
     )
     return f"""
 WITH m AS ({margins}),
 b AS (
   SELECT d.source,
-    CAST(floor((GREATEST(-{lim}, LEAST({lim}, m.logodds_q)) + {lim})
-         / {NB_ROC_BIN}.0) AS BIGINT) AS bin
+    CAST(floor((GREATEST(-{_ROC_LIM}, LEAST({_ROC_LIM}, m.logodds_q)) + {_ROC_LIM})
+         / {NB_SCALE}.0) AS BIGINT) AS bin
   FROM m JOIN documents d ON d.doc_id = m.doc_id
 ),
 per AS (SELECT source, bin, CAST(COUNT(*) AS BIGINT) AS n FROM b GROUP BY source, bin),
@@ -5019,13 +4782,11 @@ GROUP BY p_tot, n_tot
 
 
 def corpus_balance(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
-    from collector_spark.ml.textstats import _qlog
-
     docs = spark.table("documents") if docs is None else docs
     per_src = docs.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("n_chars"),
-        F.sum(F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")))
+        F.sum(F.size(_tokens()))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -5054,8 +4815,6 @@ def corpus_balance(spark: SparkSession, docs: DataFrame | None = None) -> DataFr
         F.max("t").alias("t"),
         F.max("n_src").alias("n_src"),
     )
-    from collector_spark.ml.textstats import NB_SCALE
-
     return (
         per_src.crossJoin(F.broadcast(corpus))
         .select(
@@ -5082,9 +4841,6 @@ def corpus_balance(spark: SparkSession, docs: DataFrame | None = None) -> DataFr
 
 
 def oracle_corpus_balance() -> str:
-    from collector_spark.ml.textstats import NB_SCALE
-
-    ql = lambda a: f"CAST(floor(ln(CAST({a} AS DOUBLE)) * {NB_SCALE}) AS BIGINT)"  # noqa: E731
     return rf"""
 WITH per_src AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -5105,7 +4861,7 @@ ranked AS (
 ),
 corpus AS (
   SELECT
-    CAST(SUM(n_tokens * ({ql('t')} - {ql('n_tokens')})) AS BIGINT) AS entropy_num,
+    CAST(SUM(n_tokens * ({_sql_qlog('t')} - {_sql_qlog('n_tokens')})) AS BIGINT) AS entropy_num,
     CAST(SUM((2 * rk - n_src - 1) * n_tokens) AS BIGINT) AS gini_num,
     MAX(t) AS t, MAX(n_src) AS n_src
   FROM ranked
@@ -5235,13 +4991,10 @@ def _wsample_keyed(docs: DataFrame) -> DataFrame:
     """Row-local A-ES key projection — shared by the batch sampler and
     the ST33 streaming top-K maintainer (the stream computes the SAME
     JVM expressions; the stateful merge never hashes in Python)."""
-    from collector_spark.ml.dedup import _hash60
-    from collector_spark.ml.textstats import _qlog
-
     h = (
         _hash60(F.concat(F.lit("wsample:"), F.col("text"))) % (QSAMPLE_M - 1) + 1
     ).cast("long")
-    w_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    w_tok = _n_tokens()
     return docs.select(
         "doc_id",
         "source",
@@ -5265,16 +5018,12 @@ def token_weighted_sample(spark: SparkSession, docs: DataFrame | None = None) ->
 
 
 def oracle_token_weighted_sample() -> str:
-    from collector_spark.ml.dedup import _sql_hash60
-    from collector_spark.ml.textstats import NB_SCALE
-
     h = f"({_sql_hash60(chr(39) + 'wsample:' + chr(39) + ' || text')}) % {QSAMPLE_M - 1} + 1"
-    ql = lambda a: f"CAST(floor(ln(CAST({a} AS DOUBLE)) * {NB_SCALE}) AS BIGINT)"  # noqa: E731
     return rf"""
 WITH keyed AS (
   SELECT doc_id, source,
     CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS w_tokens,
-    {ql(h)} - {ql(QSAMPLE_M)} AS lnu_q
+    {_sql_qlog(h)} - {_sql_qlog(QSAMPLE_M)} AS lnu_q
   FROM documents
 ),
 ranked AS (

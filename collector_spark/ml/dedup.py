@@ -93,6 +93,22 @@ def _norm_hash() -> Column:
     return F.md5(_norm_text())
 
 
+# Word tokens: the `\s+` split of trimmed text, lowered for every
+# bag-of-words statistic (vocabularies, pair counts, LM scores, BPE word
+# tables) and unlowered where only the token count or the original words
+# are read (length buckets, packing, chunking). The oracles spell it
+# regexp_split_to_array(trim([lower(]text[)]), '\s+').
+
+
+def _tokens(col: str = "text", lower: bool = True) -> Column:
+    c = F.col(col)
+    return F.split(F.trim(F.lower(c) if lower else c), r"\s+")
+
+
+def _n_tokens() -> Column:
+    return F.size(_tokens(lower=False)).cast("long")
+
+
 def _exact_canonicals(docs: DataFrame) -> DataFrame:
     """`docs` filtered to each exact-duplicate group's canonical member
     (min doc_id per content hash) — the E1 keep set. All original columns
@@ -2149,9 +2165,7 @@ CMS_TOP_N = 20
 
 
 def cms_heavy_hitters(spark: SparkSession) -> DataFrame:
-    words = spark.table("documents").select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
-    )
+    words = spark.table("documents").select(F.explode(_tokens()).alias("w"))
     rows = []
     for d in range(CMS_D):
         rows.append(
@@ -2171,9 +2185,7 @@ def cms_report_from_sketch(spark: SparkSession, sketch: DataFrame) -> DataFrame:
     """Point-estimate report over a (d, col, cnt) counter relation —
     shared by the batch operator and the streaming twin (counts are
     additive folds)."""
-    words = spark.table("documents").select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
-    )
+    words = spark.table("documents").select(F.explode(_tokens()).alias("w"))
     exact = words.groupBy("w").agg(F.count("*").cast("long").alias("true_count"))
     top = exact.orderBy(F.desc("true_count"), F.asc("w")).limit(CMS_TOP_N)
     probes = top.select(
@@ -2946,9 +2958,9 @@ def incremental_dedup_recall(
     from collector_spark.ml.vectors import RECALL_PROBE_N
 
     docs = spark.table("documents") if docs is None else docs
-    sh = _shingle_hashes(
-        _side_canonicals(docs).localCheckpoint(eager=False)
-    ).localCheckpoint(eager=False)
+    # _shingle_hashes reads the canonical union once, so only the shingle
+    # relation (five consumers below) is materialized
+    sh = _shingle_hashes(_side_canonicals(docs)).localCheckpoint(eager=False)
 
     probe_ids = (
         sh.filter(_inc_is_incoming())

@@ -370,10 +370,12 @@ CAPTION_ALIGN_MIN = 0.5
 
 
 def caption_align(spark: SparkSession) -> DataFrame:
+    from collector_spark.ml.dedup import _tokens
+
     media = spark.table("media_rows").select("doc_id", "media_type", "caption")
     docs = spark.table("documents").select("doc_id", "text")
-    cap_toks = F.array_distinct(F.split(F.trim(F.lower(F.col("caption"))), r"\s+"))
-    doc_toks = F.array_distinct(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
+    cap_toks = F.array_distinct(_tokens("caption"))
+    doc_toks = F.array_distinct(_tokens())
     joined = media.join(docs, "doc_id").select(
         "doc_id",
         "media_type",

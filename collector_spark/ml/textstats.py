@@ -18,9 +18,11 @@ from pyspark.sql import functions as F
 from collector_spark.ml.dedup import (
     _SQL_SHINGLES,
     P31,
+    _n_tokens,
     _norm_hash,
     _norm_text,
     _shingle_hashes,
+    _tokens,
     _words,
 )
 
@@ -201,7 +203,7 @@ FROM m ORDER BY doc_id
 
 def token_counts(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
-    ws_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    ws_tokens = _n_tokens()
     re_tokens = F.size(F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0)).cast("long")
     est_bpe = (F.length(F.col("text")).cast("double") / 4.0).alias("est_bpe_tokens")
     return docs.select(
@@ -682,13 +684,13 @@ ORDER BY p.source_a, p.source_b
 #   P(t|l) = (c(l,t) + 1) / (T_l + V)        (Laplace)
 #
 # Engine exactness: every log argument is an exact INTEGER (c+1, T_l + V,
-# doc counts), each log is quantized ONCE onto the 2^20 grid
-# (floor(ln(k) * 2^20) — the ml_perplexity_buckets / Kneser-Ney _NLL_SCALE
-# discipline), and all per-document accumulation is int64 arithmetic, so
-# the distributed sums are aggregation-order-exact and the argmax has no
-# float boundary. Unseen (t, l) pairs contribute log(0 + 1) = 0 to the
-# matched sum, so the model join can stay INNER — the - N_d * log(T_l + V)
-# normalizer and the prior are applied on the dense (doc x lang) grid.
+# doc counts), each log is quantized ONCE onto the shared 2^20 grid
+# (floor(ln(k) * 2^20), NB_SCALE below), and all per-document
+# accumulation is int64 arithmetic, so the distributed sums are
+# aggregation-order-exact and the argmax has no float boundary. Unseen
+# (t, l) pairs contribute log(0 + 1) = 0 to the matched sum, so the model
+# join can stay INNER — the - N_d * log(T_l + V) normalizer and the prior
+# are applied on the dense (doc x lang) grid.
 #
 # Scale: model = one groupBy(lang, tok) (vocab x L bounded); the tf-model
 # join shuffles on tok once (AQE broadcasts the model at small vocab);
@@ -697,7 +699,17 @@ ORDER BY p.source_a, p.source_b
 # doc-keyed aggregate — no window, ties break to the smaller lang name.
 # ---------------------------------------------------------------------------
 
+# The one 2^20 quantization grid of every exact-integer-sum statistic:
+# the quantized logs here and in curation's classifier, entropy and
+# sampling keys, the LM per-doc NLL means, DSIR log weights, Zipf fits
+# and the one-nat quality-margin bins. Values floored onto it are int64,
+# so their sums are exact under any reduce order and partitioning.
 NB_SCALE = 1 << 20
+
+
+def _qgrid(x: Column) -> Column:
+    """floor(x * 2^20) as int64 — a double onto the shared grid."""
+    return F.floor(x * F.lit(NB_SCALE)).cast("long")
 
 
 def _qlog(col: Column) -> Column:
@@ -721,7 +733,12 @@ def _qlog(col: Column) -> Column:
     band and asserts the two engines' grids are identical in this
     container.
     """
-    return F.floor(F.log(col.cast("double")) * F.lit(NB_SCALE)).cast("long")
+    return _qgrid(F.log(col.cast("double")))
+
+
+def _sql_qlog(arg) -> str:
+    """_qlog's oracle (DuckDB) spelling over a SQL expression."""
+    return f"CAST(floor(ln(CAST({arg} AS DOUBLE)) * {NB_SCALE}) AS BIGINT)"
 
 
 # the per-document marker row folded alongside token rows: '\x01doc'
@@ -735,10 +752,7 @@ NB_DOC_MARKER = "\x01doc"
 def _nb_token_rows(docs: DataFrame) -> DataFrame:
     """(lang, tok) training rows: every token of every doc + one marker
     row per doc. Row-local projection + union — streamable."""
-    toks = docs.select(
-        "lang",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
-    )
+    toks = docs.select("lang", F.explode(_tokens()).alias("tok"))
     markers = docs.select("lang", F.lit(NB_DOC_MARKER).alias("tok"))
     return toks.unionByName(markers)
 
@@ -757,10 +771,7 @@ def nb_langid_from_counts(
     derivation of `counts` carries renamed columns (memory-sink self-join
     resolution — the ST23 discipline)."""
     tf = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
-        )
+        docs.select("doc_id", F.explode(_tokens()).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").cast("long").alias("tf"))
     )
@@ -857,7 +868,7 @@ priors AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS d FROM documents GROUP BY la
 ndocs AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents),
 smatch AS (
   SELECT f.doc_id, m.lang AS cand,
-    CAST(SUM(f.tf * CAST(floor(ln(CAST(m.c + 1 AS DOUBLE)) * {NB_SCALE}) AS BIGINT))
+    CAST(SUM(f.tf * {_sql_qlog('m.c + 1')})
       AS BIGINT) AS s_match
   FROM tf f JOIN model m ON m.tok = f.tok
   GROUP BY f.doc_id, m.lang
@@ -865,9 +876,9 @@ smatch AS (
 doc_n AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tok FROM tf GROUP BY doc_id),
 langs AS (
   SELECT lt.lang AS cand,
-    CAST(floor(ln(CAST(lt.t + vo.v AS DOUBLE)) * {NB_SCALE}) AS BIGINT) AS q_denom,
-    CAST(floor(ln(CAST(p.d AS DOUBLE)) * {NB_SCALE}) AS BIGINT)
-      - CAST(floor(ln(CAST(nd.nd AS DOUBLE)) * {NB_SCALE}) AS BIGINT) AS q_prior
+    {_sql_qlog('lt.t + vo.v')} AS q_denom,
+    {_sql_qlog('p.d')}
+      - {_sql_qlog('nd.nd')} AS q_prior
   FROM lang_tot lt JOIN priors p ON p.lang = lt.lang
   CROSS JOIN vocab vo CROSS JOIN ndocs nd
 ),

@@ -32,7 +32,13 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from collector_spark.ml.dedup import LSH_BUCKET_CAP, _bucket_pairs, _norm_hash
+from collector_spark.ml.dedup import (
+    LSH_BUCKET_CAP,
+    _bucket_pairs,
+    _n_tokens,
+    _norm_hash,
+    _tokens,
+)
 from collector_spark.streaming.replay import (
     run_to_completion,
     stage_replay,
@@ -201,33 +207,19 @@ def stream_dsir_weights(spark: SparkSession, n_arrival_batches: int = 8) -> Data
     the memory sink for an update-mode table feeding the sampler.
     """
     from collector_spark.ml.curation import (
-        _NLL_SCALE,
         _dsir_bigram_buckets,
         _dsir_ratio_table,
+        dsir_from_ratio,
     )
 
     # STATIC side: ratio table trained in batch over the full corpus
     ratio = _dsir_ratio_table(
         _dsir_bigram_buckets(spark.table("documents"))
     )
-    lq = F.floor(F.log(F.col("ratio")) * _NLL_SCALE).cast("long")
 
     def scored(raw: DataFrame) -> DataFrame:
-        return (
-            _dsir_bigram_buckets(raw)
-            .join(F.broadcast(ratio), "b")  # stream-static join
-            .select("doc_id", lq.alias("lq"))
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").cast("long").alias("n_bigrams"),
-                F.sum("lq").alias("sum_q"),
-            )
-            .select(
-                "doc_id",
-                "n_bigrams",
-                (F.col("sum_q").cast("double") / _NLL_SCALE).alias("log_weight"),
-            )
-        )
+        # stream-static join inside the shared stage
+        return dsir_from_ratio(_dsir_bigram_buckets(raw), ratio)
 
     return _doc_fold(spark, n_arrival_batches, scored).orderBy("doc_id")
 
@@ -661,19 +653,11 @@ def stream_incremental_dedup(
 
 
 def stream_zipf_fit(spark: SparkSession, n_arrival_batches: int = 6) -> DataFrame:
-    from collector_spark.ml.curation import zipf_fit_from_counts
+    from collector_spark.ml.curation import _source_word_counts, zipf_fit_from_counts
 
-    def counts(raw: DataFrame) -> DataFrame:
-        return (
-            raw.select(
-                "source",
-                F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-            )
-            .groupBy("source", "w")
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-
-    return zipf_fit_from_counts(_doc_fold(spark, n_arrival_batches, counts))
+    return zipf_fit_from_counts(
+        _doc_fold(spark, n_arrival_batches, _source_word_counts)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -794,9 +778,7 @@ def stream_cms_heavy_hitters(
     )
 
     def sketch(raw: DataFrame) -> DataFrame:
-        words = raw.select(
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
-        )
+        words = raw.select(F.explode(_tokens()).alias("w"))
         pos = words.select(F.explode(positions).alias("p")).select("p.d", "p.col")
         return pos.groupBy("d", "col").agg(F.count("*").cast("long").alias("cnt"))
 
@@ -973,7 +955,7 @@ def stream_sequence_packing(
             "doc_id",
             "source",
             F.floor(F.col("doc_id") / PACK_SHARD_DOCS).cast("long").alias("shard"),
-            F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
+            _n_tokens().alias("n_tokens"),
         )
         return base.groupBy("source", "shard").applyInPandasWithState(
             _pack_state_fn,

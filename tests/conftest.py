@@ -56,11 +56,11 @@ def duck():
 SLOW_TESTS = {
     "test_ann_ivfpq.py::test_ivfpq_candidates_subset_of_probed_lists",
     "test_curation_plans.py::test_truth_joins_are_capped_in_plan",
+    "test_curation_semantics.py::test_bpe_round_consistency",
     "test_dedup_properties.py::test_keep_list_invariants",
     "test_diff_properties.py::test_diff_kernel_matches_model",
     "test_fingerprint_properties.py::test_normalize_is_idempotent",
     "test_plan_budgets.py::test_plan_budget[st_log_pipeline_full]",
-    "test_r10_additions.py::test_bpe_round_consistency",
     "test_r10_additions.py::test_cluster_keep_best_invariants",
     "test_r10_additions.py::test_export_corpus_matches_manifest",
     "test_r10_additions.py::test_stream_sequence_packing_batch_equal",

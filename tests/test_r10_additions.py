@@ -1,75 +1,8 @@
-"""Round-10 additions: BPE trainer round-consistency, line-dedup
-intra/cross attribution, Gopher line-rule fixture coverage, IVF tuning
-curve invariants, and the driver-window rotation pin."""
+"""Round-10 additions: line-dedup intra/cross attribution, Gopher
+line-rule fixture coverage, IVF tuning curve invariants, and the
+driver-window rotation pin."""
 
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------------
-# E89 — iterative BPE trainer
-# ---------------------------------------------------------------------------
-
-
-def test_bpe_round_consistency(prepared_spark):
-    """The verdict-mandated pin: round i+1's pair counts equal a
-    from-scratch recount after applying merges 1..i. The from-scratch side
-    replays the COLLECTED merge table as literal replacements onto the
-    initial segmentation — independent of the lazy argmax chain the
-    trainer embeds in its plan."""
-    from collector_spark.ml.curation import (
-        BPE_TRAIN_ROUNDS,
-        _bpe_apply,
-        _bpe_best,
-        _bpe_pair_counts,
-        _bpe_vocab_seg,
-        bpe_train,
-    )
-
-    spark = prepared_spark
-    merges = bpe_train(spark, BPE_TRAIN_ROUNDS).collect()
-    assert len(merges) == BPE_TRAIN_ROUNDS
-    assert [m.merge_rank for m in merges] == list(range(1, BPE_TRAIN_ROUNDS + 1))
-
-    # chained (plan-embedded argmax) segmentation per round
-    chained = _bpe_vocab_seg(spark)
-    for i, m in enumerate(merges, start=1):
-        chained = _bpe_apply(chained, _bpe_best(_bpe_pair_counts(chained)))
-
-        # from-scratch: replay collected merges 1..i as literals
-        scratch = _bpe_vocab_seg(spark)
-        seg_col = F.col("seg")
-        for mm in merges[:i]:
-            pat = f" {mm.sym_a} {mm.sym_b} "
-            rep = f" {mm.sym_a}{mm.sym_b} "
-            seg_col = F.replace(
-                F.replace(seg_col, F.lit(pat), F.lit(rep)), F.lit(pat), F.lit(rep)
-            )
-        scratch = scratch.select("wc", seg_col.alias("seg"))
-
-        a = _bpe_pair_counts(chained)
-        b = _bpe_pair_counts(scratch)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, (
-            f"round {i + 1} counts diverge from from-scratch recount"
-        )
-
-
-def test_bpe_apply_is_greedy_leftmost(prepared_spark):
-    """Double-replace equals exact greedy BPE on the overlap edge cases a
-    single leftmost pass gets wrong: 'a a a' -> 'aa a' (not 'a aa'),
-    'a b a b' -> 'ab ab' (single pass would leave the second pair)."""
-    from collector_spark.ml.curation import _bpe_apply
-
-    spark = prepared_spark
-    segged = spark.createDataFrame(
-        [(1, " a a a "), (1, " a b a b "), (1, " x a b y ")], ["wc", "seg"]
-    )
-    best_aa = spark.createDataFrame([("a", "a", 1)], ["sym_a", "sym_b", "pair_count"])
-    got = {r.seg for r in _bpe_apply(segged, best_aa).collect()}
-    assert " aa a " in got and " a b a b " in got
-
-    best_ab = spark.createDataFrame([("a", "b", 1)], ["sym_a", "sym_b", "pair_count"])
-    got = {r.seg for r in _bpe_apply(segged, best_ab).collect()}
-    assert " ab ab " in got and " x ab y " in got
 
 
 # ---------------------------------------------------------------------------
@@ -178,85 +111,6 @@ def test_driver_window_is_registry_front():
     assert len(DRIVER_WINDOW) == 50
     assert len(set(DRIVER_WINDOW)) == 50
     assert list(registry.REGISTRY)[:50] == DRIVER_WINDOW
-
-
-# ---------------------------------------------------------------------------
-# E91 — BPE encoder (session 2)
-# ---------------------------------------------------------------------------
-
-
-def test_bpe_encode_bounds_and_monotone_compression(prepared_spark):
-    """Token counts sit between the word count (every word >= 1 token) and
-    the word-character count (rounds=0 tokenizes to characters, each merge
-    only ever joins two adjacent tokens), per document; total tokens are
-    non-increasing in rounds and strictly drop by round 4 somewhere."""
-    from collector_spark.ml.curation import bpe_encode
-
-    spark = prepared_spark
-    r0 = bpe_encode(spark, rounds=0).select(
-        "doc_id", "n_words", "n_tokens", "n_word_chars"
-    )
-    bad = r0.filter(F.col("n_tokens") != F.col("n_word_chars")).count()
-    assert bad == 0, "rounds=0 must be the character baseline"
-
-    prev_total = None
-    for r in (1, 4):
-        enc = bpe_encode(spark, rounds=r)
-        assert (
-            enc.filter(
-                (F.col("n_tokens") < F.col("n_words"))
-                | (F.col("n_tokens") > F.col("n_word_chars"))
-            ).count()
-            == 0
-        )
-        total = enc.agg(F.sum("n_tokens")).first()[0]
-        if prev_total is not None:
-            assert total <= prev_total
-        prev_total = total
-    base_total = r0.agg(F.sum("n_tokens")).first()[0]
-    assert prev_total < base_total, "4 merges must compress the corpus"
-
-
-def test_bpe_encode_applies_the_trainer_merges(prepared_spark):
-    """The encoder's per-doc token counts equal a from-scratch replay of
-    ml_bpe_train's COLLECTED merge table — training and application share
-    one merge sequence, independent of the lazy argmax chain."""
-    from collector_spark.ml.curation import (
-        _bpe_vocab_seg,
-        bpe_encode,
-        bpe_train,
-    )
-
-    spark = prepared_spark
-    rounds = 3
-    merges = bpe_train(spark, rounds).collect()
-    seg_col = F.col("seg")
-    for mm in merges:
-        pat = f" {mm.sym_a} {mm.sym_b} "
-        rep = f" {mm.sym_a}{mm.sym_b} "
-        seg_col = F.replace(
-            F.replace(seg_col, F.lit(pat), F.lit(rep)), F.lit(pat), F.lit(rep)
-        )
-    tokw = _bpe_vocab_seg(spark, keep_word=True).select(
-        "w",
-        F.size(F.split(F.trim(seg_col), " ")).cast("long").alias("w_tokens"),
-    )
-    words = spark.table("documents").select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    scratch = (
-        words.join(tokw, "w", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.coalesce(F.col("w_tokens"), F.lit(1)))
-            .cast("long")
-            .alias("n_tokens")
-        )
-    )
-    enc = bpe_encode(spark, rounds).select("doc_id", "n_tokens")
-    assert enc.exceptAll(scratch).count() == 0
-    assert scratch.exceptAll(enc).count() == 0
 
 
 # ---------------------------------------------------------------------------
